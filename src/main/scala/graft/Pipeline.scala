@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{IhcAttribution, Journeys, Reporting}
 import graft.sources.{Layout, Manifest, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline runner with persisted, idempotent, CRASH-CONSISTENT
@@ -68,6 +68,28 @@ import org.apache.spark.sql.functions._
   * Scale notes: the manifest is driver-side metadata (bytes per run, never
   * row data). Everything else is the same shuffle-minimal plans as the
   * query surface.
+  *
+  * Job budget: at daily-delta size a run's latency is set by per-job
+  * scheduling, not by compute, so a delta run launches at most 18 Spark
+  * jobs and a no-op re-run at most 4 (asserted in PipelineSpec). On the
+  * default layout a delta run takes 17:
+  *   - 1 footer read of `events`, the run's only schema inference (state
+  *     dirs are read with their known DDLs);
+  *   - 2 for the missing-conversion checkpoint: the broadcast of the
+  *     processed ids and the checkpoint, which also observes the candidate
+  *     and missing counts;
+  *   - 5 for the staged delta: the broadcasts of the delta's users and
+  *     conversion ids, the per-user assignment shuffle, the per-conversion
+  *     IHC shuffle and the write, which observes the row count that enters
+  *     the committed total;
+  *   - 1 for the processed-conversions write, from the checkpoint;
+  *   - 6 for the merged report base: three broadcasts and two shuffles for
+  *     the delta's joins, its aggregate and the outer merge with the
+  *     committed base, and the write;
+  *   - 2 for the report: one sorted partition written as parquet and as
+  *     the CSV artifact.
+  * A no-op re-run is the events footer read and the checkpoint's two jobs.
+  * An OCC retry adds the jobs of its re-merge.
   */
 object Pipeline {
 
@@ -98,26 +120,35 @@ object Pipeline {
   private def dirsOf(live: Seq[String], stateDir: String, table: String): Seq[String] =
     live.filter(_.startsWith(table + "/")).map(rel => s"$stateDir/$rel")
 
+  /** State dirs are read with the schema the pipeline wrote them with, so
+    * no read runs a footer-inference job; no dirs gives an empty frame of
+    * that schema. */
   private def readDirsOrEmpty(
-      spark: SparkSession, dirs: Seq[String], ddl: String): DataFrame =
-    if (dirs.nonEmpty) spark.read.parquet(dirs: _*)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      spark: SparkSession, dirs: Seq[String], ddl: String): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    if (dirs.nonEmpty) spark.read.schema(schema).parquet(dirs: _*)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
 
   private def readLiveOrEmpty(
       spark: SparkSession, stateDir: String, table: String, ddl: String): DataFrame =
     readDirsOrEmpty(spark, liveDirs(spark, stateDir, table), ddl)
 
+  // the schemas of the state tables, as the pipeline writes them
+  private val AttributionDdl =
+    "conv_id BIGINT, session_id BIGINT, channel_name STRING, ihc DOUBLE"
+  private val ProcessedDdl = "conv_id BIGINT"
   private val ReportBaseDdl =
     "channel_name STRING, date DATE, cost DECIMAL(38,6), ihc DECIMAL(38,6), " +
       "ihc_revenue DECIMAL(38,6)"
+  private val ReportDdl =
+    "channel_name STRING, date DATE, cost DOUBLE, ihc DOUBLE, " +
+      "ihc_revenue DOUBLE, CPO DOUBLE, ROAS DOUBLE"
 
   /** The persisted attribution table (union of all committed run deltas),
     * or an empty frame with the right schema before the first publish. */
   def persistedAttribution(spark: SparkSession, stateDir: String): DataFrame =
-    readLiveOrEmpty(spark, stateDir, "attribution",
-      "conv_id BIGINT, session_id BIGINT, channel_name STRING, ihc DOUBLE")
+    readLiveOrEmpty(spark, stateDir, "attribution", AttributionDdl)
 
   /** The processed-conversions manifest. The reference re-derives "already
     * attributed" from the attribution table itself (`db_utils.py:260-302`),
@@ -126,13 +157,11 @@ object Pipeline {
     * including those that produced zero journey rows, or the daily delta
     * never shrinks to zero. */
   def processedConversions(spark: SparkSession, stateDir: String): DataFrame =
-    readLiveOrEmpty(spark, stateDir, "processed_conversions", "conv_id BIGINT")
+    readLiveOrEmpty(spark, stateDir, "processed_conversions", ProcessedDdl)
 
   /** The committed channel report (CPO/ROAS) of the latest successful run. */
   def report(spark: SparkSession, stateDir: String): DataFrame =
-    readLiveOrEmpty(spark, stateDir, "report",
-      "channel_name STRING, date DATE, cost DOUBLE, ihc DOUBLE, " +
-        "ihc_revenue DOUBLE, CPO DOUBLE, ROAS DOUBLE")
+    readLiveOrEmpty(spark, stateDir, "report", ReportDdl)
 
   /** Directory of the committed single-file CSV artifact (the reference's
     * `channel_reporting.csv`), if a run has published one. */
@@ -189,30 +218,52 @@ object Pipeline {
     spark.catalog.tableExists(bucketedName(stateDir, "sessions")) &&
       spark.catalog.tableExists(bucketedName(stateDir, "conversions"))
 
+  /** The extract a run reads. The SAME extract feeds candidate selection,
+    * assignment, and the report — if the bucketed layout exists, all three
+    * use it (mixing a stale bucketed extract with a fresh raw one could
+    * mark conversions processed without attributing them). Events are read
+    * once: conversions, sessions and costs are projections of that one
+    * read (the bucketed layout needs it for the costs only).
+    *
+    * `[startDate, endDate]` mirrors the reference's conversion extract
+    * window (db_utils.py:67-103); the filters keep the bucketed scan's
+    * bucketing AND prune its date partitions at the file level. Sessions
+    * intentionally stay UNwindowed: journeys need the full pre-conversion
+    * touch history, and the reference's session-window truncation silently
+    * drops pre-window touches from journeys — a shape A3's semantics
+    * reject. */
+  private final class Extract(
+      spark: SparkSession, sfDir: String, stateDir: String,
+      startDate: Option[String], endDate: Option[String]) {
+    private val bucketed = hasBucketed(spark, stateDir)
+    private lazy val events = Tables.events(spark, sfDir)
+    val allConversions: DataFrame =
+      if (bucketed) spark.table(bucketedName(stateDir, "conversions"))
+      else Tables.deriveConversions(events)
+    val conversions: DataFrame = Seq(
+      startDate.map(d => col("conv_date") >= lit(d).cast("date")),
+      endDate.map(d => col("conv_date") <= lit(d).cast("date"))
+    ).flatten.foldLeft(allConversions)(_ filter _)
+    val sessions: DataFrame =
+      if (bucketed) spark.table(bucketedName(stateDir, "sessions"))
+      else Tables.deriveSessions(events)
+    def costs: DataFrame = Tables.deriveSessionCosts(events)
+
+    /** Flagged journeys of the windowed conversions, optionally restricted
+      * to `onlyUsers`. */
+    def assigned(onlyUsers: Option[DataFrame]): DataFrame = Journeys.flagConversion(
+      if (bucketed) Journeys.assignBucketed(sessions, conversions, onlyUsers)
+      else Journeys.assign(sessions, conversions, onlyUsers))
+  }
+
   /** The flagged journey assignment exactly as [[run]] computes it —
     * bucketed (exchange-free assign) when [[prepareBucketed]] has run,
     * standard otherwise. Exposed so callers/specs can audit the plan. */
   def assignedJourneys(
       spark: SparkSession, sfDir: String, stateDir: String,
       endDate: Option[String],
-      startDate: Option[String] = None): DataFrame = {
-    val bucketed = hasBucketed(spark, stateDir)
-    val allConversions =
-      if (bucketed) spark.table(bucketedName(stateDir, "conversions"))
-      else Tables.conversions(spark, sfDir)
-    val conversions = Seq( // the filters keep the scan's bucketing AND, on
-      // the partitioned layout, prune date partitions at the file level
-      startDate.map(d => col("conv_date") >= lit(d).cast("date")),
-      endDate.map(d => col("conv_date") <= lit(d).cast("date"))
-    ).flatten.foldLeft(allConversions)(_ filter _)
-    val sessions =
-      if (bucketed) spark.table(bucketedName(stateDir, "sessions"))
-      else Tables.sessions(spark, sfDir)
-    val assigned =
-      if (bucketed) Journeys.assignBucketed(sessions, conversions)
-      else Journeys.assign(sessions, conversions)
-    Journeys.flagConversion(assigned)
-  }
+      startDate: Option[String] = None): DataFrame =
+    new Extract(spark, sfDir, stateDir, startDate, endDate).assigned(None)
 
   /** One incremental run: extract (optionally bounded by `endDate`, the
     * reference's date-range re-run; from the bucketed layout when
@@ -251,43 +302,38 @@ object Pipeline {
     // leftovers become vacuumable.
     val lease = Manifest.acquireLease(spark, stateDir,
       s"run_${java.util.UUID.randomUUID().toString.take(12)}")
-    try runLeased(spark, sfDir, stateDir, endDate, crashPoint, staleGraceMs,
+    try runLeased(spark, sfDir, stateDir, lease, endDate, crashPoint, staleGraceMs,
       beforePublish, startDate)
     finally Manifest.releaseLease(spark, stateDir, lease)
+  }
+
+  /** `action` run on `df` with the frame's row count observed by the same
+    * Spark job, so the count costs no job of its own. The observation sits
+    * at the top of the plan, in the action's result stage, whose
+    * accumulator updates Spark applies once per partition even when tasks
+    * are retried: the count is exact. */
+  private def counted[T](df: DataFrame)(action: DataFrame => T): (T, Long) = {
+    val rows = Observation()
+    val out = action(df.observe(rows, count(lit(1)).as("rows")))
+    (out, rows.get("rows").asInstanceOf[Long])
   }
 
   private def runLeased(
       spark: SparkSession,
       sfDir: String,
       stateDir: String,
+      lease: Manifest.Lease,
       endDate: Option[String],
       crashPoint: Option[String],
       staleGraceMs: Long,
       beforePublish: () => Unit,
-      startDate: Option[String] = None): RunSummary = {
+      startDate: Option[String]): RunSummary = {
     def failpoint(p: String): Unit =
       if (crashPoint.contains(p)) throw InjectedCrash(p)
+    def staged(table: String, tag: String, ddl: String): DataFrame =
+      readDirsOrEmpty(spark, Seq(s"$stateDir/$table/$tag"), ddl)
 
-    // the SAME extract feeds candidate selection, assignment, and the
-    // report — if the bucketed layout exists, all three use it (mixing a
-    // stale bucketed extract with a fresh raw one could mark conversions
-    // processed without attributing them)
-    val bucketed = hasBucketed(spark, stateDir)
-    val allConversions =
-      if (bucketed) spark.table(bucketedName(stateDir, "conversions"))
-      else Tables.conversions(spark, sfDir)
-    // [startDate, endDate] mirrors the reference's conversion extract
-    // window (db_utils.py:67-103). Sessions intentionally stay UNwindowed:
-    // journeys need the full pre-conversion touch history, and the
-    // reference's session-window truncation silently drops pre-window
-    // touches from journeys — a shape A3's semantics reject.
-    val conversions = Seq(
-      startDate.map(d => col("conv_date") >= lit(d).cast("date")),
-      endDate.map(d => col("conv_date") <= lit(d).cast("date"))
-    ).flatten.foldLeft(allConversions)(_ filter _)
-    val sessions =
-      if (bucketed) spark.table(bucketedName(stateDir, "sessions"))
-      else Tables.sessions(spark, sfDir)
+    val extract = new Extract(spark, sfDir, stateDir, startDate, endDate)
 
     // crash recovery: staged dirs no manifest references are leftovers of
     // an aborted run — readers never saw them; delete and re-stage.
@@ -296,15 +342,18 @@ object Pipeline {
     // committed total from manifest METADATA — not a scan of history
     val previousTotal = snap.meta.get(RowsKey).map(_.toLong).getOrElse(0L)
 
-    val candidateConversions = conversions.count()
-    val missing = Reporting
-      .missingConversions(conversions,
-        readDirsOrEmpty(spark,
-          dirsOf(snap.live, stateDir, "processed_conversions"), "conv_id BIGINT"))
-      .select("conv_id", "user_id")
-      .localCheckpoint() // one evaluation feeds the count, the semi-joins,
-                         // and the staged write
-    val newConversions = missing.count()
+    // The checkpoint selects the missing conversions and observes both their
+    // count and the candidates': no count() job. Its one evaluation feeds
+    // the semi-joins and the staged write. (The candidate count is observed
+    // below the anti-join, where the plan may put it in a shuffle stage: it
+    // is informational and never enters the committed total.)
+    val candidates = Observation()
+    val (missing, newConversions) = counted(Reporting
+      .missingConversions(extract.conversions.observe(candidates, count(lit(1)).as("rows")),
+        readDirsOrEmpty(spark, dirsOf(snap.live, stateDir, "processed_conversions"),
+          ProcessedDdl))
+      .select("conv_id", "user_id"))(_.localCheckpoint())
+    val candidateConversions = candidates.get("rows").asInstanceOf[Long]
     if (newConversions == 0L)
       // idempotent no-op: publish NOTHING — re-runs must not grow the
       // live-dir list (and the committed report already covers this state)
@@ -316,11 +365,9 @@ object Pipeline {
     // BOTH inputs to those users (keeping ALL their conversions: earlier,
     // already-attributed ones must still claim their sessions) and compute
     // journeys for delta users only. The broadcast semi-join preserves the
-    // bucketed layout's shuffle-free plan (asserted in PipelineSpec).
-    val missingUsers = missing.select("user_id").distinct()
-    val assignedDelta = Journeys.flagConversion(
-      if (bucketed) Journeys.assignBucketed(sessions, conversions, Some(missingUsers))
-      else Journeys.assign(sessions, conversions, Some(missingUsers)))
+    // bucketed layout's shuffle-free plan (asserted in PipelineSpec); a
+    // semi-join ignores duplicate keys, so the user list needs no distinct.
+    val assignedDelta = extract.assigned(Some(missing.select("user_id")))
 
     def freshTag(v: Long) = s"r${v}_${java.util.UUID.randomUUID().toString.take(8)}"
     var tag = freshTag(snap.alloc + 1)
@@ -330,15 +377,15 @@ object Pipeline {
       .select("conv_id", "session_id", "channel_name", "ihc")
 
     // ---- stage (fresh uniquely-tagged dirs; nothing live is touched) ----
-    delta.write.parquet(s"$stateDir/attribution/$tag")
+    // the write counts its own rows for the committed total
+    var newRows = counted(delta)(_.write.parquet(s"$stateDir/attribution/$tag"))._2
     failpoint("after_attribution_stage")
     missing.select("conv_id").write.parquet(s"$stateDir/processed_conversions/$tag")
 
-    // counts + report from what was actually staged — no double evaluation
-    // of the delta DAG, and NO read of any prior run's attribution data
-    var stagedDelta = spark.read.parquet(s"$stateDir/attribution/$tag")
-    var stagedMissing = spark.read.parquet(s"$stateDir/processed_conversions/$tag")
-    var newRows = stagedDelta.count()
+    // the report reads what was actually staged — no double evaluation of
+    // the delta DAG, and NO read of any prior run's attribution data
+    var stagedDelta = staged("attribution", tag, AttributionDdl)
+    var stagedMissing = staged("processed_conversions", tag, ProcessedDdl)
     var attributedConvs = newConversions
 
     // ---- O(delta) report ----
@@ -347,18 +394,19 @@ object Pipeline {
     // bit-identical to re-aggregating all history (exact decimal sums).
     // The report artifacts get their own tag so an OCC retry can re-merge
     // against a race winner's base without re-staging the delta.
-    val costs = Tables.sessionCosts(spark, sfDir)
     var reportTag: String = null
     def stageReport(v: Long, committedBase: DataFrame): Unit = {
       reportTag = freshTag(v)
-      val deltaBase =
-        Reporting.channelReportingBase(stagedDelta, sessions, costs, allConversions)
+      val deltaBase = Reporting.channelReportingBase(
+        stagedDelta, extract.sessions, extract.costs, extract.allConversions)
       Reporting.mergeReportBase(committedBase, deltaBase)
         .write.parquet(s"$stateDir/report_base/$reportTag")
+      // (channel, date) keys are unique, so one partition sorted by them is
+      // the report in its final order: rendered once as parquet and once as
+      // the CSV artifact, one job each
       val rep = Reporting.withMetrics(
-        Reporting.fromReportBase(
-          spark.read.parquet(s"$stateDir/report_base/$reportTag")))
-        .orderBy("channel_name", "date")
+        Reporting.fromReportBase(staged("report_base", reportTag, ReportBaseDdl)))
+        .coalesce(1).sortWithinPartitions("channel_name", "date")
       rep.write.parquet(s"$stateDir/report/$reportTag")
       Reporting.exportCsv(rep, s"$stateDir/channel_reporting_csv/$reportTag")
     }
@@ -378,6 +426,14 @@ object Pipeline {
     var attempts = 0
     var committedTotal = -1L
     while (committedTotal < 0) {
+      // FENCE before every publish attempt: a run that outlived its lease
+      // may have had its staged dirs vacuumed by a concurrent run's sweep,
+      // and publishing would then name deleted directories. Abort instead;
+      // the next run recomputes the same delta.
+      if (!Manifest.holdsLease(spark, stateDir, lease))
+        throw new java.io.IOException(
+          s"pipeline run lease ${lease.owner} at $stateDir was reaped before " +
+            "publish (its staged dirs may have been vacuumed); aborting without publishing")
       val total = snapNow.meta.get(RowsKey).map(_.toLong).getOrElse(0L) + newRows
       val accumulated = snapNow.live.filter(e =>
         e.startsWith("attribution/") || e.startsWith("processed_conversions/"))
@@ -397,10 +453,8 @@ object Pipeline {
           val winnersProcessed = dirsOf(next.live, stateDir, "processed_conversions")
             .diff(dirsOf(snapNow.live, stateDir, "processed_conversions"))
           if (winnersProcessed.nonEmpty) {
-            val winners = spark.read.parquet(winnersProcessed: _*)
-            val still = stagedMissing
-              .join(winners, Seq("conv_id"), "left_anti").localCheckpoint()
-            val stillN = still.count()
+            val (still, stillN) = counted(Reporting.missingConversions(stagedMissing,
+              readDirsOrEmpty(spark, winnersProcessed, ProcessedDdl)))(_.localCheckpoint())
             if (stillN == 0L)
               // the winner attributed our whole delta: this run is a no-op
               return RunSummary(candidateConversions, 0L, 0L,
@@ -409,12 +463,11 @@ object Pipeline {
               // drop the overlap; the remaining rows are exact (assignment
               // was computed per-user over the full conversion set)
               tag = freshTag(next.alloc + 1)
-              stagedDelta.join(still, Seq("conv_id"), "left_semi")
-                .write.parquet(s"$stateDir/attribution/$tag")
+              newRows = counted(stagedDelta.join(still, Seq("conv_id"), "left_semi"))(
+                _.write.parquet(s"$stateDir/attribution/$tag"))._2
               still.write.parquet(s"$stateDir/processed_conversions/$tag")
-              stagedDelta = spark.read.parquet(s"$stateDir/attribution/$tag")
-              stagedMissing = spark.read.parquet(s"$stateDir/processed_conversions/$tag")
-              newRows = stagedDelta.count()
+              stagedDelta = staged("attribution", tag, AttributionDdl)
+              stagedMissing = staged("processed_conversions", tag, ProcessedDdl)
               attributedConvs = stillN
             }
           }
@@ -458,11 +511,11 @@ object Pipeline {
     val tag = s"c${snap.alloc + 1}_${java.util.UUID.randomUUID().toString.take(8)}"
     if (attDirs.nonEmpty)
       Layout.writeClustered(
-        spark.read.parquet(attDirs.map(d => s"$stateDir/$d"): _*),
+        readDirsOrEmpty(spark, attDirs.map(d => s"$stateDir/$d"), AttributionDdl),
         s"$stateDir/attribution/$tag", Seq("conv_id"), nFiles)
     if (prcDirs.nonEmpty)
       Layout.writeClustered(
-        spark.read.parquet(prcDirs.map(d => s"$stateDir/$d"): _*),
+        readDirsOrEmpty(spark, prcDirs.map(d => s"$stateDir/$d"), ProcessedDdl),
         s"$stateDir/processed_conversions/$tag", Seq("conv_id"), nFiles)
     val inputs = (attDirs ++ prcDirs).toSet
     Manifest.publishMerge(spark, stateDir) { cur =>

@@ -106,11 +106,10 @@ object Reporting {
     * `main.py:332-353`: only conversions NOT already attributed are
     * (re)processed. A left-anti join replaces the driver-side
     * set-difference; at scale this is the difference between an
-    * append-only daily run and recomputing history. */
+    * append-only daily run and recomputing history. An anti-join ignores
+    * duplicate keys, so the existing side needs no `distinct`. */
   def missingConversions(conversions: DataFrame, existingAttribution: DataFrame): DataFrame =
-    conversions.join(
-      existingAttribution.select("conv_id").distinct(),
-      Seq("conv_id"), "left_anti")
+    conversions.join(existingAttribution.select("conv_id"), Seq("conv_id"), "left_anti")
 
   /** First-touch attribution: full credit to the journey's opening
     * session — the classic baseline the IHC model refines. One window

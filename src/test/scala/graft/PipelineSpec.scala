@@ -2,9 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
 import graft.operators.{IhcAttribution, Journeys}
 import graft.sources.{Manifest, Tables}
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 
 /** End-to-end pipeline runner: persisted write-back, idempotent re-runs,
   * incremental delta bit-identical to from-scratch (reference
@@ -23,6 +28,43 @@ class PipelineSpec extends SparkSpec {
       .sortBy(t => (t._1, t._2))
       .toSeq
 
+  /** The Spark jobs `body` launches, in start order. */
+  private def jobsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val started = mutable.ArrayBuffer.empty[SparkListenerJobStart]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.synchronized(started += e)
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusAccess.drain(sc)
+      (out, started.synchronized(started.toSeq))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A job outside any SQL execution: in a pipeline run, only a parquet
+    * read without a schema (footer inference) launches one. */
+  private def isInference(j: SparkListenerJobStart): Boolean =
+    Option(j.properties).forall(_.getProperty("spark.sql.execution.id") == null)
+
+  /** Per-run job budget: a delta run launches at most 18 jobs and a no-op
+    * run at most 4, and the only schema inference is the one events read
+    * (state dirs are read with their known schemas). */
+  private def assertJobBudget(jobs: Seq[SparkListenerJobStart], budget: Int): Unit = {
+    assert(jobs.size <= budget, s"${jobs.size} jobs, budget $budget")
+    val inferred = jobs.filter(isInference)
+    assert(inferred.size === 1, s"${inferred.size} schema-inference jobs")
+    assert(inferred.forall(_.stageInfos.exists(_.details.contains("Tables$.eventsWindowed"))),
+      "a state-dir read inferred its schema:\n" + inferred.flatMap(_.stageInfos.map(_.details)))
+  }
+
+  private def conversionsUpTo(endDate: Option[String]): DataFrame =
+    endDate.foldLeft(Tables.conversions(spark, sfDir))((c, d) =>
+      c.filter(col("conv_date") <= lit(d).cast("date")))
+
   private def fromScratch: DataFrame =
     IhcAttribution.attribute(
       Journeys.flagConversion(
@@ -32,34 +74,58 @@ class PipelineSpec extends SparkSpec {
     val stateDir = Files.createTempDirectory("graft-pipeline").toString
 
     // run 1: only conversions up to Jan 15
-    val s1 = Pipeline.run(spark, sfDir, stateDir, endDate = Some("2024-01-15"))
+    val (s1, jobs1) = jobsOf(Pipeline.run(spark, sfDir, stateDir, endDate = Some("2024-01-15")))
     assert(s1.newConversions > 0)
     assert(s1.newRows > 0)
     assert(s1.totalRows === s1.newRows)
+    assertJobBudget(jobs1, 18)
+    // the observed counts equal direct counts of the same inputs
+    assert(s1.candidateConversions === conversionsUpTo(Some("2024-01-15")).count())
+    assert(s1.newConversions === s1.candidateConversions)
+    assert(s1.totalRows === Pipeline.persistedAttribution(spark, stateDir).count())
 
     // run 2, same window: idempotent no-op — nothing new attributed
-    val s2 = Pipeline.run(spark, sfDir, stateDir, endDate = Some("2024-01-15"))
+    val (s2, jobs2) = jobsOf(Pipeline.run(spark, sfDir, stateDir, endDate = Some("2024-01-15")))
     assert(s2.newConversions === 0)
     assert(s2.newRows === 0)
     assert(s2.totalRows === s1.totalRows)
+    assert(s2.candidateConversions === s1.candidateConversions)
+    assertJobBudget(jobs2, 4)
 
     // run 3, full window: attributes ONLY the delta…
-    val s3 = Pipeline.run(spark, sfDir, stateDir, endDate = None)
+    val (s3, jobs3) = jobsOf(Pipeline.run(spark, sfDir, stateDir, endDate = None))
     assert(s3.newConversions > 0)
     assert(s3.candidateConversions === s1.candidateConversions + s3.newConversions)
+    assertJobBudget(jobs3, 18)
+    assert(s3.candidateConversions === conversionsUpTo(None).count())
+    assert(s3.newConversions + s1.newConversions ===
+      Pipeline.processedConversions(spark, stateDir).count())
 
     // …and the persisted table is bit-identical to a from-scratch run
-    assert(rows(Pipeline.persistedAttribution(spark, stateDir)) === rows(fromScratch))
+    val persisted = Pipeline.persistedAttribution(spark, stateDir)
+    assert(rows(persisted) === rows(fromScratch))
+    assert(s3.totalRows === persisted.count())
+    assert(s3.newRows === s3.totalRows - s1.totalRows)
 
-    // report artifacts exist and cover the full attribution
+    // report artifacts: the report is ONE parquet file sorted by
+    // (channel, date) — one file is one partition, so the collect is the
+    // file's row order — and the CSV holds the same rows in the same order
     val report = Pipeline.report(spark, stateDir)
     assert(report.columns.toSet ===
       Set("channel_name", "date", "cost", "ihc", "ihc_revenue", "CPO", "ROAS"))
-    assert(report.count() > 0)
+    val reportDirs = Manifest.live(spark, stateDir).filter(_.startsWith("report/"))
+    assert(reportDirs.size === 1)
+    assert(sources.Layout.dataFiles(spark, s"$stateDir/${reportDirs.head}") === 1)
+    val rendered = report.collect().toSeq
+    assert(rendered.nonEmpty)
+    val keys = rendered.map(r => (r.getString(0), r.getDate(1).toLocalDate))
+    assert(keys === keys.sorted)
+    assert(keys.distinct.size === keys.size)
     val csvDir = Pipeline.reportCsvDir(spark, stateDir)
     assert(csvDir.isDefined)
-    val csv = spark.read.option("header", "true").csv(csvDir.get)
-    assert(csv.count() === report.count())
+    assert(new java.io.File(csvDir.get).listFiles().count(_.getName.endsWith(".csv")) === 1)
+    val csv = spark.read.option("header", "true").schema(report.schema).csv(csvDir.get)
+    assert(csv.collect().toSeq === rendered)
   }
 
   test("pipeline O(delta): a delta run never reads prior runs' attribution data") {
@@ -116,8 +182,17 @@ class PipelineSpec extends SparkSpec {
     intercept[Pipeline.InjectedCrash] {
       Pipeline.runImpl(spark, sfDir, stateDir, None, Some("before_publish"))
     }
+    // abort 3: the run's vacuum lease is reaped before its publish (as a
+    // concurrent sweep does once a run outlives the lease TTL): the fence
+    // refuses to publish a manifest that may name vacuumed dirs
+    val fenced = intercept[java.io.IOException] {
+      Pipeline.runImpl(spark, sfDir, stateDir, None, None, beforePublish = () =>
+        Manifest.activeLeases(spark, stateDir)
+          .foreach(Manifest.releaseLease(spark, stateDir, _)))
+    }
+    assert(fenced.getMessage.contains("reaped"))
 
-    // (a) reads see ONLY the complete run — both aborted runs are invisible
+    // (a) reads see ONLY the complete run — the aborted runs are invisible
     assert(Manifest.version(spark, stateDir) === committedVersion)
     assert(rows(Pipeline.persistedAttribution(spark, stateDir)) === committedAttr)
     assert(Pipeline.processedConversions(spark, stateDir).count() === committedProcessed)
@@ -160,6 +235,13 @@ class PipelineSpec extends SparkSpec {
     val persisted = Pipeline.persistedAttribution(spark, stateDir)
     assert(persisted.select("conv_id", "session_id").distinct().count() === persisted.count())
     assert(rows(persisted) === rows(fromScratch))
+
+    // the counts the retry re-observed equal direct counts of the state
+    assert(outer.totalRows === persisted.count())
+    assert(inner.newConversions + outer.newConversions ===
+      Pipeline.processedConversions(spark, stateDir).count())
+    assert(inner.candidateConversions === conversionsUpTo(Some("2024-01-15")).count())
+    assert(outer.candidateConversions === conversionsUpTo(None).count())
 
     // the serialized report covers BOTH commits, bit-equal to from-scratch
     val scratchReport = operators.Reporting.withMetrics(
