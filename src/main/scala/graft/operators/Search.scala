@@ -316,7 +316,7 @@ object Search {
     // the bigram-occurrence frame feeds BOTH the model estimation and
     // the scoring join in one action; checkpoint it once instead of
     // running the tokenize + in-doc lead window (an exchange of the full
-    // token stream, the chain's dominant stage — measured in LmProfile)
+    // token stream, the chain's dominant stage by wall-clock profile)
     // twice per action
     val bi = Materialize(docBigrams(documents))
     bi.join(lmModelFrom(bi), Seq("w1", "w2"))

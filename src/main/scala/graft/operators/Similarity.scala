@@ -25,20 +25,50 @@ object Similarity {
       VectorFunctions.normExact(col("embedding")).as("nrm"))
   }
 
+  /** (vec_id, embedding, extra…, nrm): the corpus with its exact norm. */
+  private def normed(embeddings: DataFrame, extra: String*): DataFrame = {
+    graft.functions.GraftFunctions.register(embeddings.sparkSession)
+    embeddings.select(Seq(col("vec_id"), col("embedding")) ++ extra.map(col) :+
+      VectorFunctions.normExact(col("embedding")).as("nrm"): _*)
+  }
+
+  private def queryCols: Seq[Column] =
+    Seq(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"))
+
+  /** The query side (query_id, qe, q_nrm) of a [[normed]]-shaped frame. */
+  private def queriesOf(feat: DataFrame, nQueries: Int): DataFrame =
+    feat.filter(col("vec_id") < nQueries).select(queryCols: _*)
+
+  /** Exact cosine of the query vector against `vec` with norm `nrm`. */
+  private def cosineOf(vec: String, nrm: String): Column =
+    VectorFunctions.dotExact(col("qe"), col(vec)) / (col("q_nrm") * col(nrm))
+
+  /** Each row's nearest cell under the literal quantizer `cents`. */
+  private def cellOf(cents: Array[(Long, Array[Float], Double)]): Column =
+    element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid")
+
+  /** The keyed top-k rank tail every ANN ranking ends in: per `keys`,
+    * `rank` by (`score` DESC, `tiebreak` ASC), ranks ≤ k kept. */
+  private def topK(
+      df: DataFrame, keys: Seq[String], score: String, tiebreak: String, k: Int): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col(score).desc, col(tiebreak))))
+      .filter(col("rank") <= k)
+
+  /** [[topK]] per query into the (query_id, neighbor_id, extra…, score,
+    * rank) contract, ordered by (query_id, rank). */
+  private def neighbors(df: DataFrame, score: String, k: Int, extra: String*): DataFrame =
+    topK(df, Seq("query_id"), score, "neighbor_id", k)
+      .select((Seq("query_id", "neighbor_id") ++ extra ++ Seq(score, "rank")).map(col): _*)
+      .orderBy("query_id", "rank")
+
   /** Exact top-k cosine neighbors for queries `vec_id < nQueries`. */
   def bruteForceTopK(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10): DataFrame = {
     val feat = withFeat(embeddings)
-    val q = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"))
     val c = feat.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("nrm").as("c_nrm"))
-    val rk = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
+    neighbors(broadcast(queriesOf(feat, nQueries)).join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", VectorFunctions.dotExact(col("qe"), col("ce")))
-      .withColumn("cosine", col("dot") / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-      .orderBy("query_id", "rank")
+      .withColumn("cosine", col("dot") / (col("q_nrm") * col("c_nrm"))), "cosine", k)
   }
 
   /** FILTERED exact top-k — vector search under a metadata predicate
@@ -58,24 +88,13 @@ object Similarity {
   def filteredTopK(
       embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
       targetLabel: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"), col("label"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val q = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"))
+    val feat = normed(embeddings, "label")
     val c = feat.filter(col("label") === targetLabel)
       .select(col("vec_id").as("neighbor_id"), col("label"),
         col("embedding").as("ce"), col("nrm").as("c_nrm"))
-    val rk = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
+    neighbors(broadcast(queriesOf(feat, nQueries)).join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", VectorFunctions.dotExact(col("qe"), col("ce")))
-      .withColumn("cosine", col("dot") / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "label", "cosine", "rank")
-      .orderBy("query_id", "rank")
+      .withColumn("cosine", col("dot") / (col("q_nrm") * col("c_nrm"))), "cosine", k, "label")
   }
 
   /** FILTERED IVF search — [[filteredTopK]]'s predicate composed into
@@ -94,33 +113,14 @@ object Similarity {
   def filteredIvfTopK(
       embeddings: DataFrame, nCentroids: Int = 16, nQueries: Int = 8,
       nProbe: Int = 2, k: Int = 10, targetLabel: Int = 0): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cents = initialCentroids(embeddings, nCentroids)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"), col("label"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
+    val feat = normed(embeddings, "label")
     val assigned = feat
       .filter(col("label") === targetLabel) // predicate before the probe join
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
       .select(col("vec_id").as("neighbor_id"), col("label"),
-        col("embedding").as("ce"), col("nrm").as("c_nrm"), col("cell"))
-    val probes = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"),
-        explode(transform(
-          slice(cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-          s => s.getField("cid"))).as("cell"))
-    val rk = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    broadcast(probes)
-      .join(assigned, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        VectorFunctions.dotExact(col("qe"), col("ce")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "label", "cosine", "rank")
-      .orderBy("query_id", "rank")
+        col("embedding").as("ce"), col("nrm").as("c_nrm"), cellOf(cents).as("cell"))
+    neighbors(probeCandidates(feat, cents, nQueries, Left(nProbe), assigned)
+      .withColumn("cosine", cosineOf("ce", "c_nrm")), "cosine", k, "label")
   }
 
   /** The index-selection dashboard: every approximate index's
@@ -167,19 +167,20 @@ object Similarity {
     //    nProbe), so their scan is the same probed-cells join;
     //  - lsh scans its capped multi-probe buckets;
     //  - graph counts every node the beam navigation ever scored, from
-    //    the SAME navigation that serves the top-k (beamEval is built
-    //    once, ranked AND counted).
+    //    the SAME navigation that serves the top-k (navigate runs once,
+    //    ranked AND counted).
     val fullScan = nQueries.toLong * (n - 1)
     val (gq, gEdges, gEntries, gNodes) =
       graphSearchParts(embeddings, 5, 0, 2, nQueries, Some(centsGraph))
-    // beamEval's last hop already returns a materialized frame — no
+    // navigate's last hop already returns a materialized frame — no
     // second checkpoint copy; the three candidate counts (probe join,
     // LSH buckets, graph eval set) run as ONE job with three parallel
     // aggregate subtrees instead of three sequential driver actions.
-    val gEval = beamEval(gq, gEdges, gEntries, gNodes, 4, 3)
+    val gEval = navigate(gq, gEdges, gq.select(col("query_id")).crossJoin(broadcast(gEntries)),
+      gNodes, Seq("query_id"), lit(4), 3)
     def counted(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("c")).select(lit(name).as("f"), col("c"))
-    val candBy = counted("ivf", probeCandidates(embeddings, cents16, nQueries, 2))
+    val candBy = counted("ivf", ivfScan(embeddings, cents16, nQueries, Left(2)))
       .unionByName(counted("lsh", lshCandidates(embeddings, nQueries)))
       .unionByName(counted("graph", gEval))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -254,16 +255,10 @@ object Similarity {
   def adaptiveProbeBudget(
       embeddings: DataFrame, nCentroids: Int = 16, nQueries: Int = 8,
       k: Int = 10, targetPct: Int = 90): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cents = initialCentroids(embeddings, nCentroids)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"), col("label"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val assigned = feat
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
-      .select(col("vec_id").as("neighbor_id"), col("label"),
-        col("embedding").as("ce"), col("nrm").as("c_nrm"), col("cell"))
+    val feat = normed(embeddings, "label")
+    val assigned = feat.select(col("vec_id").as("neighbor_id"), col("label"),
+      col("embedding").as("ce"), col("nrm").as("c_nrm"), cellOf(cents).as("cell"))
     val occ = assigned.groupBy("label", "cell").agg(count(lit(1)).as("o"))
     val nl = assigned.groupBy("label").agg(count(lit(1)).as("n_vectors"))
     // every query's FULL cell ranking p = 1..K (the probe order)
@@ -296,29 +291,20 @@ object Similarity {
           (lit(nQueries.toLong) * col("n_vectors")).cast("double")).as("predicted_mass"))
     // exact filtered truth for EVERY label at once (one per-(query,label)
     // window over the |Q|·n candidate frame)
-    val q = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"))
-    val rkT = Window.partitionBy("query_id", "label")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val truth = broadcast(q).join(assigned, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        VectorFunctions.dotExact(col("qe"), col("ce")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(rkT))
-      .filter(col("rank") <= k)
+    val q = queriesOf(feat, nQueries)
+    val byLabel = Seq("query_id", "label")
+    val truth = topK(broadcast(q).join(assigned, col("query_id") =!= col("neighbor_id"))
+        .withColumn("cosine", cosineOf("ce", "c_nrm")), byLabel, "cosine", "neighbor_id", k)
       .select("query_id", "label", "neighbor_id")
     // the probe path at each label's chosen budget
     val probes = qcells
       .join(broadcast(chosen.select("label", "chosen_nprobe")),
         col("p") <= col("chosen_nprobe"))
       .select("query_id", "label", "cell")
-    val approx = broadcast(q).join(probes, Seq("query_id"))
-      .join(assigned, Seq("cell", "label"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        VectorFunctions.dotExact(col("qe"), col("ce")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(rkT))
-      .filter(col("rank") <= k)
+    val approx = topK(broadcast(q).join(probes, Seq("query_id"))
+        .join(assigned, Seq("cell", "label"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("cosine", cosineOf("ce", "c_nrm")), byLabel, "cosine", "neighbor_id", k)
       .select(col("query_id"), col("label"), col("neighbor_id").as("a_neighbor"))
     val recall = truth
       .join(approx,
@@ -352,7 +338,8 @@ object Similarity {
   def ivfTopK(
       embeddings: DataFrame,
       nCentroids: Int = 16, nQueries: Int = 8, nProbe: Int = 2, k: Int = 10): DataFrame =
-    probeTopK(embeddings, initialCentroids(embeddings, nCentroids), nQueries, nProbe, k)
+    neighbors(ivfScan(embeddings, initialCentroids(embeddings, nCentroids), nQueries,
+      Left(nProbe)), "cosine", k)
 
   /** IVF with a TRAINED coarse quantizer: [[trainCentroids]]' deterministic
     * Lloyd iterations replace the first-K stand-in, same probe machinery.
@@ -364,9 +351,9 @@ object Similarity {
       nCentroids: Int = 16, iters: Int = 2,
       nQueries: Int = 8, nProbe: Int = 2, k: Int = 10,
       centsPre: Option[Array[(Long, Array[Float], Double)]] = None): DataFrame =
-    probeTopK(embeddings,
+    neighbors(ivfScan(embeddings,
       centsPre.getOrElse(trainCentroids(embeddings, nCentroids, iters)),
-      nQueries, nProbe, k)
+      nQueries, Left(nProbe)), "cosine", k)
 
   /** Target vectors per coarse-quantizer cell when the cell count is
     * auto-derived ([[autoCellCount]]). */
@@ -453,8 +440,8 @@ object Similarity {
       iters: Int = 2, sampleTarget: Long = 4096,
       nPre: Option[Long] = None): Array[(Long, Array[Float], Double)] = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
-    val n = nPre.getOrElse(embeddings.count())
-    val threshold = math.min(10000L, math.ceil(10000.0 * sampleTarget / n).toLong)
+    val (isInit, isSamp) =
+      trainingRows(nCentroids, nPre.getOrElse(embeddings.count()), sampleTarget)
     // ONE distributed pass collects BOTH the ≈sampleTarget-row training
     // sample (bounded whatever the corpus size — index-training metadata)
     // and the first-K init rows — formerly two separate collect jobs over
@@ -468,10 +455,6 @@ object Similarity {
     // to the unrolled oracle). Sample order is irrelevant: the per-cell
     // sums are same-scale exact decimal adds (associative and
     // commutative), counts are counts.
-    val isInit = col("vec_id") < nCentroids
-    val isSamp =
-      conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10).cast("long")
-        .%(10000).<(threshold)
     val rows = embeddings
       .filter(isInit || isSamp)
       .select(col("vec_id"), col("embedding"), isInit.as("is_init"), isSamp.as("is_samp"))
@@ -515,6 +498,17 @@ object Similarity {
     cents
   }
 
+  /** The row flags of every sampled Lloyd trainer: the first-`nInit`
+    * init rows, and the md5-bucket sample `md5bucket(vec_id) <
+    * ceil(10000·sampleTarget/n)` (clamped to 10000, so a corpus at or
+    * under the target trains on everything). */
+  private def trainingRows(nInit: Int, n: Long, sampleTarget: Long): (Column, Column) = {
+    val threshold = math.min(10000L, math.ceil(10000.0 * sampleTarget / n).toLong)
+    (col("vec_id") < nInit,
+      conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10).cast("long")
+        .%(10000).<(threshold))
+  }
+
   /** Spark's FLOAT→STRING→DECIMAL(38,12) term cast, driver-side:
     * Float.toString (the float's shortest repr — what Spark's string cast
     * emits) parsed and HALF_UP-rounded to scale 12. */
@@ -548,8 +542,7 @@ object Similarity {
     var cents = initialCentroids(embeddings, nCentroids)
     (1 to iters).foreach { _ =>
       val rows = feat
-        .withColumn("cell",
-          element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
+        .withColumn("cell", cellOf(cents))
         .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
         .groupBy("cell", "pos")
         .agg(
@@ -579,54 +572,52 @@ object Similarity {
   private def driverNorm(v: Array[Float]): Double = math.sqrt(driverDot(v, v))
 
   /** The shared IVF probe path: corpus rows are assigned to their nearest
-    * cell; a query probes its `nProbe` nearest cells and ranks only those
-    * candidates.
+    * cell; a query probes its nearest cells and only those candidates are
+    * scored. The probe side is each query's cell ranking cut to its first
+    * `nProbe` cells (`Left`), or, for a sweep (`Right`), to a prefix per
+    * budget keyed by an `nprobe` column: a budget's probe set is a PREFIX
+    * of the ranking, so one posexplode filtered to p ≤ nprobe serves every
+    * budget in one frame, each budget's candidate set exactly its
+    * standalone scan's. `corpus` is the caller's (neighbor_id, cell, …)
+    * assigned or encoded frame. Returned: the (query, candidate) pairs a
+    * probe query scores, before any distance arithmetic — which is also
+    * what [[indexCompare]] counts as the IVF family's scan.
     *
     * The coarse quantizer IS index metadata: K centroid vectors + norms —
     * bytes, not data — inlined as literals, so cell assignment and probe
     * selection are PURE MAP stages, no crossJoin, no window shuffle. The
     * only shuffles left are the candidate join (probe side is |Q|·nProbe
-    * rows — broadcast) and the final per-query top-k rank. Tie rules match
-    * the relational oracle: max cosine, then min centroid id. */
-  /** The (query, candidate) join a probe query actually scores —
-    * [[probeTopK]]'s candidate set BEFORE any distance arithmetic,
-    * split out so [[indexCompare]] prices the scan the IVF family pays
-    * (the count of these rows is the candidates-scanned column). */
+    * rows — broadcast) and the final per-query top-k rank ([[topK]], keyed
+    * (nprobe, query_id) in a sweep). Tie rules match the relational
+    * oracle: max cosine, then min centroid id. */
   private def probeCandidates(
-      embeddings: DataFrame,
-      cents: Array[(Long, Array[Float], Double)],
-      nQueries: Int, nProbe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val assigned = feat
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("nrm").as("c_nrm"), col("cell"))
-    val probes = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"),
-        explode(transform(
-          slice(cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-          s => s.getField("cid"))).as("cell"))
-    broadcast(probes)
-      .join(assigned, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
+      feat: DataFrame, cents: Array[(Long, Array[Float], Double)], nQueries: Int,
+      budget: Either[Int, Seq[Int]], corpus: DataFrame): DataFrame = {
+    val ranked = cellRank(cents, col("embedding"), col("nrm"))
+    def cids(cells: Column) = transform(cells, s => s.getField("cid"))
+    val q = feat.filter(col("vec_id") < nQueries)
+    val probes = budget match {
+      case Left(nProbe) =>
+        q.select(queryCols :+ explode(cids(slice(ranked, 1, nProbe))).as("cell"): _*)
+      case Right(budgets) =>
+        q.select(queryCols :+ posexplode(cids(ranked)).as(Seq("p0", "cell")): _*)
+          .withColumn("nprobe", explode(typedlit(budgets)))
+          .filter(col("p0") + 1 <= col("nprobe"))
+          .drop("p0")
+    }
+    broadcast(probes).join(corpus, "cell").filter(col("query_id") =!= col("neighbor_id"))
   }
 
-  private def probeTopK(
-      embeddings: DataFrame,
-      cents: Array[(Long, Array[Float], Double)],
-      nQueries: Int, nProbe: Int, k: Int): DataFrame = {
-    val rk = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    probeCandidates(embeddings, cents, nQueries, nProbe)
-      .withColumn("cosine",
-        VectorFunctions.dotExact(col("qe"), col("ce")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-      .orderBy("query_id", "rank")
+  /** The raw-vector IVF scan: [[probeCandidates]] against the
+    * cell-assigned corpus, exact cosine per pair. */
+  private def ivfScan(
+      embeddings: DataFrame, cents: Array[(Long, Array[Float], Double)], nQueries: Int,
+      budget: Either[Int, Seq[Int]]): DataFrame = {
+    val feat = normed(embeddings)
+    val assigned = feat.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
+      col("nrm").as("c_nrm"), cellOf(cents).as("cell"))
+    probeCandidates(feat, cents, nQueries, budget, assigned)
+      .withColumn("cosine", cosineOf("ce", "c_nrm"))
   }
 
   private def sumsqOf(v: Array[Float]): Double = {
@@ -635,17 +626,11 @@ object Similarity {
     graft.functions.DotDecimalImpl.dot(ad, ad).doubleValue()
   }
 
-  /** Per-subspace code pick: argmin reconstruction distance over the
-    * codebook via one sorted struct array (each 8-dim dot appears once;
-    * `|x_j|²` is constant per (row, subspace) so the comparison is
-    * `−2·x_j·c + |c|²`, ties → min code). */
-  private def pqCode(
-      j: Int, sub: Int,
-      cb: Array[Array[Array[Float]]], cbSumsq: Array[Array[Double]]) =
-    pqCodeFor(j, sub, cb, cbSumsq, col("embedding"))
-
-  /** The same argmin-code pick over an arbitrary embedding column —
-    * shared with [[VectorStore]]'s encode-at-rest path. */
+  /** Per-subspace code pick over an embedding column: argmin
+    * reconstruction distance over the codebook via one sorted struct
+    * array (each 8-dim dot appears once; `|x_j|²` is constant per (row,
+    * subspace) so the comparison is `−2·x_j·c + |c|²`, ties → min code).
+    * Shared with [[VectorStore]]'s encode-at-rest path. */
   private[graft] def pqCodeFor(
       j: Int, sub: Int,
       cb: Array[Array[Array[Float]]], cbSumsq: Array[Array[Double]],
@@ -678,12 +663,8 @@ object Similarity {
       // one combined collect for init slices + Lloyd sample (the
       // trainCentroids job-fusion pattern); nPre skips the count job when
       // the caller already holds the corpus count
-      val n = nPre.getOrElse(embeddings.count())
-      val threshold = math.min(10000L, math.ceil(10000.0 * sampleTarget / n).toLong)
-      val isInit = col("vec_id") < codebookSize
-      val isSamp =
-        conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10).cast("long")
-          .%(10000).<(threshold)
+      val (isInit, isSamp) =
+        trainingRows(codebookSize, nPre.getOrElse(embeddings.count()), sampleTarget)
       val rows = embeddings
         .filter(isInit || isSamp)
         .select(col("vec_id"), col("embedding"), isInit.as("is_init"), isSamp.as("is_samp"))
@@ -715,17 +696,12 @@ object Similarity {
       nSub: Int, codebookSize: Int, iters: Int, sampleTarget: Long = 4096,
       nPre: Option[Long] = None)
       : (Array[Array[Array[Float]]], Array[Array[Double]]) = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val centOf = cents.map { case (cid, v, _) => cid -> v }.toMap
     // cell assignment rides the SAME collect jobs as the vectors, via
     // the executor cellRank expression (bit-equal to the driver argmax —
     // the kmeansDistributed-pinned arithmetic equivalence), so training
     // collects bounded metadata without 10⁶-scale driver decimal ops
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val withCell = feat.withColumn("cell",
-      element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
+    val withCell = normed(embeddings).withColumn("cell", cellOf(cents))
     def residualOf(r: org.apache.spark.sql.Row): Array[Float] = {
       val v = r.getSeq[Float](r.fieldIndex("embedding")).toArray
       val cv = centOf(r.getAs[Long]("cell"))
@@ -734,12 +710,8 @@ object Similarity {
     // init slices + Lloyd sample in ONE collect job (the trainCentroids
     // fusion pattern); nPre skips the count job when the caller holds it
     if (iters > 0) {
-      val n = nPre.getOrElse(embeddings.count())
-      val threshold = math.min(10000L, math.ceil(10000.0 * sampleTarget / n).toLong)
-      val isInit = col("vec_id") < codebookSize
-      val isSamp =
-        conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10).cast("long")
-          .%(10000).<(threshold)
+      val (isInit, isSamp) =
+        trainingRows(codebookSize, nPre.getOrElse(embeddings.count()), sampleTarget)
       val rows = withCell
         .filter(isInit || isSamp)
         .select(col("vec_id"), col("embedding"), col("cell"),
@@ -811,6 +783,26 @@ object Similarity {
     (cb, cbSumsq)
   }
 
+  /** The PQ encode every ADC scan shares: `keep` plus one code per
+    * subspace of `emb` (`code_j`), and the reconstruction `recon` — the
+    * chosen codebook entries concatenated back into a full vector (array
+    * lookups into literal codebooks, still a map stage), passed through
+    * `rebuild` (the residual path adds the cell centroid back) — with its
+    * exact norm `recon_nrm`. The raw embedding is NOT carried past
+    * encoding. */
+  private def pqEncode(
+      src: DataFrame, cb: Array[Array[Array[Float]]], cbSumsq: Array[Array[Double]],
+      emb: Column, keep: Seq[Column], rebuild: Column => Column = identity): DataFrame = {
+    val nSub = cb.length
+    val sub = cb.head.head.length
+    src.select(keep ++ (0 until nSub).map(j =>
+        pqCodeFor(j, sub, cb, cbSumsq, emb).as(s"code_$j")): _*)
+      .withColumn("recon", rebuild(concat((0 until nSub).map { j =>
+        element_at(typedlit(cb(j)), col(s"code_$j") + 1)
+      }: _*)))
+      .withColumn("recon_nrm", sqrt(VectorFunctions.dotExact(col("recon"), col("recon"))))
+  }
+
   /** Product-quantization (PQ) approximate top-k — the MEMORY-scale ANN
     * path: each corpus vector is encoded as `nSub` small codes (64 floats
     * → 8 bytes at these defaults, a 32× compression), and queries score
@@ -822,7 +814,7 @@ object Similarity {
     * Codebooks are index metadata, TRAINED by default
     * ([[trainPqCodebooks]]: sampled per-subspace Lloyd — flat cost in
     * corpus size, like the IVF quantizer; `iters = 0` falls back to the
-    * first-K-slices stand-in). Encoding is a PURE MAP stage ([[pqCode]]).
+    * first-K-slices stand-in). Encoding is a PURE MAP stage ([[pqEncode]]).
     * At 100 TB the encoded corpus (codes only) is what a scoring pass
     * reads — the raw vectors are touched once at index build.
     *
@@ -832,37 +824,14 @@ object Similarity {
       nQueries: Int = 8, k: Int = 10,
       nSub: Int = 8, codebookSize: Int = 16, iters: Int = 2,
       cbPre: Option[(Array[Array[Array[Float]]], Array[Array[Double]])] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val (cb, cbSumsq) =
       cbPre.getOrElse(trainPqCodebooks(embeddings, nSub, codebookSize, iters))
-    val dims = cb.length * cb.head.head.length
-    val sub = dims / nSub
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val codeCols = (0 until nSub).map(j =>
-      pqCode(j, sub, cb, cbSumsq).as(s"code_$j"))
-    val encoded = feat
-      .select(col("vec_id").as("neighbor_id") +: codeCols: _*)
-      // ADC via reconstruction: concat the chosen codebook entries back
-      // into a 64-dim vector (array lookups into literal codebooks — still
-      // a map stage; the raw embedding is NOT carried past encoding)
-      .withColumn("recon", concat((0 until nSub).map { j =>
-        element_at(typedlit(cb(j)), col(s"code_$j") + 1)
-      }: _*))
-      .withColumn("recon_nrm",
-        sqrt(VectorFunctions.dotExact(col("recon"), col("recon"))))
-    val q = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"))
-    val rk = Window.partitionBy("query_id").orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    broadcast(q).join(encoded, col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_cosine",
-        VectorFunctions.dotExact(col("qe"), col("recon")) / (col("q_nrm") * col("recon_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adc_cosine", "rank")
-      .orderBy("query_id", "rank")
+    val feat = normed(embeddings)
+    val encoded =
+      pqEncode(feat, cb, cbSumsq, col("embedding"), Seq(col("vec_id").as("neighbor_id")))
+    neighbors(broadcast(queriesOf(feat, nQueries))
+      .join(encoded, col("query_id") =!= col("neighbor_id"))
+      .withColumn("adc_cosine", cosineOf("recon", "recon_nrm")), "adc_cosine", k)
   }
 
   /** IVF+PQ approximate top-k — the two trained index structures
@@ -888,56 +857,39 @@ object Similarity {
       nSub: Int = 8, codebookSize: Int = 16, iters: Int = 2,
       centsPre: Option[Array[(Long, Array[Float], Double)]] = None,
       cbPre: Option[(Array[Array[Array[Float]]], Array[Array[Double]])] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
-    // ONE corpus count serves both training stages when neither is
-    // pre-trained (the ivfPqResidualTopK discipline); lazy so fully
-    // pre-trained calls pay no count job at all
-    lazy val nShared = Some(embeddings.count())
-    val cents = centsPre.getOrElse(
-      trainCentroids(embeddings, nCentroids, iters, nPre = nShared))
-    val (cb, cbSumsq) = cbPre.getOrElse(
-      trainPqCodebooks(embeddings, nSub, codebookSize, iters, nPre = nShared))
-    ivfPqTopKWith(embeddings, cents, cb, cbSumsq, nQueries, nProbe, k)
+    val (cents, (cb, cbSumsq)) =
+      trainIvfPq(embeddings, nCentroids, nSub, codebookSize, iters, centsPre, cbPre)
+    neighbors(ivfPqScan(embeddings, cents, cb, cbSumsq, nQueries, Left(nProbe)),
+      "adc_cosine", k)
   }
 
-  /** [[ivfPqTopK]] against an ALREADY-trained quantizer + codebooks — the
-    * shared scan so [[ivfPqNprobeSweep]] trains once and re-runs only the
-    * cell-pruned ADC scan per probe budget. */
-  private def ivfPqTopKWith(
+  /** The trained quantizer + codebooks of [[ivfPqTopK]] and
+    * [[ivfPqNprobeSweep]]: ONE corpus count serves both training stages
+    * when neither is pre-trained (the [[ivfPqResidualTopK]] discipline);
+    * lazy, so fully pre-trained calls pay no count job at all. Training is
+    * deterministic in n, so sharing the count changes cost, never values. */
+  private def trainIvfPq(
+      embeddings: DataFrame, nCentroids: Int, nSub: Int, codebookSize: Int, iters: Int,
+      centsPre: Option[Array[(Long, Array[Float], Double)]],
+      cbPre: Option[(Array[Array[Array[Float]]], Array[Array[Double]])])
+      : (Array[(Long, Array[Float], Double)], (Array[Array[Array[Float]]], Array[Array[Double]])) = {
+    lazy val nShared = Some(embeddings.count())
+    (centsPre.getOrElse(trainCentroids(embeddings, nCentroids, iters, nPre = nShared)),
+      cbPre.getOrElse(trainPqCodebooks(embeddings, nSub, codebookSize, iters, nPre = nShared)))
+  }
+
+  /** The IVF+PQ ADC scan against an already-trained quantizer + codebooks:
+    * [[probeCandidates]] over the cell-assigned PQ-encoded corpus, ADC
+    * cosine per pair. */
+  private def ivfPqScan(
       embeddings: DataFrame, cents: Array[(Long, Array[Float], Double)],
       cb: Array[Array[Array[Float]]], cbSumsq: Array[Array[Double]],
-      nQueries: Int, nProbe: Int, k: Int): DataFrame = {
-    val nSub = cb.length
-    val dims = cb.length * cb.head.head.length
-    val sub = dims / nSub
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val codeCols = (0 until nSub).map(j => pqCode(j, sub, cb, cbSumsq).as(s"code_$j"))
-    val encoded = feat
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
-      .select(Seq(col("vec_id").as("neighbor_id"), col("cell")) ++ codeCols: _*)
-      .withColumn("recon", concat((0 until nSub).map { j =>
-        element_at(typedlit(cb(j)), col(s"code_$j") + 1)
-      }: _*))
-      .withColumn("recon_nrm",
-        sqrt(VectorFunctions.dotExact(col("recon"), col("recon"))))
-    val probes = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"),
-        explode(transform(
-          slice(cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-          s => s.getField("cid"))).as("cell"))
-    val rk = Window.partitionBy("query_id").orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    broadcast(probes)
-      .join(encoded, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_cosine",
-        VectorFunctions.dotExact(col("qe"), col("recon")) / (col("q_nrm") * col("recon_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adc_cosine", "rank")
-      .orderBy("query_id", "rank")
+      nQueries: Int, budget: Either[Int, Seq[Int]]): DataFrame = {
+    val feat = normed(embeddings)
+    val encoded = pqEncode(feat.withColumn("cell", cellOf(cents)), cb, cbSumsq,
+      col("embedding"), Seq(col("vec_id").as("neighbor_id"), col("cell")))
+    probeCandidates(feat, cents, nQueries, budget, encoded)
+      .withColumn("adc_cosine", cosineOf("recon", "recon_nrm"))
   }
 
   /** RESIDUAL-encoded IVF+PQ top-k — [[ivfPqTopK]] with the FAISS
@@ -970,7 +922,6 @@ object Similarity {
       nSub: Int = 8, codebookSize: Int = 16, iters: Int = 2,
       centsPre: Option[Array[(Long, Array[Float], Double)]] = None,
       nPre: Option[Long] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     // ONE corpus count serves both training stages (r16 ADVICE: the
     // centsPre-absent fallback previously paid its own count job)
     val nEff = Some(nPre.getOrElse(embeddings.count()))
@@ -978,46 +929,19 @@ object Similarity {
       trainCentroids(embeddings, nCentroids, iters, nPre = nEff))
     val (cb, cbSumsq) =
       trainPqCodebooksResidual(embeddings, cents, nSub, codebookSize, iters, nPre = nEff)
-    val dims = cb.length * cb.head.head.length
-    val sub = dims / nSub
     val centMap = typedlit(cents.map { case (cid, v, _) => cid -> v.toSeq }.toMap)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
+    val feat = normed(embeddings)
     val assigned = feat
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
+      .withColumn("cell", cellOf(cents))
       .withColumn("cvec", element_at(centMap, col("cell")))
-      .withColumn("res",
-        zip_with(col("embedding"), col("cvec"), (a, b) => a - b))
-    val codeCols = (0 until nSub).map(j =>
-      pqCodeFor(j, sub, cb, cbSumsq, col("res")).as(s"code_$j"))
-    val encoded = assigned
-      .select(Seq(col("vec_id").as("neighbor_id"), col("cell"),
-        col("cvec")) ++ codeCols: _*)
-      .withColumn("rhat", concat((0 until nSub).map { j =>
-        element_at(typedlit(cb(j)), col(s"code_$j") + 1)
-      }: _*))
-      .withColumn("recon", zip_with(col("cvec"), col("rhat"), (a, b) => a + b))
-      .withColumn("recon_nrm",
-        sqrt(VectorFunctions.dotExact(col("recon"), col("recon"))))
+      .withColumn("res", zip_with(col("embedding"), col("cvec"), (a, b) => a - b))
+    // reconstruction = centroid + the decoded residual r̂ (float add)
+    val encoded = pqEncode(assigned, cb, cbSumsq, col("res"),
+        Seq(col("vec_id").as("neighbor_id"), col("cell"), col("cvec")),
+        rhat => zip_with(col("cvec"), rhat, (a, b) => a + b))
       .select("neighbor_id", "cell", "recon", "recon_nrm")
-    val probes = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"),
-        explode(transform(
-          slice(cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-          s => s.getField("cid"))).as("cell"))
-    val rk = Window.partitionBy("query_id").orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    broadcast(probes)
-      .join(encoded, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_cosine",
-        VectorFunctions.dotExact(col("qe"), col("recon")) / (col("q_nrm") * col("recon_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adc_cosine", "rank")
-      .orderBy("query_id", "rank")
+    neighbors(probeCandidates(feat, cents, nQueries, Left(nProbe), encoded)
+      .withColumn("adc_cosine", cosineOf("recon", "recon_nrm")), "adc_cosine", k)
   }
 
   /** Recall@k of the residual-encoded IVF+PQ vs brute force — the honest
@@ -1028,6 +952,26 @@ object Similarity {
     recallAtK(
       bruteForceTopK(embeddings, nQueries, k),
       ivfPqResidualTopK(embeddings, nQueries = nQueries, k = k))
+
+  /** The (query, candidate) pairs the LSH multi-probe bucket join feeds
+    * to scoring — split out so [[indexCompare]] prices the LSH scan. */
+  private def lshCandidates(
+      embeddings: DataFrame, nQueries: Int, nBits: Int = 8,
+      multiProbe: Boolean = true, maxBucket: Long = 1000L): DataFrame = {
+    val feat = withFeat(embeddings, nBits)
+    val masks = if (multiProbe) 0L +: (0 until nBits).map(1L << _).toSeq else Seq(0L)
+    val q = feat.filter(col("vec_id") < nQueries).select(queryCols :+
+      explode(array(masks.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"): _*)
+    // hot-bucket guard (Dedup.capBuckets): one overloaded sign bucket
+    // would funnel nQueries·width candidate rows through a single join
+    // task; wider-than-cap buckets are dropped (documented recall cost)
+    val c = Dedup.capBuckets(
+      feat.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
+        col("nrm").as("c_nrm"), col("bucket")),
+      Seq("bucket"), maxBucket)
+    broadcast(q).join(c, Seq("bucket"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+  }
 
   /** Multi-probe LSH top-k: candidates come from the query's sign bucket
     * PLUS every Hamming-distance-1 bucket (nBits single-bit flips) — the
@@ -1040,40 +984,13 @@ object Similarity {
     * join, never all-pairs. Probe buckets of one query are pairwise
     * distinct (XOR with distinct masks), so a (query, neighbor) pair can
     * match at most one probe and needs no distinct. */
-  /** The (query, candidate) pairs the LSH multi-probe bucket join feeds
-    * to scoring — split out so [[indexCompare]] prices the LSH scan. */
-  private def lshCandidates(
-      embeddings: DataFrame, nQueries: Int, nBits: Int = 8,
-      multiProbe: Boolean = true, maxBucket: Long = 1000L): DataFrame = {
-    val feat = withFeat(embeddings, nBits)
-    val masks = if (multiProbe) 0L +: (0 until nBits).map(1L << _).toSeq else Seq(0L)
-    val q = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"),
-        explode(array(masks.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("bucket"))
-    // hot-bucket guard (Dedup.capBuckets): one overloaded sign bucket
-    // would funnel nQueries·width candidate rows through a single join
-    // task; wider-than-cap buckets are dropped (documented recall cost)
-    val c = Dedup.capBuckets(
-      feat.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("nrm").as("c_nrm"), col("bucket")),
-      Seq("bucket"), maxBucket)
-    broadcast(q).join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-  }
-
   def lshTopK(
       embeddings: DataFrame,
       nQueries: Int = 8, k: Int = 10, nBits: Int = 8, multiProbe: Boolean = true,
       maxBucket: Long = 1000L): DataFrame = {
-    val rk = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    lshCandidates(embeddings, nQueries, nBits, multiProbe, maxBucket)
+    neighbors(lshCandidates(embeddings, nQueries, nBits, multiProbe, maxBucket)
       .withColumn("dot", VectorFunctions.dotExact(col("qe"), col("ce")))
-      .withColumn("cosine", col("dot") / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-      .orderBy("query_id", "rank")
+      .withColumn("cosine", col("dot") / (col("q_nrm") * col("c_nrm"))), "cosine", k)
   }
 
   /** Range search (the ANN dual of top-k): every corpus vector whose
@@ -1085,13 +1002,10 @@ object Similarity {
   def rangeSearch(
       embeddings: DataFrame, nQueries: Int = 8, minCosine: Double = 0.3): DataFrame = {
     val feat = withFeat(embeddings)
-    val q = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"))
     val c = feat.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
       col("nrm").as("c_nrm"))
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        VectorFunctions.dotExact(col("qe"), col("ce")) / (col("q_nrm") * col("c_nrm")))
+    broadcast(queriesOf(feat, nQueries)).join(c, col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", cosineOf("ce", "c_nrm"))
       .filter(col("cosine") >= minCosine)
       .select("query_id", "neighbor_id", "cosine")
       .orderBy("query_id", "neighbor_id")
@@ -1298,44 +1212,17 @@ object Similarity {
     * of `dedup_threshold_sweep`): one row per (nprobe, query), so the
     * operator that ships at 100 TB picks its probe budget from measured
     * recall, not folklore. The quantizer trains ONCE (driver-side over
-    * the bounded sample, bit-equal across probes); each probe setting
-    * re-runs only the cell-pruned scan, and every side stays the same
-    * |Q|·k bounded evaluation shape as [[recallAtK]]. */
+    * the bounded sample, bit-equal across probes); every probe setting
+    * shares one cell-pruned scan keyed by budget, and every side stays
+    * the same |Q|·k bounded evaluation shape as [[recallAtK]]. */
   def ivfNprobeSweep(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
       probes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    // ALL probe budgets scan in ONE frame keyed (query_id, nprobe): a
-    // budget's probe set is a PREFIX of the query's cell ranking, so the
-    // (budget × cell) probe side comes from one posexplode of the full
-    // ranking filtered to p ≤ nprobe — each budget's candidate set and
-    // rank are exactly the per-budget scan's (spec-pinned), while the
-    // sweep pays one corpus assignment, one probe join, one rank window
-    // and ONE brute-force truth instead of |probes| of each.
-    val cents = trainCentroids(embeddings)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val assigned = feat
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("nrm").as("c_nrm"), col("cell"))
-    val qprobes = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"),
-        posexplode(transform(cellRank(cents, col("embedding"), col("nrm")),
-          s => s.getField("cid"))).as(Seq("p0", "cell")))
-      .withColumn("nprobe", explode(typedlit(probes)))
-      .filter(col("p0") + 1 <= col("nprobe"))
-      .drop("p0")
-    val rk = Window.partitionBy("nprobe", "query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val approx = broadcast(qprobes)
-      .join(assigned, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        VectorFunctions.dotExact(col("qe"), col("ce")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
+    // ALL probe budgets scan in ONE frame keyed (nprobe, query_id)
+    // ([[probeCandidates]]' sweep form): the sweep pays one corpus
+    // assignment, one probe join, one rank window and ONE brute-force
+    // truth instead of |probes| of each.
+    val approx = topK(ivfScan(embeddings, trainCentroids(embeddings), nQueries, Right(probes)),
+        Seq("nprobe", "query_id"), "cosine", "neighbor_id", k)
       .select("nprobe", "query_id", "neighbor_id")
     sweepRecall(bruteForceTopK(embeddings, nQueries, k), approx, "nprobe", probes)
   }
@@ -1468,10 +1355,7 @@ object Similarity {
       nCentroids: Int = 0,
       iters: Int = 2,
       centsPre: Option[Array[(Long, Array[Float], Double)]] = None): DataFrame = {
-    val w = Window.partitionBy("src").orderBy(col("cosine").desc, col("dst"))
-    cellScoredPairs(embeddings, nCentroids, iters, centsPre)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(cellScoredPairs(embeddings, nCentroids, iters, centsPre), Seq("src"), "cosine", "dst", k)
       .select(col("src").as("vec_id"), col("dst").as("neighbor_id"),
         col("cosine"), col("rank").cast("int").as("rank"))
       .orderBy("vec_id", "rank")
@@ -1514,24 +1398,20 @@ object Similarity {
       centsPre: Option[Array[(Long, Array[Float], Double)]] = None): DataFrame = {
     val (q, edges, entries, nodes) =
       graphSearchParts(embeddings, graphK, nCentroids, iters, nQueries, centsPre)
-    beamSearchFrom(q, edges, entries, nodes, beam, hops, k)
+    rankBeamEval(navigate(q, edges, q.select(col("query_id")).crossJoin(broadcast(entries)),
+      nodes, Seq("query_id"), lit(beam), hops), k)
   }
 
   /** The shared index-at-rest of [[graphSearch]] — (queries, edge list,
-    * entry nodes, scored-node side), built ONCE so [[graphBeamSweep]]
-    * re-runs only the navigation per beam width. */
+    * entry nodes, scored-node side), built ONCE per call and then only
+    * navigated ([[graphBeamSweep]] navigates every beam width over it). */
   private def graphSearchParts(
       embeddings: DataFrame, graphK: Int, nCentroids: Int, iters: Int,
       nQueries: Int, centsPre: Option[Array[(Long, Array[Float], Double)]])
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cents = centsPre.getOrElse(trainAtAutoCellCount(embeddings, nCentroids, iters))
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val q = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"))
+    val feat = normed(embeddings)
+    val q = queriesOf(feat, nQueries)
     // the graph build reuses THIS training run's centroids (the same
     // deterministic Lloyd result — passing them just skips a second
     // training pass per query)
@@ -1541,8 +1421,7 @@ object Similarity {
     // per-cell entry representatives, from the SAME deterministic
     // quantizer the graph build assigns with
     val entries = feat
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
+      .withColumn("cell", cellOf(cents))
       .groupBy("cell").agg(min(col("vec_id")).as("node"))
       .select("node")
     // no precomputed norm on the node side: the navigations score only
@@ -1552,111 +1431,82 @@ object Similarity {
     (q, edges, entries, nodes)
   }
 
-  /** The navigation loop of [[graphSearch]] against an already-built
-    * graph: `hops` rounds of frontier expansion, scoring only
-    * newly-visited nodes, beam-ranked per query. */
-  private def beamSearchFrom(
-      q: DataFrame, edges: DataFrame, entries: DataFrame, nodes: DataFrame,
-      beam: Int, hops: Int, k: Int): DataFrame =
-    rankBeamEval(beamEval(q, edges, entries, nodes, beam, hops), k)
-
-  /** The full SCORED eval set of the beam navigation — every
-    * (query_id, node, cosine) the search ever touched. Split out so the
-    * dashboard ([[indexCompare]]) derives top-k AND the honest
-    * candidates-scanned count from ONE navigation. */
-  private def beamEval(
-      q: DataFrame, edges: DataFrame, entries: DataFrame, nodes: DataFrame,
-      beam: Int, hops: Int): DataFrame = {
-    // the per-query work is bounded by construction (≤ K + hops·beam·
-    // graphK nodes ever touched), so every query-keyed side is broadcast:
-    // each hop streams the materialized edge list and the corpus node
-    // side map-side instead of exchanging them, and the node norm is
-    // evaluated post-join on the visited rows only (values unchanged —
-    // normExact is a deterministic function of the float array)
+  /** The beam navigation every graph search shares, against an
+    * already-built adjacency (`src`, `dst`): score the `seeds`, then
+    * `hops` rounds of frontier expansion — each hop keeps the `width`
+    * best-scored nodes per `keys` group (ties on node), expands them
+    * through `adjacency`, drops nodes the group has already seen, and
+    * scores only the fresh ones. Returns the full SCORED eval set, every
+    * (keys…, node, cosine) the search ever touched, so a caller derives
+    * top-k AND the candidates-scanned count ([[indexCompare]]) from ONE
+    * navigation.
+    *
+    * The keys carry the setting: unfiltered search is `keys = query_id`
+    * over the kNN `edges`; the filtered search navigates its expanded
+    * `fedges`; a beam sweep keys (query_id, beam) with `width = beam`, so
+    * every width's eval set is exactly what its standalone navigation
+    * computes while the sweep pays ONE set of hop jobs.
+    *
+    * The per-query work is bounded by construction (≤ seeds +
+    * hops·width·degree nodes ever touched), so every query-keyed side is
+    * broadcast: each hop streams the materialized adjacency and the corpus
+    * node side map-side instead of exchanging them, and the node norm is
+    * evaluated post-join on the visited rows only (values unchanged —
+    * normExact is a deterministic function of the float array). Each
+    * hop's eval set is materialized, so the plan never re-grows. */
+  private def navigate(
+      q: DataFrame, adjacency: DataFrame, seeds: DataFrame, nodes: DataFrame,
+      keys: Seq[String], width: Column, hops: Int): DataFrame = {
+    val seen = (keys :+ "node").map(col)
     def scored(ids: DataFrame): DataFrame =
       broadcast(ids.join(broadcast(q), Seq("query_id")))
         .join(nodes, Seq("node"))
-        .select(col("query_id"), col("node"),
-          (VectorFunctions.dotFold(col("qe"), col("ne")) /
-            (col("q_nrm") * VectorFunctions.normExact(col("ne")))).as("cosine"))
-    val wBeam = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("node"))
-    var eval = scored(q.select(col("query_id")).crossJoin(broadcast(entries)))
-      .transform(Materialize(_))
-    var frontier = eval.withColumn("__rn", row_number().over(wBeam))
-      .filter(col("__rn") <= beam).drop("__rn")
+        .select(seen :+ (VectorFunctions.dotFold(col("qe"), col("ne")) /
+          (col("q_nrm") * VectorFunctions.normExact(col("ne")))).as("cosine"): _*)
+    val wBeam = Window.partitionBy(keys.map(col): _*).orderBy(col("cosine").desc, col("node"))
+    var eval = scored(seeds).transform(Materialize(_))
     (1 to hops).foreach { _ =>
-      val nbrs = broadcast(frontier.select("query_id", "node"))
-        .join(edges, col("node") === col("src"))
-        .select(col("query_id"), col("dst").as("node")).distinct()
-      val fresh = nbrs.join(broadcast(eval.select("query_id", "node")),
-        Seq("query_id", "node"), "left_anti")
+      val frontier = eval.withColumn("__rn", row_number().over(wBeam))
+        .filter(col("__rn") <= width).drop("__rn")
+      val nbrs = broadcast(frontier.select(seen: _*))
+        .join(adjacency, col("node") === col("src"))
+        .select(keys.map(col) :+ col("dst").as("node"): _*).distinct()
+      val fresh = nbrs.join(broadcast(eval.select(seen: _*)), keys :+ "node", "left_anti")
       eval = eval.unionByName(scored(fresh)).transform(Materialize(_))
-      frontier = eval.withColumn("__rn", row_number().over(wBeam))
-        .filter(col("__rn") <= beam).drop("__rn")
     }
     eval
   }
 
-  /** Rank a [[beamEval]] set to the final (query_id, neighbor_id,
-    * cosine, rank) top-k contract. */
-  private def rankBeamEval(eval: DataFrame, k: Int): DataFrame = {
-    val wBeam = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("node"))
-    eval.filter(col("node") =!= col("query_id"))
-      .withColumn("rank", row_number().over(wBeam))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("node").as("neighbor_id"),
-        col("cosine"), col("rank").cast("int").as("rank"))
+  /** Rank a [[navigate]] eval set to the final (query_id, neighbor_id,
+    * extra…, cosine, rank) top-k contract. */
+  private def rankBeamEval(eval: DataFrame, k: Int, extra: Column*): DataFrame =
+    topK(eval.filter(col("node") =!= col("query_id")), Seq("query_id"), "cosine", "node", k)
+      .select(Seq(col("query_id"), col("node").as("neighbor_id")) ++ extra ++
+        Seq(col("cosine"), col("rank").cast("int").as("rank")): _*)
       .orderBy("query_id", "rank")
-  }
 
   /** Recall@k per BEAM WIDTH for the graph search — the graph family's
     * tuning table, completing the symmetry with the IVF family's nprobe
     * sweeps (C47b/C47c): beam width is graph ANN's recall-vs-work knob
     * exactly as nProbe is IVF's, and a deployment reads this table to
     * pick it. The quantizer, kNN graph, entry nodes, and brute-force
-    * truth are all built ONCE; each beam width re-runs only the
-    * navigation (per-query work ≤ K + hops·beam·graphK by construction,
-    * so the sweep's total cost is the build plus three bounded
-    * navigations, not three index builds). */
+    * truth are all built ONCE, and every beam width navigates in one
+    * frame keyed (query_id, beam) ([[navigate]]; per-query work ≤ K +
+    * hops·beam·graphK by construction), so the sweep's total cost is the
+    * build plus one set of hop jobs, not three index builds. */
   def graphBeamSweep(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
       beams: Seq[Int] = Seq(2, 4, 8)): DataFrame = {
     val (q, edges, entries, nodes) =
       graphSearchParts(embeddings, 5, 0, 2, nQueries, None)
-    // ALL beam widths navigate in ONE frame keyed (query_id, beam): each
-    // hop's frontier rank, neighbor expansion, seen-set anti-join and
-    // scoring carry `beam` as part of the key, so every width's eval set
-    // is exactly what its standalone navigation computes (spec-pinned),
-    // while the sweep pays ONE set of hop jobs instead of |beams| — and
+    // ALL beam widths navigate in ONE frame keyed (query_id, beam) — and
     // the brute-force truth appears once in the final plan instead of
-    // being recomputed per beam width.
-    val wBeam = Window.partitionBy("query_id", "beam")
-      .orderBy(col("cosine").desc, col("node"))
-    // beamEval's broadcast/post-join-norm discipline, keyed (query, beam)
-    def scored(ids: DataFrame): DataFrame =
-      broadcast(ids.join(broadcast(q), Seq("query_id")))
-        .join(nodes, Seq("node"))
-        .select(col("query_id"), col("beam"), col("node"),
-          (VectorFunctions.dotFold(col("qe"), col("ne")) /
-            (col("q_nrm") * VectorFunctions.normExact(col("ne")))).as("cosine"))
-    var eval = scored(q.select(col("query_id"))
-        .withColumn("beam", explode(typedlit(beams)))
-        .crossJoin(broadcast(entries)))
-      .transform(Materialize(_))
-    var frontier = eval.withColumn("__rn", row_number().over(wBeam))
-      .filter(col("__rn") <= col("beam")).drop("__rn")
-    (1 to 3).foreach { _ =>
-      val nbrs = broadcast(frontier.select("query_id", "beam", "node"))
-        .join(edges, col("node") === col("src"))
-        .select(col("query_id"), col("beam"), col("dst").as("node")).distinct()
-      val fresh = nbrs.join(broadcast(eval.select("query_id", "beam", "node")),
-        Seq("query_id", "beam", "node"), "left_anti")
-      eval = eval.unionByName(scored(fresh)).transform(Materialize(_))
-      frontier = eval.withColumn("__rn", row_number().over(wBeam))
-        .filter(col("__rn") <= col("beam")).drop("__rn")
-    }
-    val approx = eval.filter(col("node") =!= col("query_id"))
-      .withColumn("rank", row_number().over(wBeam))
-      .filter(col("rank") <= k)
+    // being recomputed per beam width
+    val seeds = q.select(col("query_id"))
+      .withColumn("beam", explode(typedlit(beams)))
+      .crossJoin(broadcast(entries))
+    val keys = Seq("query_id", "beam")
+    val eval = navigate(q, edges, seeds, nodes, keys, col("beam"), 3)
+    val approx = topK(eval.filter(col("node") =!= col("query_id")), keys, "cosine", "node", k)
       .select(col("query_id"), col("beam"), col("node").as("neighbor_id"))
     sweepRecall(bruteForceTopK(embeddings, nQueries, k), approx, "beam", beams)
   }
@@ -1712,14 +1562,9 @@ object Similarity {
       iters: Int = 2, nQueries: Int = 8, beam: Int = 32, hops: Int = 3,
       k: Int = 10, targetLabel: Int = 0, entriesPerCell: Int = 2,
       broadcastCap: Long = Broadcasts.DefaultCap): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cents = trainAtAutoCellCount(embeddings, nCentroids, iters)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"), col("label"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val q = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"))
+    val feat = normed(embeddings, "label")
+    val q = queriesOf(feat, nQueries)
     val edges = knnGraph(embeddings, graphK, nCentroids, iters, Some(cents))
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .transform(Materialize(_))
@@ -1736,8 +1581,7 @@ object Similarity {
     // deterministic quantizer the graph build assigns with
     val wEntry = Window.partitionBy("cell").orderBy(col("vec_id").asc)
     val entries = feat.filter(col("label") === targetLabel)
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
+      .withColumn("cell", cellOf(cents))
       .withColumn("__er", row_number().over(wEntry))
       .filter(col("__er") <= entriesPerCell)
       .select(col("vec_id").as("node"))
@@ -1747,12 +1591,6 @@ object Similarity {
     // (normExact is a deterministic function of the float array, so the
     // cosine values are unchanged)
     val nodes = embeddings.select(col("vec_id").as("node"), col("embedding").as("ne"))
-    def scored(ids: DataFrame): DataFrame =
-      broadcast(ids.join(broadcast(q), Seq("query_id")))
-        .join(nodes, Seq("node"))
-        .select(col("query_id"), col("node"),
-          (VectorFunctions.dotFold(col("qe"), col("ne")) /
-            (col("q_nrm") * VectorFunctions.normExact(col("ne")))).as("cosine"))
     // ACORN-1 expansion HOISTED out of the hop loop: a node's filtered
     // expansion set depends only on (edges, matching) — never on the
     // query, the beam, or the hop — so the per-hop
@@ -1777,31 +1615,9 @@ object Similarity {
       .select("src", "dst")
       .join(mDst, Seq("dst"), "left_semi")
     val fedges = Materialize(eMatch.unionByName(eThrough).distinct())
-    val wBeam = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("node"))
-    var eval = scored(q.select(col("query_id")).crossJoin(broadcast(entries)))
-      .transform(Materialize(_))
-    var frontier = eval.withColumn("__rn", row_number().over(wBeam))
-      .filter(col("__rn") <= beam).drop("__rn")
-    (1 to hops).foreach { _ =>
-      // the frontier (≤|Q|·beam rows) and the visited set (bounded by
-      // construction) are broadcast: every hop streams the materialized
-      // fedges/nodes sides map-side instead of exchanging them
-      val cand = broadcast(frontier.select("query_id", "node"))
-        .join(fedges, col("node") === col("src"))
-        .select(col("query_id"), col("dst").as("node")).distinct()
-      val fresh = cand.join(broadcast(eval.select("query_id", "node")),
-        Seq("query_id", "node"), "left_anti")
-      eval = eval.unionByName(scored(fresh)).transform(Materialize(_))
-      frontier = eval.withColumn("__rn", row_number().over(wBeam))
-        .filter(col("__rn") <= beam).drop("__rn")
-    }
-    eval.filter(col("node") =!= col("query_id"))
-      .withColumn("rank", row_number().over(wBeam))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("node").as("neighbor_id"),
-        lit(targetLabel).as("label"), col("cosine"),
-        col("rank").cast("int").as("rank"))
-      .orderBy("query_id", "rank")
+    val eval = navigate(q, fedges, q.select(col("query_id")).crossJoin(broadcast(entries)),
+      nodes, Seq("query_id"), lit(beam), hops)
+    rankBeamEval(eval, k, lit(targetLabel).as("label"))
   }
 
   /** Recall@k of [[filteredGraphSearch]] against the exact filtered
@@ -1820,20 +1636,15 @@ object Similarity {
   private def cellScoredPairs(
       embeddings: DataFrame, nCentroids: Int, iters: Int,
       centsPre: Option[Array[(Long, Array[Float], Double)]] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cents = centsPre.getOrElse(trainAtAutoCellCount(embeddings, nCentroids, iters))
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val best = element_at(cellRank(cents, col("embedding"), col("nrm")), 1)
     // localCheckpoint, NOT cache(): both join sides reuse the assignment
     // without recompute, and the pinned blocks release via ContextCleaner
     // once the frame is unreachable — a cache() entry would pin partitions
     // in the shared CacheManager for the session lifetime on every
     // knnGraph/contrastivePairs call (r8 ADVICE).
-    val assigned = feat.select(
-      col("vec_id"), col("embedding"), col("nrm"),
-      best.getField("cid").as("cell")).transform(Materialize(_))
+    val assigned = normed(embeddings)
+      .select(col("vec_id"), col("embedding"), col("nrm"), cellOf(cents).as("cell"))
+      .transform(Materialize(_))
     val a = assigned.select(col("cell"), col("vec_id").as("src"),
       col("embedding").as("ea"), col("nrm").as("na"))
     val b = assigned.select(col("cell"), col("vec_id").as("dst"),
@@ -1982,18 +1793,6 @@ object Similarity {
       .orderBy("pos")
   }
 
-  /** Per-dimension WHITENING (standardization): y_i = (x_i − μ_i) /
-    * √(σ²_i + ε) — the preprocessing that equalizes dimension scales
-    * before distance-based passes when [[dimStats]] shows drift (full
-    * ZCA needs the covariance; diagonal whitening is the production
-    * default). Same two-pass shape as [[centerNormalize]]: the d
-    * (μ, σ²) pairs are INDEX METADATA — computed by [[dimStats]]'
-    * aggregation, collected once, inlined as literal arrays — so the
-    * transform is a shuffle-free codegen'd map over the scan.
-    *
-    * Determinism: μ/σ² come from dimStats' proven bridges; √(σ²+ε) and
-    * the per-element subtract/divide are single IEEE ops with identical
-    * trees in the oracle. */
   /** Embedding OUTLIER detection against the corpus per-dimension
     * statistics: each vector's score is its max per-dimension |z|
     * (z = (x − μ_d)/√(σ²_d + ε)), plus the offending dimension — the
@@ -2033,6 +1832,18 @@ object Similarity {
       .orderBy("vec_id")
   }
 
+  /** Per-dimension WHITENING (standardization): y_i = (x_i − μ_i) /
+    * √(σ²_i + ε) — the preprocessing that equalizes dimension scales
+    * before distance-based passes when [[dimStats]] shows drift (full
+    * ZCA needs the covariance; diagonal whitening is the production
+    * default). Same two-pass shape as [[centerNormalize]]: the d
+    * (μ, σ²) pairs are INDEX METADATA — computed by [[dimStats]]'
+    * aggregation, collected once, inlined as literal arrays — so the
+    * transform is a shuffle-free codegen'd map over the scan.
+    *
+    * Determinism: μ/σ² come from dimStats' proven bridges; √(σ²+ε) and
+    * the per-element subtract/divide are single IEEE ops with identical
+    * trees in the oracle. */
   def whiten(embeddings: DataFrame, eps: Double = 1e-6): DataFrame = {
     val stats = dimStats(embeddings)
       .select("pos", "mean", "variance").collect()
@@ -2139,14 +1950,8 @@ object Similarity {
     val q = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         VectorFunctions.normExact(col("embedding")).as("q_nrm"))
-    val rk = Window.partitionBy("query_id").orderBy(col("sq_cosine").desc, col("neighbor_id"))
-    broadcast(q).join(cand, col("query_id") =!= col("neighbor_id"))
-      .withColumn("sq_cosine",
-        VectorFunctions.dotExact(col("qe"), col("deq")) / (col("q_nrm") * col("deq_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "sq_cosine", "rank")
-      .orderBy("query_id", "rank")
+    neighbors(broadcast(q).join(cand, col("query_id") =!= col("neighbor_id"))
+      .withColumn("sq_cosine", cosineOf("deq", "deq_nrm")), "sq_cosine", k)
   }
 
   /** Recall@k of the scalar-quantized index ([[sqTopK]]) vs exact brute
@@ -2160,66 +1965,32 @@ object Similarity {
       bruteForceTopK(embeddings, nQueries, k),
       sqTopK(embeddings, nQueries, k))
 
+  /** Recall@k vs nProbe SWEEP for the COMPOSED IVF+PQ index — C47b's
+    * tuning table for the index a deployment actually serves (trained
+    * IVF routes, PQ codes score; this is the configuration whose probe
+    * budget gets picked from measured recall). Quantizer and codebooks
+    * train ONCE (driver-side over the bounded sample, bit-equal across
+    * probes); every probe setting shares one cell-pruned ADC scan keyed
+    * by budget, and every side stays the same |Q|·k bounded evaluation
+    * shape as [[recallAtK]]. */
+  def ivfPqNprobeSweep(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
+      probes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
+    // the ivfNprobeSweep single-frame fusion over the COMPOSED index:
+    // one PQ-encode of the corpus and one probe join serve every budget,
+    // and the two trainings share one corpus count ([[trainIvfPq]])
+    val (cents, (cb, cbSumsq)) = trainIvfPq(embeddings, 16, 8, 16, 2, None, None)
+    val approx = topK(ivfPqScan(embeddings, cents, cb, cbSumsq, nQueries, Right(probes)),
+        Seq("nprobe", "query_id"), "adc_cosine", "neighbor_id", k)
+      .select("nprobe", "query_id", "neighbor_id")
+    sweepRecall(bruteForceTopK(embeddings, nQueries, k), approx, "nprobe", probes)
+  }
+
   /** Recall@k of the composed IVF+PQ index ([[ivfPqTopK]]) vs exact brute
     * force — the recall family now covers EVERY shipped index variant
     * (C43 LSH, C47 trained IVF, C51 prefix, C52 PQ, C62 SQ, and this):
     * IVF+PQ stacks the cell-probe loss on the ADC loss, so neither
     * component's recall alone prices the composition a 100 TB deployment
     * actually runs. Same bounded |Q|·k eval shape as the siblings. */
-  /** Recall@k vs nProbe SWEEP for the COMPOSED IVF+PQ index — C47b's
-    * tuning table for the index a deployment actually serves (trained
-    * IVF routes, PQ codes score; this is the configuration whose probe
-    * budget gets picked from measured recall). Quantizer and codebooks
-    * train ONCE (driver-side over the bounded sample, bit-equal across
-    * probes); each probe setting re-runs only the cell-pruned ADC scan,
-    * and every side stays the same |Q|·k bounded evaluation shape as
-    * [[recallAtK]]. */
-  def ivfPqNprobeSweep(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10,
-      probes: Seq[Int] = Seq(1, 2, 4)): DataFrame = {
-    // the ivfNprobeSweep single-frame fusion over the COMPOSED index:
-    // one PQ-encode of the corpus and one probe join serve every budget
-    // (the per-budget plan previously re-instantiated the whole encode
-    // subtree — the most expensive map stage of this operator — once per
-    // probe setting, and the truth three times)
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
-    val cents = trainCentroids(embeddings)
-    val (cb, cbSumsq) = trainPqCodebooks(embeddings, nSub = 8, codebookSize = 16, iters = 2)
-    val nSub = cb.length
-    val sub = cb.head.head.length
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val codeCols = (0 until nSub).map(j => pqCode(j, sub, cb, cbSumsq).as(s"code_$j"))
-    val encoded = feat
-      .withColumn("cell",
-        element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid"))
-      .select(Seq(col("vec_id").as("neighbor_id"), col("cell")) ++ codeCols: _*)
-      .withColumn("recon", concat((0 until nSub).map { j =>
-        element_at(typedlit(cb(j)), col(s"code_$j") + 1)
-      }: _*))
-      .withColumn("recon_nrm",
-        sqrt(VectorFunctions.dotExact(col("recon"), col("recon"))))
-    val qprobes = feat.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("q_nrm"),
-        posexplode(transform(cellRank(cents, col("embedding"), col("nrm")),
-          s => s.getField("cid"))).as(Seq("p0", "cell")))
-      .withColumn("nprobe", explode(typedlit(probes)))
-      .filter(col("p0") + 1 <= col("nprobe"))
-      .drop("p0")
-    val rk = Window.partitionBy("nprobe", "query_id")
-      .orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    val approx = broadcast(qprobes)
-      .join(encoded, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_cosine",
-        VectorFunctions.dotExact(col("qe"), col("recon")) / (col("q_nrm") * col("recon_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("nprobe", "query_id", "neighbor_id")
-    sweepRecall(bruteForceTopK(embeddings, nQueries, k), approx, "nprobe", probes)
-  }
-
   def ivfPqRecall(embeddings: DataFrame, nQueries: Int = 8, k: Int = 10): DataFrame =
     recallAtK(
       bruteForceTopK(embeddings, nQueries, k),

@@ -2,12 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import scala.collection.mutable
-
 import graft.operators.{IhcAttribution, Journeys}
 import graft.sources.{Manifest, Tables}
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -15,7 +12,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * incremental delta bit-identical to from-scratch (reference
   * `main.py:299-378`, `db_utils.py:260-302`), and run-level crash
   * consistency (the SQLite-transaction analog, `db_utils.py:185-225`). */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with SparkJobs {
 
   private val stateTables =
     Seq("attribution", "processed_conversions", "report_base", "report",
@@ -27,23 +24,6 @@ class PipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2))
       .toSeq
-
-  /** The Spark jobs `body` launches, in start order. */
-  private def jobsOf[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
-    val sc = spark.sparkContext
-    val started = mutable.ArrayBuffer.empty[SparkListenerJobStart]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.synchronized(started += e)
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBusAccess.drain(sc)
-      (out, started.synchronized(started.toSeq))
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** A job outside any SQL execution: in a pipeline run, only a parquet
     * read without a schema (footer inference) launches one. */

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.Similarity
 
-class SimilaritySpec extends SparkSpec {
+class SimilaritySpec extends SparkSpec with SparkJobs {
   import spark.implicits._
 
   // vec 0 == vec 20 (identical), others random-ish but deterministic
@@ -681,5 +681,27 @@ class SimilaritySpec extends SparkSpec {
     val init = Similarity.initialCentroids(embTable, 8)
     assert(init.zip(dist).exists { case ((_, iv, _), (_, xv, _)) =>
       !java.util.Arrays.equals(iv, xv) })
+  }
+
+  test("job budgets: each ANN operator builds and collects within its Spark job budget") {
+    // each budget is the operator's measured job count on this fixture;
+    // ivfPqNprobeSweep's trainings must share one corpus count (a second
+    // count is two more jobs, past its budget)
+    val embTable = graft.sources.Tables.embeddings(spark, sfDir)
+    val budgets = Seq[(String, () => org.apache.spark.sql.DataFrame, Int)](
+      ("graphSearch", () => Similarity.graphSearch(embTable), 44),
+      ("graphBeamSweep", () => Similarity.graphBeamSweep(embTable), 51),
+      ("filteredGraphSearch", () => Similarity.filteredGraphSearch(embTable), 52),
+      ("ivfTopKTrained", () => Similarity.ivfTopKTrained(embTable), 8),
+      ("ivfNprobeSweep", () => Similarity.ivfNprobeSweep(embTable), 15),
+      ("ivfPqTopK", () => Similarity.ivfPqTopK(embTable), 9),
+      ("ivfPqResidualTopK", () => Similarity.ivfPqResidualTopK(embTable), 9),
+      ("ivfPqNprobeSweep", () => Similarity.ivfPqNprobeSweep(embTable), 17))
+    val over = budgets.flatMap { case (name, build, budget) =>
+      val (_, jobs) = jobsOf(build().collect())
+      info(s"$name: ${jobs.size} jobs (budget $budget)")
+      if (jobs.size > budget) Some(s"$name: ${jobs.size} jobs, budget $budget") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
   }
 }
