@@ -7265,9 +7265,6 @@ SELECT CAST(shard AS BIGINT) AS shard,
 FROM a GROUP BY shard
 ORDER BY shard"""
 
-  /** Index-selection dashboard: each approximate index's overall
-    * recall@10 vs brute force, aggregated from the SAME per-query
-    * recall chains the gated rows run. Mirrors Similarity.indexCompare. */
   /** The pq/sq full ADC scan: every query scores the whole corpus minus
     * itself. */
   private def fullScanCountSql: String =
@@ -7276,7 +7273,7 @@ ORDER BY shard"""
   /** Candidates the trained-IVF probe join scores (shared by ivf,
     * ivf_pq and ivf_pq_res — same quantizer, same probe budget):
     * |probes ⋈ assigned| minus self rows, lockstep with
-    * `Similarity.probeCandidates(…, cents16, 8, 2).count()`. */
+    * `Similarity.ivfScan(embeddings, cents16, 8, Left(2)).count()`. */
   private def ivfCandCountSql: String = trainedQuantBase(2) + s"""
 , asgC AS (
   SELECT vec_id, cid AS cell FROM (
@@ -7368,6 +7365,9 @@ FROM q JOIN c ON q.bucket = c.bucket AND query_id <> neighbor_id"""
     "WITH " + t.stripPrefix(",").trim
   }
 
+  /** Index-selection dashboard: each approximate index's overall
+    * recall@10 vs brute force, aggregated from the SAME per-query
+    * recall chains the gated rows run. Mirrors Similarity.indexCompare. */
   val annIndexCompare: String = {
     // Every candidate chain MATERIALIZES EXACTLY ONCE as a top-level
     // 1-row CTE, and the per-family rows join the scalar back in (the

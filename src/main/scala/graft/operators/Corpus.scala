@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Corpus-curation operators for training-data pipelines: winnowing
   * fingerprints (MOSS-style robust near-dup/overlap detection) and
@@ -516,10 +516,28 @@ object Corpus {
     * the read-back quantizer is bit-equal to the trained one. */
   private def readQuantizer(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, qTag: String): Array[(Long, Array[Float], Double)] =
-    spark.read.parquet(s"$stateDir/$qTag").collect()
+    readIndex(spark, QuantizerSchema, stateDir, Seq(qTag)).collect()
       .map(r => Similarity.withNorm(
         r.getAs[Long]("cid"), r.getSeq[Float](r.fieldIndex("embedding")).toArray))
       .sortBy(_._1)
+
+  /** The schemas the embedding-index writers produce: the quantizer
+    * ([[refreshEmbeddingIndex]]), the codebooks ([[initEmbeddingCodebooks]]),
+    * the PQ codes ([[encodeCellCodes]]) and the base columns of the cells
+    * dirs ([[assignCells]]). Reads that pass them run no parquet
+    * footer-inference job. The cells dirs also carry the declared
+    * predicate columns, typed as ingested, so reads that need those infer. */
+  private val QuantizerSchema = StructType.fromDDL("cid BIGINT, embedding ARRAY<FLOAT>")
+  private val CodebookSchema =
+    StructType.fromDDL("j INT, code INT, sub ARRAY<FLOAT>, sumsq DOUBLE")
+  private val CodesSchema = StructType.fromDDL("doc_id BIGINT, cell BIGINT, codes ARRAY<INT>")
+  private val CellsSchema =
+    StructType.fromDDL("doc_id BIGINT, cell BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE")
+
+  /** The index dirs `tags` under `stateDir`, read with their writer's `schema`. */
+  private def readIndex(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+      stateDir: String, tags: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(tags.map(t => s"$stateDir/$t"): _*)
 
   /** The DECLARED predicate columns of a corpus embedding index — the
     * set the occupancy sidecars are keyed by and the only columns
@@ -583,14 +601,15 @@ object Corpus {
   }
 
   /** The DISTINCT probed cells of a probe frame — bounded by the
-    * quantizer size K (index metadata), collected so every cells/codes
-    * parquet read takes `cell IN (…)` PUSHED to the scan: on the
+    * quantizer size K (index metadata), collected (|Q|·nProbe rows, made
+    * distinct on the driver: no shuffle) so every cells/codes parquet
+    * read takes `cell IN (…)` PUSHED to the scan: on the
     * cell-clustered dirs [[writeCellsAndOcc]] writes, row-group stats
     * prune the read to the probed cells. The probes JOIN still does the
     * per-query pairing; the pushed filter is what keeps a 100 TB index
     * from being fully scanned per query batch. */
   private def probedCells(probes: DataFrame): Seq[Long] =
-    probes.select("cell").distinct().collect().map(_.getLong(0)).toSeq
+    probes.select("cell").collect().map(_.getLong(0)).distinct.toSeq
 
   /** Bring the persisted EMBEDDING index (coarse quantizer + per-batch
     * cell assignments) up to date with the committed corpus — the
@@ -789,8 +808,7 @@ object Corpus {
     if (cellDirs.isEmpty)
       throw new java.io.IOException(
         s"no embedding index cells at $stateDir — run refreshEmbeddingIndex first")
-    (readQuantizer(spark, stateDir, qTag),
-      spark.read.parquet(cellDirs.map(d => s"$stateDir/$d"): _*))
+    (readQuantizer(spark, stateDir, qTag), readIndex(spark, CellsSchema, stateDir, cellDirs))
   }
 
   /** Top-k SEMANTIC SEARCH against the committed corpus's embedding
@@ -920,11 +938,12 @@ object Corpus {
     meta.get(EmbResidualKey).contains("1")
 
   /** The frozen embedding-index codebooks ([[initEmbeddingCodebooks]]):
-    * (codebooks, decimal-exact |entry|² per entry) — bounded metadata. */
+    * (codebooks, decimal-exact |entry|² per entry) — bounded metadata,
+    * grouped by subspace and sorted by code on the driver. */
   private def readEmbCodebooks(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, pqTag: String)
     : (Array[Array[Array[Float]]], Array[Array[Double]]) = {
-    val rows = spark.read.parquet(s"$stateDir/$pqTag").orderBy("j", "code").collect()
+    val rows = readIndex(spark, CodebookSchema, stateDir, Seq(pqTag)).collect()
     val bySub = rows.groupBy(_.getAs[Int]("j"))
     val cb = Array.tabulate(bySub.size)(j =>
       bySub(j).sortBy(_.getAs[Int]("code"))
@@ -1069,13 +1088,11 @@ object Corpus {
       "embcodes/" + cellTag.stripPrefix("embcells/")
     val (cold, hot) = cellDirs.partition(c => live.contains(codeTag(c)))
     val coldCodes =
-      if (cold.nonEmpty)
-        Some(spark.read.parquet(cold.map(c => s"$stateDir/${codeTag(c)}"): _*))
+      if (cold.nonEmpty) Some(readIndex(spark, CodesSchema, stateDir, cold.map(codeTag)))
       else None
     val hotCodes =
       if (hot.nonEmpty)
-        Some(encodeCellCodes(
-          spark.read.parquet(hot.map(c => s"$stateDir/$c"): _*), cb, cbSumsq,
+        Some(encodeCellCodes(readIndex(spark, CellsSchema, stateDir, hot), cb, cbSumsq,
           residCents))
       else None
     (coldCodes, hotCodes) match {
@@ -1153,9 +1170,8 @@ object Corpus {
       .filter(col("arn") <= rerank)
       .select("query_id", "doc_id", "qe", "q_nrm", "adc_cosine"))
     // bounded |Q|·rerank shortlist → In-pushed raw read for the re-rank
-    val ids = short.select("doc_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val raw = spark.read.parquet(cellDirs.map(d => s"$stateDir/$d"): _*)
+    val ids = short.select("doc_id").collect().map(_.getLong(0)).distinct.toSeq
+    val raw = readIndex(spark, CellsSchema, stateDir, cellDirs)
       .filter(col("doc_id").isInCollection(ids))
       .select("doc_id", "embedding", "nrm")
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("doc_id"))
@@ -1389,9 +1405,8 @@ object Corpus {
         idx.predCols.map(col) ++
         Seq(col("qe"), col("q_nrm"), col("adc_cosine")): _*))
     // bounded |Q|·rerank shortlist → In-pushed raw read for the re-rank
-    val ids = short.select("doc_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val raw = spark.read.parquet(idx.cellDirs.map(d => s"$stateDir/$d"): _*)
+    val ids = short.select("doc_id").collect().map(_.getLong(0)).distinct.toSeq
+    val raw = readIndex(spark, CellsSchema, stateDir, idx.cellDirs)
       .filter(col("doc_id").isInCollection(ids))
       .select("doc_id", "embedding", "nrm")
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("doc_id"))
@@ -1447,7 +1462,7 @@ object Corpus {
         if (cellDirs.isEmpty) batch
         else {
           val cents = readQuantizer(spark, stateDir, qTag)
-          val index = spark.read.parquet(cellDirs.map(d => s"$stateDir/$d"): _*)
+          val index = readIndex(spark, CellsSchema, stateDir, cellDirs)
           val featB = batch.select(
             col("doc_id"), col("embedding"),
             graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm"))

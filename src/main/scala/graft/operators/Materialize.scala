@@ -26,13 +26,13 @@ import org.apache.spark.sql.DataFrame
   */
 private[graft] object Materialize {
   def apply(df: DataFrame): DataFrame = {
-    // Plan observability for the optimization loop: the per-hop /
-    // per-pass jobs these checkpoints run never appear in the FINAL
-    // query's explain() (lineage is truncated), so claims about their
-    // join strategies and exchange counts would otherwise be
-    // unverifiable. With GRAFT_EXPLAIN_MATERIALIZE set, every
-    // materialized frame's formatted physical plan prints before the
-    // checkpoint job runs. Off (the default) this is one env lookup.
+    // Plan observability for the optimization loop: the per-pass jobs
+    // these checkpoints run never appear in the FINAL query's explain()
+    // (lineage is truncated), so claims about their join strategies and
+    // exchange counts would otherwise be unverifiable. With
+    // GRAFT_EXPLAIN_MATERIALIZE set, every materialized frame's formatted
+    // physical plan prints before the checkpoint job runs. Off (the
+    // default) this is one env lookup.
     if (sys.env.contains("GRAFT_EXPLAIN_MATERIALIZE")) {
       println(s"---------- materialize #${counter.incrementAndGet()} ----------")
       df.explain("formatted")

@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (SURVEY §2.C6-C7).
@@ -172,12 +174,12 @@ object Similarity {
     val fullScan = nQueries.toLong * (n - 1)
     val (gq, gEdges, gEntries, gNodes) =
       graphSearchParts(embeddings, 5, 0, 2, nQueries, Some(centsGraph))
-    // navigate's last hop already returns a materialized frame — no
-    // second checkpoint copy; the three candidate counts (probe join,
-    // LSH buckets, graph eval set) run as ONE job with three parallel
-    // aggregate subtrees instead of three sequential driver actions.
-    val gEval = navigate(gq, gEdges, gq.select(col("query_id")).crossJoin(broadcast(gEntries)),
-      gNodes, Seq("query_id"), lit(4), 3)
+    // navigate returns its eval set as a local frame (the driver already
+    // holds it), so ranking and counting it re-run no navigation; the
+    // three candidate counts (probe join, LSH buckets, graph eval set)
+    // run as ONE action with three parallel aggregate subtrees instead
+    // of three sequential driver actions.
+    val gEval = navigate(gq, gEdges, gEntries, gNodes, Seq("query_id"), lit(4), 3)
     def counted(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("c")).select(lit(name).as("f"), col("c"))
     val candBy = counted("ivf", ivfScan(embeddings, cents16, nQueries, Left(2)))
@@ -1361,6 +1363,14 @@ object Similarity {
       .orderBy("vec_id", "rank")
   }
 
+  /** The materialized (src, dst) adjacency of [[knnGraph]] the graph
+    * searches navigate — unordered, as navigation reads it by `src`. */
+  private def knnEdges(
+      embeddings: DataFrame, k: Int, nCentroids: Int, iters: Int,
+      cents: Array[(Long, Array[Float], Double)]): DataFrame =
+    Materialize(topK(cellScoredPairs(embeddings, nCentroids, iters, Some(cents)),
+      Seq("src"), "cosine", "dst", k).select("src", "dst"))
+
   /** GRAPH-BASED approximate search (the DiskANN/NSG/HNSW-layer-0 search
     * shape) — greedy BEAM SEARCH over the [[knnGraph]] proximity graph:
     * start at a fixed entry node, repeatedly expand the current beam's
@@ -1387,8 +1397,9 @@ object Similarity {
     * Scale shape: evaluation volume is bounded by construction —
     * ≤ K + hops·beam·graphK nodes per query are ever scored (the whole
     * point of graph ANN: per-query work independent of corpus size once
-    * the graph exists); each hop is one broadcast-able frontier join
-    * against the edge list plus a per-query rank over ≤ that many rows.
+    * the graph exists); that state is held on the driver, and each hop
+    * reads only the frontier's adjacency rows and the fresh nodes' vectors
+    * ([[navigate]]), ranking ≤ that many rows per query locally.
     * The graph build is [[knnGraph]]'s near-linear cell-blocked pass;
     * a deployment persists graph + entry table once per index build. */
   def graphSearch(
@@ -1398,13 +1409,13 @@ object Similarity {
       centsPre: Option[Array[(Long, Array[Float], Double)]] = None): DataFrame = {
     val (q, edges, entries, nodes) =
       graphSearchParts(embeddings, graphK, nCentroids, iters, nQueries, centsPre)
-    rankBeamEval(navigate(q, edges, q.select(col("query_id")).crossJoin(broadcast(entries)),
-      nodes, Seq("query_id"), lit(beam), hops), k)
+    rankBeamEval(navigate(q, edges, entries, nodes, Seq("query_id"), lit(beam), hops), k)
   }
 
   /** The shared index-at-rest of [[graphSearch]] — (queries, edge list,
-    * entry nodes, scored-node side), built ONCE per call and then only
-    * navigated ([[graphBeamSweep]] navigates every beam width over it). */
+    * entry nodes with their vectors, scored-node side), built ONCE per
+    * call and then only navigated ([[graphBeamSweep]] navigates every
+    * beam width over it). */
   private def graphSearchParts(
       embeddings: DataFrame, graphK: Int, nCentroids: Int, iters: Int,
       nQueries: Int, centsPre: Option[Array[(Long, Array[Float], Double)]])
@@ -1415,66 +1426,101 @@ object Similarity {
     // the graph build reuses THIS training run's centroids (the same
     // deterministic Lloyd result — passing them just skips a second
     // training pass per query)
-    val edges = knnGraph(embeddings, graphK, nCentroids, iters, Some(cents))
-      .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
-      .transform(Materialize(_))
+    val edges = knnEdges(embeddings, graphK, nCentroids, iters, cents)
     // per-cell entry representatives, from the SAME deterministic
     // quantizer the graph build assigns with
     val entries = feat
       .withColumn("cell", cellOf(cents))
-      .groupBy("cell").agg(min(col("vec_id")).as("node"))
-      .select("node")
+      .groupBy("cell").agg(min(col("vec_id")).as("node"),
+        min_by(col("embedding"), col("vec_id")).as("ne"))
+      .select("node", "ne")
     // no precomputed norm on the node side: the navigations score only
-    // their bounded visited sets, so the norm is evaluated post-join on
-    // those rows instead of on every corpus row in every hop's plan
+    // their bounded visited sets, so the norm is evaluated on those rows
+    // instead of on every corpus row
     val nodes = embeddings.select(col("vec_id").as("node"), col("embedding").as("ne"))
     (q, edges, entries, nodes)
   }
 
   /** The beam navigation every graph search shares, against an
-    * already-built adjacency (`src`, `dst`): score the `seeds`, then
-    * `hops` rounds of frontier expansion — each hop keeps the `width`
-    * best-scored nodes per `keys` group (ties on node), expands them
-    * through `adjacency`, drops nodes the group has already seen, and
-    * scores only the fresh ones. Returns the full SCORED eval set, every
-    * (keys…, node, cosine) the search ever touched, so a caller derives
-    * top-k AND the candidates-scanned count ([[indexCompare]]) from ONE
-    * navigation.
+    * already-built adjacency (`src`, `dst`): every `q` row (keys…, qe,
+    * q_nrm) is seeded with every `entries` node (node, ne) and scored,
+    * then `hops` rounds of frontier expansion — each hop keeps the
+    * `width` best-scored nodes per `keys` group (ties on node), expands
+    * them through `adjacency`, drops nodes the group has already seen,
+    * and scores only the fresh ones. Returns the full SCORED eval set,
+    * every (keys…, node, cosine) the search ever touched, so a caller
+    * derives top-k AND the candidates-scanned count ([[indexCompare]])
+    * from ONE navigation.
     *
     * The keys carry the setting: unfiltered search is `keys = query_id`
     * over the kNN `edges`; the filtered search navigates its expanded
-    * `fedges`; a beam sweep keys (query_id, beam) with `width = beam`, so
-    * every width's eval set is exactly what its standalone navigation
-    * computes while the sweep pays ONE set of hop jobs.
+    * `fedges`; a beam sweep keys (query_id, beam) with `width = beam`
+    * (evaluated per `q` row), so every width's eval set is exactly what
+    * its standalone navigation computes.
     *
-    * The per-query work is bounded by construction (≤ seeds +
-    * hops·width·degree nodes ever touched), so every query-keyed side is
-    * broadcast: each hop streams the materialized adjacency and the corpus
-    * node side map-side instead of exchanging them, and the node norm is
-    * evaluated post-join on the visited rows only (values unchanged —
-    * normExact is a deterministic function of the float array). Each
-    * hop's eval set is materialized, so the plan never re-grows. */
+    * The search state is query-sized (≤ |q|·(entries + hops·width·degree)
+    * rows), so it lives on the driver: `q` is collected once, and the eval
+    * set, the frontier and the seen set are local rows. The beam rank runs
+    * there in Spark's order — cosine DESC (NaN largest, −0.0 = 0.0, nulls
+    * last), then node ASC. Spark jobs only scan the distributed sides: per
+    * hop one `src IN (frontier)` read of the adjacency and one
+    * `node IN (fresh)` read of the node vectors. The cosine is the same
+    * `dotFold / (q_nrm · normExact)` expression, projected by Spark over
+    * the local rows (a projection of a local relation is evaluated on the
+    * driver by the expressions' `nullSafeEval`, which shares its
+    * implementation with their generated code), so the values are
+    * bit-equal. The eval set comes back as a local frame. */
   private def navigate(
-      q: DataFrame, adjacency: DataFrame, seeds: DataFrame, nodes: DataFrame,
+      q: DataFrame, adjacency: DataFrame, entries: DataFrame, nodes: DataFrame,
       keys: Seq[String], width: Column, hops: Int): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val spark = q.sparkSession
+    val nk = keys.size
     val seen = (keys :+ "node").map(col)
-    def scored(ids: DataFrame): DataFrame =
-      broadcast(ids.join(broadcast(q), Seq("query_id")))
-        .join(nodes, Seq("node"))
-        .select(seen :+ (VectorFunctions.dotFold(col("qe"), col("ne")) /
+    // the local pair rows (keys…, node, qe, q_nrm, ne) the cosine projects
+    val pairSchema = StructType(keys.map(q.schema(_)) ++ Seq(nodes.schema("node"),
+      q.schema("qe"), q.schema("q_nrm"), nodes.schema("ne")))
+    def scored(pairs: Seq[Row]): DataFrame =
+      spark.createDataFrame(pairs.asJava, pairSchema).select(seen :+
+        (VectorFunctions.dotFold(col("qe"), col("ne")) /
           (col("q_nrm") * VectorFunctions.normExact(col("ne")))).as("cosine"): _*)
-    val wBeam = Window.partitionBy(keys.map(col): _*).orderBy(col("cosine").desc, col("node"))
-    var eval = scored(seeds).transform(Materialize(_))
-    (1 to hops).foreach { _ =>
-      val frontier = eval.withColumn("__rn", row_number().over(wBeam))
-        .filter(col("__rn") <= width).drop("__rn")
-      val nbrs = broadcast(frontier.select(seen: _*))
-        .join(adjacency, col("node") === col("src"))
-        .select(keys.map(col) :+ col("dst").as("node"): _*).distinct()
-      val fresh = nbrs.join(broadcast(eval.select(seen: _*)), keys :+ "node", "left_anti")
-      eval = eval.unionByName(scored(fresh)).transform(Materialize(_))
+    // (keys…, qe, q_nrm, width) per query row
+    val qRows = q.select(keys.map(col) ++ Seq(col("qe"), col("q_nrm"),
+      width.cast("int").as("width")): _*).collect().toSeq
+    def keyOf(r: Row): Seq[Any] = r.toSeq.take(nk)
+    val qBy = qRows.map(r => keyOf(r) -> r).toMap
+    def pair(qr: Row, node: Any, ne: Any): Row =
+      Row.fromSeq(keyOf(qr) ++ Seq(node, qr.get(nk), qr.get(nk + 1), ne))
+    // `ids` → their `value`s in the distributed `df`: one `key IN (ids)` scan
+    def lookup(df: DataFrame, key: String, value: String, ids: Seq[Any]): Map[Any, Seq[Any]] =
+      if (ids.isEmpty) Map.empty
+      else df.filter(col(key).isInCollection(ids)).select(key, value).collect().toSeq
+        .groupBy(_.get(0)).map { case (k, rs) => k -> rs.map(_.get(1)) }
+    // cosine DESC NULLS LAST in Spark's double order, then node ASC
+    val beamOrder: Ordering[Row] = (a, b) => {
+      val c = (a.isNullAt(nk + 1), b.isNullAt(nk + 1)) match {
+        case (false, false) =>
+          SQLOrderingUtil.compareDoubles(b.getDouble(nk + 1), a.getDouble(nk + 1))
+        case (an, bn) => java.lang.Boolean.compare(an, bn)
+      }
+      if (c != 0) c else a.get(nk).asInstanceOf[Comparable[Any]].compareTo(b.get(nk))
     }
-    eval
+    val seeds = entries.select("node", "ne").collect()
+    var eval: Seq[Row] =
+      scored(qRows.flatMap(qr => seeds.map(e => pair(qr, e.get(0), e.get(1))))).collect().toSeq
+    (1 to hops).foreach { _ =>
+      val byKey = eval.groupBy(keyOf)
+      val frontier = qRows.flatMap(qr =>
+        byKey.getOrElse(keyOf(qr), Nil).sorted(beamOrder).take(qr.getInt(nk + 2)))
+      val adj = lookup(adjacency, "src", "dst", frontier.map(_.get(nk)).distinct)
+      val visited = eval.map(_.toSeq.take(nk + 1)).toSet
+      val fresh = frontier.flatMap(f => adj.getOrElse(f.get(nk), Nil).map(keyOf(f) :+ _))
+        .distinct.filterNot(visited)
+      val vecs = lookup(nodes, "node", "ne", fresh.map(_.last).distinct)
+      eval = eval ++ scored(fresh.flatMap(kn =>
+        vecs.getOrElse(kn.last, Nil).map(pair(qBy(kn.init), kn.last, _)))).collect()
+    }
+    spark.createDataFrame(eval.asJava, scored(Nil).schema)
   }
 
   /** Rank a [[navigate]] eval set to the final (query_id, neighbor_id,
@@ -1501,11 +1547,9 @@ object Similarity {
     // ALL beam widths navigate in ONE frame keyed (query_id, beam) — and
     // the brute-force truth appears once in the final plan instead of
     // being recomputed per beam width
-    val seeds = q.select(col("query_id"))
-      .withColumn("beam", explode(typedlit(beams)))
-      .crossJoin(broadcast(entries))
     val keys = Seq("query_id", "beam")
-    val eval = navigate(q, edges, seeds, nodes, keys, col("beam"), 3)
+    val eval = navigate(q.withColumn("beam", explode(typedlit(beams))), edges, entries, nodes,
+      keys, col("beam"), 3)
     val approx = topK(eval.filter(col("node") =!= col("query_id")), keys, "cosine", "node", k)
       .select(col("query_id"), col("beam"), col("node").as("neighbor_id"))
     sweepRecall(bruteForceTopK(embeddings, nQueries, k), approx, "beam", beams)
@@ -1565,14 +1609,12 @@ object Similarity {
     val cents = trainAtAutoCellCount(embeddings, nCentroids, iters)
     val feat = normed(embeddings, "label")
     val q = queriesOf(feat, nQueries)
-    val edges = knnGraph(embeddings, graphK, nCentroids, iters, Some(cents))
-      .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
-      .transform(Materialize(_))
-    // the matching-node set: one filtered id column, joined at every hop
-    // (at scale: the predicate's posting list / id index). GUARDED
-    // broadcast: a selective predicate broadcasts (the fast path); a
-    // non-selective one is corpus-sized — past `broadcastCap` the per-hop
-    // semi/anti joins fall back to shuffle joins instead of shipping the
+    val edges = knnEdges(embeddings, graphK, nCentroids, iters, cents)
+    // the matching-node set: one filtered id column, joined into the
+    // expanded edge list below (at scale: the predicate's posting list /
+    // id index). GUARDED broadcast: a selective predicate broadcasts (the
+    // fast path); a non-selective one is corpus-sized — past
+    // `broadcastCap` those semi/anti joins fall back to shuffle joins instead of shipping the
     // whole slice to the driver (row-equal either way, spec-pinned)
     val matching0 = feat.filter(col("label") === targetLabel)
       .select(col("vec_id").as("node")).transform(Materialize(_))
@@ -1584,12 +1626,11 @@ object Similarity {
       .withColumn("cell", cellOf(cents))
       .withColumn("__er", row_number().over(wEntry))
       .filter(col("__er") <= entriesPerCell)
-      .select(col("vec_id").as("node"))
-    // node payloads carry NO precomputed norm: the norm is evaluated
-    // post-join on the ≤|Q|·beam·graphK·(1+graphK) rows the navigation
-    // actually scores, not on every corpus row in every hop's plan
-    // (normExact is a deterministic function of the float array, so the
-    // cosine values are unchanged)
+      .select(col("vec_id").as("node"), col("embedding").as("ne"))
+    // node payloads carry NO precomputed norm: the norm is evaluated on
+    // the ≤|Q|·beam·graphK·(1+graphK) rows the navigation actually
+    // scores, not on every corpus row (normExact is a deterministic
+    // function of the float array, so the cosine values are unchanged)
     val nodes = embeddings.select(col("vec_id").as("node"), col("embedding").as("ne"))
     // ACORN-1 expansion HOISTED out of the hop loop: a node's filtered
     // expansion set depends only on (edges, matching) — never on the
@@ -1600,9 +1641,9 @@ object Similarity {
     //   ∪ {matching out-neighbors of src's NON-matching neighbors}.
     // Per hop the candidate set is then ∪_{s∈frontier} fedges(s) —
     // set-identical to the former oneHop ∪ through (both are deduped
-    // relational images of the same relation), and one broadcast join +
-    // one distinct per hop instead of two distincts, two edge joins and
-    // three matching joins. In a deployment fedges persists per
+    // relational images of the same relation), and one adjacency read
+    // per hop instead of two distincts, two edge joins and three
+    // matching joins. In a deployment fedges persists per
     // (index build, predicate) beside the graph itself — it is the
     // predicate's posting list composed into the adjacency, the same
     // at-rest discipline as the entry table. Cost: one |E|-bounded
@@ -1615,8 +1656,7 @@ object Similarity {
       .select("src", "dst")
       .join(mDst, Seq("dst"), "left_semi")
     val fedges = Materialize(eMatch.unionByName(eThrough).distinct())
-    val eval = navigate(q, fedges, q.select(col("query_id")).crossJoin(broadcast(entries)),
-      nodes, Seq("query_id"), lit(beam), hops)
+    val eval = navigate(q, fedges, entries, nodes, Seq("query_id"), lit(beam), hops)
     rankBeamEval(eval, k, lit(targetLabel).as("label"))
   }
 

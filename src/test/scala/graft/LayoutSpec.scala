@@ -6,7 +6,7 @@ import graft.sources.{Layout, Tables}
 import org.apache.spark.sql.functions._
 
 /** Data-layout + incremental-ingest pipeline plumbing. */
-class LayoutSpec extends SparkSpec {
+class LayoutSpec extends SparkSpec with SparkJobs {
 
   test("clustered write produces contiguous sorted key ranges and bounded files") {
     val dir = Files.createTempDirectory("graft-layout").toString + "/orders"
@@ -1246,6 +1246,31 @@ class LayoutSpec extends SparkSpec {
     // plan's visible scan is the exact re-rank's In-pushed raw read
     pushed(Corpus.semanticTopKAdc(spark, queries, state), "In(doc_id")
     pushed(Corpus.semanticTopKFilteredAdc(spark, queries, state), "In(doc_id")
+  }
+
+  test("job budget: semanticTopKAdc serves encoded and hot cells within its " +
+    "Spark job budget") {
+    // the budget is the measured count: the index reads pass their
+    // writer's schema (no footer-inference job), the codebooks are sorted
+    // on the driver, and the probed cells and shortlist ids are made
+    // distinct on the driver (no shuffle)
+    import graft.operators.Corpus
+    import spark.implicits._
+    val state = Files.createTempDirectory("graft-adcjobs").toString
+    assert(Corpus.ingestIncremental(spark,
+      (0L to 19L).map(labeledDoc).toDF(labeledCols: _*), state) === 20L)
+    assert(Corpus.refreshEmbeddingIndex(spark, state) === 1L)
+    Corpus.initEmbeddingCodebooks(spark, state)
+    assert(Corpus.encodeEmbeddingIndex(spark, state) === 1L)
+    // ingested after the encode pass: served hot, encoded on the fly
+    assert(Corpus.ingestIncremental(spark,
+      (20L to 27L).map(labeledDoc).toDF(labeledCols: _*), state) === 8L)
+    assert(Corpus.refreshEmbeddingIndex(spark, state) === 1L)
+    val queries = Seq((100L, denseHot(7)), (101L, denseHot(22))).toDF("query_id", "embedding")
+    val (rows, jobs) = jobsOf(Corpus.semanticTopKAdc(spark, queries, state).collect())
+    assert(rows.nonEmpty)
+    info(s"semanticTopKAdc: ${jobs.size} jobs (budget 12)")
+    assert(jobs.size <= 12, s"semanticTopKAdc: ${jobs.size} jobs, budget 12")
   }
 
   test("occupancy backfill: a labeled index whose sidecars are lost is " +

@@ -686,12 +686,15 @@ class SimilaritySpec extends SparkSpec with SparkJobs {
   test("job budgets: each ANN operator builds and collects within its Spark job budget") {
     // each budget is the operator's measured job count on this fixture;
     // ivfPqNprobeSweep's trainings must share one corpus count (a second
-    // count is two more jobs, past its budget)
+    // count is two more jobs, past its budget), and the graph searches
+    // hold their search state on the driver (a distributed frontier
+    // costs each hop its own checkpoint, broadcast and shuffle jobs)
     val embTable = graft.sources.Tables.embeddings(spark, sfDir)
     val budgets = Seq[(String, () => org.apache.spark.sql.DataFrame, Int)](
-      ("graphSearch", () => Similarity.graphSearch(embTable), 44),
-      ("graphBeamSweep", () => Similarity.graphBeamSweep(embTable), 51),
-      ("filteredGraphSearch", () => Similarity.filteredGraphSearch(embTable), 52),
+      ("graphSearch", () => Similarity.graphSearch(embTable), 19),
+      ("graphBeamSweep", () => Similarity.graphBeamSweep(embTable), 26),
+      ("filteredGraphSearch", () => Similarity.filteredGraphSearch(embTable), 27),
+      ("indexCompare", () => Similarity.indexCompare(embTable), 67),
       ("ivfTopKTrained", () => Similarity.ivfTopKTrained(embTable), 8),
       ("ivfNprobeSweep", () => Similarity.ivfNprobeSweep(embTable), 15),
       ("ivfPqTopK", () => Similarity.ivfPqTopK(embTable), 9),
@@ -703,5 +706,46 @@ class SimilaritySpec extends SparkSpec with SparkJobs {
       if (jobs.size > budget) Some(s"$name: ${jobs.size} jobs, budget $budget") else None
     }
     assert(over.isEmpty, over.mkString("; "))
+  }
+
+  test("parallelism invariance: the driver-held searches return the default " +
+    "session's rows at 7 shuffle partitions, AQE off and no broadcast joins") {
+    import graft.operators.Corpus
+    import graft.sources.Tables
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions._
+    val t0 = System.nanoTime()
+    val hostile = spark.newSession()
+    hostile.conf.set("spark.sql.shuffle.partitions", "7")
+    hostile.conf.set("spark.sql.adaptive.enabled", "false")
+    hostile.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // one corpus embedding index at rest (codebooks, codes), served from
+    // both sessions
+    val state = java.nio.file.Files.createTempDirectory("graft-invariance").toString
+    val docs = Tables.embeddings(spark, sfDir).select(
+      col("vec_id").as("doc_id"), col("vec_id").cast("string").as("text"),
+      lit("en").as("lang"), lit("synthetic").as("source"), lit(24L).as("n_chars"),
+      col("embedding"), col("label"))
+    Corpus.ingestIncremental(spark, docs, state)
+    Corpus.refreshEmbeddingIndex(spark, state)
+    Corpus.initEmbeddingCodebooks(spark, state)
+    Corpus.encodeEmbeddingIndex(spark, state)
+    def emb(s: SparkSession): DataFrame = Tables.embeddings(s, sfDir)
+    val cases = Seq[(String, SparkSession => DataFrame)](
+      ("graphSearch", s => Similarity.graphSearch(emb(s))),
+      ("graphBeamSweep", s => Similarity.graphBeamSweep(emb(s))),
+      ("filteredGraphSearch", s => Similarity.filteredGraphSearch(emb(s), broadcastCap = 0)),
+      ("indexCompare", s => Similarity.indexCompare(emb(s))),
+      ("semanticTopKAdc", s => Corpus.semanticTopKAdc(s, emb(s).filter(col("vec_id") < 8)
+        .select(col("vec_id").as("query_id"), col("embedding")), state)))
+    info(f"index build: ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    cases.foreach { case (name, run) =>
+      val t = System.nanoTime()
+      val base = run(spark).collect().toSeq
+      assert(base.nonEmpty, name)
+      assert(run(hostile).collect().toSeq === base, s"$name: rows differ")
+      info(f"$name: ${(System.nanoTime() - t) / 1e9}%.1f s")
+    }
+    info(f"total: ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 }
