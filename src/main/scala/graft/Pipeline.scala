@@ -4,6 +4,8 @@ import graft.operators.{IhcAttribution, Journeys, Reporting}
 import graft.sources.{Layout, Manifest, Tables}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** End-to-end pipeline runner with persisted, idempotent, CRASH-CONSISTENT
   * write-back — the Spark analog of the reference's orchestration
@@ -30,10 +32,11 @@ import org.apache.spark.sql.functions._
   *     conversion BEFORE the journey window runs (exact, by per-user
   *     independence) — a daily run attributes the day's users, not every
   *     user ever seen;
-  *   - the channel report is maintained incrementally: the run aggregates
-  *     only its delta and outer-merges the exact-decimal partial sums into
-  *     the committed `report_base` state by (channel, date) — bit-identical
-  *     to re-aggregating all history, at O(|channels|·|dates|) merge cost;
+  *   - the channel report is maintained incrementally: the run folds only
+  *     its staged delta rows, which carry their own date, cost and
+  *     revenue, into the committed exact-decimal `report_base` state by
+  *     (channel, date) in one aggregate — bit-identical to re-aggregating
+  *     all history, at O(|channels|·|dates| + delta) cost;
   *   - the committed row total rides in manifest METADATA, so no run ever
   *     re-scans prior attribution dirs (spec-proven: PipelineSpec hides
   *     run 1's attribution data and run 2 still succeeds).
@@ -43,9 +46,11 @@ import org.apache.spark.sql.functions._
   *   - `attribution/<tag>/` — the delta rows (conv_id, session_id,
   *     channel_name, ihc); the analog of the reference's
   *     `attribution_customer_journey` table (`challenge_db_create.sql`).
+  *     Each row also carries its report inputs (event_date, cost,
+  *     revenue); the public readers project the four attribution columns.
   *   - `processed_conversions/<tag>/` — the manifest of conv_ids this run
   *     attributed (tracked for ALL conversions incl. journeyless ones).
-  *   - `report_base/<tag>/` — the merged exact-decimal report state.
+  *   - `report_base/<tag>/` — the folded exact-decimal report state.
   *   - `report/<tag>/` + `channel_reporting_csv/<tag>/` — the published
   *     channel report artifacts (`reporting.py:105-168`).
   * and then publishes all five in ONE atomic [[graft.sources.Manifest]]
@@ -66,30 +71,33 @@ import org.apache.spark.sql.functions._
   * with the DEFAULT configuration (no grace-period tuning required).
   *
   * Scale notes: the manifest is driver-side metadata (bytes per run, never
-  * row data). Everything else is the same shuffle-minimal plans as the
-  * query surface.
+  * row data). The delta's (conv_id, user_id) pairs are held on the driver:
+  * delta-sized, as a broadcast of them would be. Everything else is the
+  * same shuffle-minimal plans as the query surface.
   *
   * Job budget: at daily-delta size a run's latency is set by per-job
-  * scheduling, not by compute, so a delta run launches at most 18 Spark
-  * jobs and a no-op re-run at most 4 (asserted in PipelineSpec). On the
-  * default layout a delta run takes 17:
-  *   - 1 footer read of `events`, the run's only schema inference (state
-  *     dirs are read with their known DDLs);
-  *   - 2 for the missing-conversion checkpoint: the broadcast of the
-  *     processed ids and the checkpoint, which also observes the candidate
-  *     and missing counts;
-  *   - 5 for the staged delta: the broadcasts of the delta's users and
-  *     conversion ids, the per-user assignment shuffle, the per-conversion
-  *     IHC shuffle and the write, which observes the row count that enters
-  *     the committed total;
-  *   - 1 for the processed-conversions write, from the checkpoint;
-  *   - 6 for the merged report base: three broadcasts and two shuffles for
-  *     the delta's joins, its aggregate and the outer merge with the
-  *     committed base, and the write;
+  * scheduling and planning, not by compute, so a delta run launches at
+  * most 10 Spark jobs and a no-op re-run at most 2, none of them a schema
+  * inference (asserted in PipelineSpec). On the default layout a delta
+  * run takes 10:
+  *   - 0 to resolve schemas: the `events` footer is read on the driver
+  *     and state dirs are read with their known DDLs;
+  *   - 2 to select the missing conversions: the broadcast of the processed
+  *     ids and the collect of the missing (conv_id, user_id) pairs, which
+  *     also observes the candidate count (the first run, with no processed
+  *     ids, skips the broadcast);
+  *   - 3 for the staged delta: the per-user assignment shuffle, the
+  *     per-conversion IHC shuffle and the write, which observes the row
+  *     count that enters the committed total — the delta's users and
+  *     conversions restrict it as literal filters, with no broadcast job;
+  *   - 1 for the processed-conversions write, from the driver-held ids;
+  *   - 2 for the report base: the shuffle of the one aggregate that folds
+  *     the staged delta into the committed base, and the write;
   *   - 2 for the report: one sorted partition written as parquet and as
   *     the CSV artifact.
-  * A no-op re-run is the events footer read and the checkpoint's two jobs.
-  * An OCC retry adds the jobs of its re-merge.
+  * A no-op re-run is the missing-conversion selection's two jobs. An OCC
+  * retry adds a read of the race winner's ids among this run's, the two
+  * re-staging writes if they overlap, and the report's four jobs.
   */
 object Pipeline {
 
@@ -125,7 +133,7 @@ object Pipeline {
     * that schema. */
   private def readDirsOrEmpty(
       spark: SparkSession, dirs: Seq[String], ddl: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    val schema = StructType.fromDDL(ddl)
     if (dirs.nonEmpty) spark.read.schema(schema).parquet(dirs: _*)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
@@ -137,6 +145,12 @@ object Pipeline {
   // the schemas of the state tables, as the pipeline writes them
   private val AttributionDdl =
     "conv_id BIGINT, session_id BIGINT, channel_name STRING, ihc DOUBLE"
+  // a run stages its delta with the row's report inputs beside the
+  // attribution columns; readers of the persisted table project the DDL
+  // above, and compaction writes it
+  private val StagedAttributionDdl =
+    AttributionDdl + ", event_date DATE, cost DOUBLE, revenue DOUBLE"
+  private val StagedColumns = StructType.fromDDL(StagedAttributionDdl).fieldNames.toSeq
   private val ProcessedDdl = "conv_id BIGINT"
   private val ReportBaseDdl =
     "channel_name STRING, date DATE, cost DECIMAL(38,6), ihc DECIMAL(38,6), " +
@@ -199,10 +213,13 @@ object Pipeline {
     * user bucketing keeps journey assignment shuffle-free (the bucketed
     * scan merges each bucket's files across date partitions, so the scan
     * still reports user_id hash partitioning). At 100 TB this is the
-    * difference between a daily run scanning a day and scanning years. */
+    * difference between a daily run scanning a day and scanning years.
+    * Sessions are persisted with their cost
+    * ([[graft.sources.Tables.deriveCostedSessions]]), so a run over this
+    * layout never reads the raw events. */
   def prepareBucketed(
       spark: SparkSession, sfDir: String, stateDir: String, nBuckets: Int = 8): Unit = {
-    Tables.sessions(spark, sfDir).write.mode("overwrite")
+    Tables.deriveCostedSessions(Tables.events(spark, sfDir)).write.mode("overwrite")
       .partitionBy("event_date")
       .bucketBy(nBuckets, "user_id").sortBy("user_id")
       .option("path", s"$stateDir/bucketed/sessions")
@@ -218,12 +235,13 @@ object Pipeline {
     spark.catalog.tableExists(bucketedName(stateDir, "sessions")) &&
       spark.catalog.tableExists(bucketedName(stateDir, "conversions"))
 
-  /** The extract a run reads. The SAME extract feeds candidate selection,
-    * assignment, and the report — if the bucketed layout exists, all three
-    * use it (mixing a stale bucketed extract with a fresh raw one could
-    * mark conversions processed without attributing them). Events are read
-    * once: conversions, sessions and costs are projections of that one
-    * read (the bucketed layout needs it for the costs only).
+  /** The extract a run reads. The SAME extract feeds candidate selection
+    * and assignment — if the bucketed layout exists, both use it (mixing a
+    * stale bucketed extract with a fresh raw one could mark conversions
+    * processed without attributing them). Events are read once:
+    * conversions and sessions are projections of that one read. Sessions
+    * carry their own `cost`, so an assigned row holds every input of its
+    * report row (`event_date`, `cost`, `revenue`).
     *
     * `[startDate, endDate]` mirrors the reference's conversion extract
     * window (db_utils.py:67-103); the filters keep the bucketed scan's
@@ -237,28 +255,33 @@ object Pipeline {
       startDate: Option[String], endDate: Option[String]) {
     private val bucketed = hasBucketed(spark, stateDir)
     private lazy val events = Tables.events(spark, sfDir)
-    val allConversions: DataFrame =
-      if (bucketed) spark.table(bucketedName(stateDir, "conversions"))
-      else Tables.deriveConversions(events)
     val conversions: DataFrame = Seq(
       startDate.map(d => col("conv_date") >= lit(d).cast("date")),
       endDate.map(d => col("conv_date") <= lit(d).cast("date"))
-    ).flatten.foldLeft(allConversions)(_ filter _)
-    val sessions: DataFrame =
+    ).flatten.foldLeft(
+      if (bucketed) spark.table(bucketedName(stateDir, "conversions"))
+      else Tables.deriveConversions(events))(_ filter _)
+    private val sessions: DataFrame =
       if (bucketed) spark.table(bucketedName(stateDir, "sessions"))
-      else Tables.deriveSessions(events)
-    def costs: DataFrame = Tables.deriveSessionCosts(events)
+      else Tables.deriveCostedSessions(events)
 
     /** Flagged journeys of the windowed conversions, optionally restricted
-      * to `onlyUsers`. */
-    def assigned(onlyUsers: Option[DataFrame]): DataFrame = Journeys.flagConversion(
-      if (bucketed) Journeys.assignBucketed(sessions, conversions, onlyUsers)
-      else Journeys.assign(sessions, conversions, onlyUsers))
+      * to the users `onlyUsers` lists. The restriction is a literal `IN`
+      * filter on both inputs: it reaches the scans (and prunes a bucketed
+      * scan's buckets) and adds no exchange and no broadcast job. */
+    def assigned(onlyUsers: Option[Seq[Long]]): DataFrame = {
+      def scoped(df: DataFrame) =
+        onlyUsers.fold(df)(u => df.filter(col("user_id").isInCollection(u)))
+      Journeys.flagConversion(
+        if (bucketed) Journeys.assignBucketed(scoped(sessions), scoped(conversions))
+        else Journeys.assign(scoped(sessions), scoped(conversions)))
+    }
   }
 
   /** The flagged journey assignment exactly as [[run]] computes it —
     * bucketed (exchange-free assign) when [[prepareBucketed]] has run,
-    * standard otherwise. Exposed so callers/specs can audit the plan. */
+    * standard otherwise — with each session's `cost`. Exposed so
+    * callers/specs can audit the plan. */
   def assignedJourneys(
       spark: SparkSession, sfDir: String, stateDir: String,
       endDate: Option[String],
@@ -286,6 +309,13 @@ object Pipeline {
     runImpl(spark, sfDir, stateDir, endDate, crashPoint = None,
       staleGraceMs = staleGraceMs, startDate = startDate)
 
+  /** The vacuum lease's time to live; a run renews it at its stage
+    * boundaries once half of it has passed. */
+  private val LeaseTtlMs = 15 * 60 * 1000L
+
+  /** @param atBoundary test hook called at each stage boundary (with its
+    *                   name), before the boundary's failpoint and lease
+    *                   heartbeat */
   private[graft] def runImpl(
       spark: SparkSession,
       sfDir: String,
@@ -294,16 +324,21 @@ object Pipeline {
       crashPoint: Option[String],
       staleGraceMs: Long = 0L,
       beforePublish: () => Unit = () => (),
-      startDate: Option[String] = None): RunSummary = {
+      startDate: Option[String] = None,
+      atBoundary: String => Unit = _ => (),
+      leaseTtlMs: Long = LeaseTtlMs): RunSummary = {
     // Vacuum lease held for the whole run: acquired BEFORE any staging, so
     // a concurrent run's recovery sweep skips every dir this run stages
     // (no grace-period tuning); released however the run exits. A hard
     // kill leaves the lease to expire on its TTL, after which the
     // leftovers become vacuumable.
     val lease = Manifest.acquireLease(spark, stateDir,
-      s"run_${java.util.UUID.randomUUID().toString.take(12)}")
-    try runLeased(spark, sfDir, stateDir, lease, endDate, crashPoint, staleGraceMs,
-      beforePublish, startDate)
+      s"run_${java.util.UUID.randomUUID().toString.take(12)}", leaseTtlMs)
+    try runLeased(spark, sfDir, stateDir, lease, leaseTtlMs, endDate, staleGraceMs,
+      beforePublish, startDate, boundary = p => {
+        atBoundary(p)
+        if (crashPoint.contains(p)) throw InjectedCrash(p)
+      })
     finally Manifest.releaseLease(spark, stateDir, lease)
   }
 
@@ -322,16 +357,32 @@ object Pipeline {
       spark: SparkSession,
       sfDir: String,
       stateDir: String,
-      lease: Manifest.Lease,
+      acquired: Manifest.Lease,
+      leaseTtlMs: Long,
       endDate: Option[String],
-      crashPoint: Option[String],
       staleGraceMs: Long,
       beforePublish: () => Unit,
-      startDate: Option[String]): RunSummary = {
-    def failpoint(p: String): Unit =
-      if (crashPoint.contains(p)) throw InjectedCrash(p)
+      startDate: Option[String],
+      boundary: String => Unit): RunSummary = {
+    // Stage boundary: the failpoint, then the lease heartbeat. The lease is
+    // renewed only once more than half its TTL has passed, so a short run
+    // does no lease I/O, and never once it has expired or is no longer
+    // held: renewing would re-create a reaped lease's file and let the
+    // pre-publish fence pass over vacuumed staging.
+    var lease = acquired
+    def stageDone(p: String): Unit = {
+      boundary(p)
+      val now = System.currentTimeMillis()
+      if (lease.expiresMs - now < leaseTtlMs / 2 && now < lease.expiresMs &&
+        Manifest.holdsLease(spark, stateDir, lease))
+        lease = Manifest.renewLease(spark, stateDir, lease, leaseTtlMs)
+    }
     def staged(table: String, tag: String, ddl: String): DataFrame =
       readDirsOrEmpty(spark, Seq(s"$stateDir/$table/$tag"), ddl)
+    // the processed-conversions stage: one file of the ids, in their order
+    def processed(convIds: Seq[Long]): DataFrame =
+      spark.createDataFrame(convIds.map(Row(_)).asJava, StructType.fromDDL(ProcessedDdl))
+        .coalesce(1)
 
     val extract = new Extract(spark, sfDir, stateDir, startDate, endDate)
 
@@ -342,68 +393,71 @@ object Pipeline {
     // committed total from manifest METADATA — not a scan of history
     val previousTotal = snap.meta.get(RowsKey).map(_.toLong).getOrElse(0L)
 
-    // The checkpoint selects the missing conversions and observes both their
-    // count and the candidates': no count() job. Its one evaluation feeds
-    // the semi-joins and the staged write. (The candidate count is observed
-    // below the anti-join, where the plan may put it in a shuffle stage: it
-    // is informational and never enters the committed total.)
+    // One job selects the missing conversions onto the driver and observes
+    // the candidates' count: no count() job. The (conv_id, user_id) pairs
+    // are delta-sized — a broadcast of them would be collected to the
+    // driver all the same — and, held here, they restrict the assignment
+    // and the delta as literal filters, with no broadcast job. (The
+    // candidate count is observed below the anti-join, where the plan may
+    // put it in a shuffle stage: it is informational and never enters the
+    // committed total.)
     val candidates = Observation()
-    val (missing, newConversions) = counted(Reporting
+    val missing = Reporting
       .missingConversions(extract.conversions.observe(candidates, count(lit(1)).as("rows")),
         readDirsOrEmpty(spark, dirsOf(snap.live, stateDir, "processed_conversions"),
           ProcessedDdl))
-      .select("conv_id", "user_id"))(_.localCheckpoint())
+      .select("conv_id", "user_id").collect()
     val candidateConversions = candidates.get("rows").asInstanceOf[Long]
-    if (newConversions == 0L)
+    if (missing.isEmpty)
       // idempotent no-op: publish NOTHING — re-runs must not grow the
       // live-dir list (and the committed report already covers this state)
       return RunSummary(candidateConversions, 0L, 0L, previousTotal)
+    var convIds: Seq[Long] = missing.map(_.getLong(0)).toSeq
+    stageDone("after_missing_selection")
 
     // ---- O(delta) assignment ----
     // Only users owning a missing conversion can contribute delta rows, and
     // a user's assignment depends on nothing outside the user — so restrict
     // BOTH inputs to those users (keeping ALL their conversions: earlier,
     // already-attributed ones must still claim their sessions) and compute
-    // journeys for delta users only. The broadcast semi-join preserves the
-    // bucketed layout's shuffle-free plan (asserted in PipelineSpec); a
-    // semi-join ignores duplicate keys, so the user list needs no distinct.
-    val assignedDelta = extract.assigned(Some(missing.select("user_id")))
+    // journeys for delta users only; then keep the missing conversions'
+    // rows. Both filters keep the bucketed layout's exchange-free plan.
+    val assignedDelta = extract.assigned(Some(missing.map(_.getLong(1)).distinct.toSeq))
 
     def freshTag(v: Long) = s"r${v}_${java.util.UUID.randomUUID().toString.take(8)}"
     var tag = freshTag(snap.alloc + 1)
+    // the staged rows carry their report inputs beside the attribution
+    // columns; every public reader projects the attribution DDL
     val delta = IhcAttribution
       .attribute(assignedDelta)
-      .join(missing.select("conv_id"), Seq("conv_id"), "left_semi")
-      .select("conv_id", "session_id", "channel_name", "ihc")
+      .filter(col("conv_id").isInCollection(convIds))
+      .select(StagedColumns.map(col): _*)
 
     // ---- stage (fresh uniquely-tagged dirs; nothing live is touched) ----
     // the write counts its own rows for the committed total
     var newRows = counted(delta)(_.write.parquet(s"$stateDir/attribution/$tag"))._2
-    failpoint("after_attribution_stage")
-    missing.select("conv_id").write.parquet(s"$stateDir/processed_conversions/$tag")
-
-    // the report reads what was actually staged — no double evaluation of
-    // the delta DAG, and NO read of any prior run's attribution data
-    var stagedDelta = staged("attribution", tag, AttributionDdl)
-    var stagedMissing = staged("processed_conversions", tag, ProcessedDdl)
-    var attributedConvs = newConversions
+    stageDone("after_attribution_stage")
+    processed(convIds).write.parquet(s"$stateDir/processed_conversions/$tag")
+    stageDone("after_processed_stage")
 
     // ---- O(delta) report ----
-    // aggregate ONLY the delta, then fold it into the committed decimal
-    // report state by (channel, date): an O(|channels|·|dates|) merge,
-    // bit-identical to re-aggregating all history (exact decimal sums).
-    // The report artifacts get their own tag so an OCC retry can re-merge
-    // against a race winner's base without re-staging the delta.
+    // ONE aggregate folds the staged delta into the committed decimal
+    // report state by (channel, date): O(|channels|·|dates| + delta),
+    // bit-identical to re-aggregating all history (exact decimal sums). It
+    // reads what was actually staged — no double evaluation of the delta
+    // DAG, and NO read of any prior run's attribution data. The report
+    // artifacts get their own tag so an OCC retry can re-fold against a
+    // race winner's base without re-staging the delta.
     var reportTag: String = null
     def stageReport(v: Long, committedBase: DataFrame): Unit = {
       reportTag = freshTag(v)
-      val deltaBase = Reporting.channelReportingBase(
-        stagedDelta, extract.sessions, extract.costs, extract.allConversions)
-      Reporting.mergeReportBase(committedBase, deltaBase)
-        .write.parquet(s"$stateDir/report_base/$reportTag")
       // (channel, date) keys are unique, so one partition sorted by them is
-      // the report in its final order: rendered once as parquet and once as
-      // the CSV artifact, one job each
+      // the state and the report in their final order; the report is
+      // rendered once as parquet and once as the CSV artifact, one job each
+      Reporting.foldReportBase(committedBase,
+        staged("attribution", tag, StagedAttributionDdl))
+        .coalesce(1).sortWithinPartitions("channel_name", "date")
+        .write.parquet(s"$stateDir/report_base/$reportTag")
       val rep = Reporting.withMetrics(
         Reporting.fromReportBase(staged("report_base", reportTag, ReportBaseDdl)))
         .coalesce(1).sortWithinPartitions("channel_name", "date")
@@ -412,14 +466,14 @@ object Pipeline {
     }
     stageReport(snap.alloc + 1,
       readDirsOrEmpty(spark, dirsOf(snap.live, stateDir, "report_base"), ReportBaseDdl))
-    failpoint("before_publish")
+    stageDone("before_publish")
     beforePublish()
 
     // ---- publish: one atomic manifest CAS makes all five dirs live ----
     // (attribution/processed accumulate; report_base/report/csv replace).
     // Racing runs SERIALIZE: the loser re-reads the winner's snapshot,
     // drops any conversions the winner already attributed from its staged
-    // delta, re-merges the report on the winner's base, and retries — so
+    // delta, re-folds the report on the winner's base, and retries — so
     // both commits land and no conversion is attributed twice, matching
     // SQLite's serialized-writers contract in the reference.
     var snapNow = snap
@@ -453,27 +507,30 @@ object Pipeline {
           val winnersProcessed = dirsOf(next.live, stateDir, "processed_conversions")
             .diff(dirsOf(snapNow.live, stateDir, "processed_conversions"))
           if (winnersProcessed.nonEmpty) {
-            val (still, stillN) = counted(Reporting.missingConversions(stagedMissing,
-              readDirsOrEmpty(spark, winnersProcessed, ProcessedDdl)))(_.localCheckpoint())
-            if (stillN == 0L)
-              // the winner attributed our whole delta: this run is a no-op
-              return RunSummary(candidateConversions, 0L, 0L,
-                next.meta.get(RowsKey).map(_.toLong).getOrElse(0L))
-            if (stillN != attributedConvs) {
+            // the winner's conversions among ours (read on this path only)
+            val taken = readDirsOrEmpty(spark, winnersProcessed, ProcessedDdl)
+              .filter(col("conv_id").isInCollection(convIds))
+              .collect().map(_.getLong(0)).toSet
+            if (taken.nonEmpty) {
+              val still = convIds.filterNot(taken)
+              if (still.isEmpty)
+                // the winner attributed our whole delta: this run is a no-op
+                return RunSummary(candidateConversions, 0L, 0L,
+                  next.meta.get(RowsKey).map(_.toLong).getOrElse(0L))
               // drop the overlap; the remaining rows are exact (assignment
               // was computed per-user over the full conversion set)
+              val stagedDelta = staged("attribution", tag, StagedAttributionDdl)
               tag = freshTag(next.alloc + 1)
-              newRows = counted(stagedDelta.join(still, Seq("conv_id"), "left_semi"))(
+              newRows = counted(stagedDelta.filter(col("conv_id").isInCollection(still)))(
                 _.write.parquet(s"$stateDir/attribution/$tag"))._2
-              still.write.parquet(s"$stateDir/processed_conversions/$tag")
-              stagedDelta = staged("attribution", tag, AttributionDdl)
-              stagedMissing = staged("processed_conversions", tag, ProcessedDdl)
-              attributedConvs = stillN
+              processed(still).write.parquet(s"$stateDir/processed_conversions/$tag")
+              convIds = still
             }
           }
-          // the winner replaced report_base: re-merge our delta onto it
+          // the winner replaced report_base: re-fold our delta onto it
           stageReport(next.alloc + 1,
             readDirsOrEmpty(spark, dirsOf(next.live, stateDir, "report_base"), ReportBaseDdl))
+          stageDone("retry_staged")
           snapNow = next
       }
     }
@@ -488,7 +545,7 @@ object Pipeline {
     if (Manifest.live(spark, stateDir).count(_.startsWith("attribution/")) > MaxLiveRuns)
       compactState(spark, stateDir)
 
-    RunSummary(candidateConversions, attributedConvs, newRows, committedTotal)
+    RunSummary(candidateConversions, convIds.size, newRows, committedTotal)
   }
 
   /** Live accumulated-dir bound before [[runImpl]] self-compacts. */

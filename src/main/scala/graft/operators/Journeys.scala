@@ -42,23 +42,11 @@ object Journeys {
     *
     * @param sessions    [[graft.sources.Tables.sessions]] shape
     * @param conversions [[graft.sources.Tables.conversions]] shape
-    * @param onlyUsers   optional (user_id) frame: restrict assignment to
-    *                    these users' events. Per-user independence makes
-    *                    the restriction EXACT — a user's journeys depend
-    *                    on nothing outside the user — and it is the O(Δ)
-    *                    lever for incremental runs: the delta's users are
-    *                    delta-sized, so the restricted input is too. The
-    *                    user set broadcasts (a semi-join shuffle would
-    *                    forfeit the bucketed exchange-free plan); a run
-    *                    whose delta spans most users should assign
-    *                    unrestricted instead.
     * @return sessions columns + (conv_id, conv_ts_us, revenue)
     */
-  def assign(
-      sessions: DataFrame, conversions: DataFrame,
-      onlyUsers: Option[DataFrame] = None): DataFrame = {
+  def assign(sessions: DataFrame, conversions: DataFrame): DataFrame = {
     val (sessSide, convSide) = unionSides(sessions, conversions)
-    assignOver(sessSide.unionByName(convSide), sessions.columns, onlyUsers)
+    assignOver(sessSide.unionByName(convSide), sessions.columns)
   }
 
   /** The shuffle-free deployment path: `sessions` and `conversions` read
@@ -66,48 +54,37 @@ object Journeys {
     * custom bucket-aligned [[graft.plans.BucketUnion]] operator — which,
     * unlike built-in UNION, preserves the bucketed hash partitioning — so
     * the per-user window needs only a sort. Zero shuffles end-to-end
-    * (asserted in BucketingSpec); an `onlyUsers` restriction joins as a
-    * broadcast semi-join, which keeps the streamed side's bucketed
-    * partitioning intact. */
-  def assignBucketed(
-      sessions: DataFrame, conversions: DataFrame,
-      onlyUsers: Option[DataFrame] = None): DataFrame = {
+    * (asserted in BucketingSpec). */
+  def assignBucketed(sessions: DataFrame, conversions: DataFrame): DataFrame = {
     val (sessSide, convSide) = unionSides(sessions, conversions)
-    assignOver(
-      graft.plans.BucketUnionApi.union(sessSide, convSide), sessions.columns, onlyUsers)
+    assignOver(graft.plans.BucketUnionApi.union(sessSide, convSide), sessions.columns)
   }
 
+  /** The two sides of the per-user union: every sessions column other
+    * than `user_id`/`ts_us` rides along as payload, null on the conversion
+    * side, so a caller's extra session columns reach the output. */
   private def unionSides(
       sessions: DataFrame, conversions: DataFrame): (DataFrame, DataFrame) = {
     val mark = struct(col("conv_ts_us"), col("conv_id"), col("revenue"))
-    val convSide = conversions.select(
+    val payload = sessions.schema.filterNot(f => f.name == "user_id" || f.name == "ts_us")
+    val convSide = conversions.select(Seq(
       col("user_id"), col("conv_ts_us").as("ts_us"), lit(1).as("kind"),
-      mark.as("cmark"),
-      // session payload columns, null on the conversion side
-      lit(null).cast("long").as("session_id"),
-      lit(null).cast("date").as("event_date"),
-      lit(null).cast("string").as("channel_name"),
-      lit(null).cast("int").as("holder_engagement"),
-      lit(null).cast("int").as("closer_engagement"),
-      lit(null).cast("int").as("impression_interaction"))
-    val sessSide = sessions.select(
+      mark.as("cmark")) ++
+      payload.map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+    val sessSide = sessions.select(Seq(
       col("user_id"), col("ts_us"), lit(0).as("kind"),
-      lit(null).cast(convSide.schema("cmark").dataType).as("cmark"),
-      col("session_id"), col("event_date"), col("channel_name"),
-      col("holder_engagement"), col("closer_engagement"), col("impression_interaction"))
+      lit(null).cast(convSide.schema("cmark").dataType).as("cmark")) ++
+      payload.map(f => col(f.name)): _*)
     (sessSide, convSide)
   }
 
   private def assignOver(
-      unioned: DataFrame, sessCols: Seq[String],
-      onlyUsers: Option[DataFrame] = None): DataFrame = {
-    val scoped = onlyUsers.fold(unioned)(u =>
-      unioned.join(broadcast(u.select("user_id")), Seq("user_id"), "left_semi"))
+      unioned: DataFrame, sessCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts_us").desc, col("kind").asc,
         coalesce(col("cmark.conv_id"), lit(-1L)).desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    scoped
+    unioned
       .withColumn("m", last(col("cmark"), ignoreNulls = true).over(w))
       .filter(col("kind") === 0 && col("m").isNotNull)
       .select(

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Exact.dsum
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Channel reporting — reference `reporting.py:15-189`.
@@ -38,28 +38,56 @@ object Reporting {
   /** [[channelReporting]] with the sums kept in EXACT decimal — the
     * internal, merge-able form [[graft.Pipeline]] persists so each
     * incremental run aggregates only its delta and folds it into the
-    * committed state with [[mergeReportBase]] (decimal addition is
+    * committed state with [[foldReportBase]] (decimal addition is
     * associative, so partial sums merge without drift; one double cast
     * happens at the very end, in [[fromReportBase]]). */
   def channelReportingBase(
       attributed: DataFrame,
       sessions: DataFrame,
       sessionCosts: DataFrame,
-      conversions: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def dsumBase(c: org.apache.spark.sql.Column) =
-      sum(c.cast(DecimalType(27, 6))).cast(BaseDec)
-    sessions
+      conversions: DataFrame): DataFrame =
+    baseSums(contributions(sessions
       .join(attributed.select("conv_id", "session_id", "ihc"), "session_id")
       .join(sessionCosts, Seq("session_id"), "left")
-      .join(conversions.select("conv_id", "revenue"), "conv_id")
-      .groupBy(col("channel_name"), col("event_date"))
-      .agg(
-        dsumBase(coalesce(col("cost"), lit(0.0))).as("cost"),
-        dsumBase(col("ihc")).as("ihc"),
-        dsumBase(col("ihc") * col("revenue")).as("ihc_revenue"))
-      .withColumnRenamed("event_date", "date")
+      .join(conversions.select("conv_id", "revenue"), "conv_id")),
+      sum(_).cast(BaseDec))
+
+  /** Fold attribution rows that carry their own report inputs
+    * (`channel_name`, `event_date`, `cost`, `ihc`, `revenue`) into a
+    * committed [[channelReportingBase]] state with ONE aggregate over
+    * `committed ∪ rows`. Each row is rounded to decimal exactly as
+    * [[channelReportingBase]] rounds it and decimal sums are exact, so
+    * `fold(base(A), B) == base(A ∪ B)` bit-for-bit when A and B partition
+    * the attribution rows: the incremental-report primitive, at
+    * O(|channels|·|dates| + |rows|). */
+  def foldReportBase(committed: DataFrame, rows: DataFrame): DataFrame =
+    baseSums(committed.unionByName(contributions(rows).select(
+      col("channel_name"), col("date"),
+      col("cost").cast(BaseDec).as("cost"),
+      col("ihc").cast(BaseDec).as("ihc"),
+      col("ihc_revenue").cast(BaseDec).as("ihc_revenue"))),
+      // every group has a row, so no sum is null: the state's columns are
+      // NOT NULL, as the committed state has always been written
+      c => coalesce(sum(c), lit(0).cast(BaseDec)))
+
+  /** A report row's decimal contributions, each double rounded once to
+    * scale 6; a session without a cost row costs 0. */
+  private def contributions(rows: DataFrame): DataFrame = {
+    val rowDec = org.apache.spark.sql.types.DecimalType(27, 6)
+    rows.select(
+      col("channel_name"), col("event_date").as("date"),
+      coalesce(col("cost"), lit(0.0)).cast(rowDec).as("cost"),
+      col("ihc").cast(rowDec).as("ihc"),
+      (col("ihc") * col("revenue")).cast(rowDec).as("ihc_revenue"))
   }
+
+  private def baseSums(contributions: DataFrame, total: Column => Column): DataFrame =
+    contributions
+      .groupBy(col("channel_name"), col("date"))
+      .agg(
+        total(col("cost")).as("cost"),
+        total(col("ihc")).as("ihc"),
+        total(col("ihc_revenue")).as("ihc_revenue"))
 
   /** The public (double) report from a decimal [[channelReportingBase]]
     * state — the same values [[graft.functions.Exact.dsum]] produces,
@@ -71,30 +99,6 @@ object Reporting {
       col("cost").cast("double").as("cost"),
       col("ihc").cast("double").as("ihc"),
       col("ihc_revenue").cast("double").as("ihc_revenue"))
-
-  /** Outer-merge two report-base states by (channel, date), adding the
-    * decimal sums — exact, so `merge(base(A), base(B)) == base(A ∪ B)`
-    * bit-for-bit when A and B partition the attribution rows. The
-    * incremental-report primitive: an O(|channels|·|dates|) merge instead
-    * of re-aggregating all history. */
-  def mergeReportBase(committed: DataFrame, delta: DataFrame): DataFrame = {
-    val zero = lit(0).cast(BaseDec)
-    def side(df: DataFrame, p: String) =
-      df.select(
-        col("channel_name"), col("date"),
-        col("cost").as(s"${p}_cost"), col("ihc").as(s"${p}_ihc"),
-        col("ihc_revenue").as(s"${p}_rev"))
-    side(committed, "c")
-      .join(side(delta, "d"), Seq("channel_name", "date"), "full_outer")
-      .select(
-        col("channel_name"), col("date"),
-        (coalesce(col("c_cost"), zero) + coalesce(col("d_cost"), zero))
-          .cast(BaseDec).as("cost"),
-        (coalesce(col("c_ihc"), zero) + coalesce(col("d_ihc"), zero))
-          .cast(BaseDec).as("ihc"),
-        (coalesce(col("c_rev"), zero) + coalesce(col("d_rev"), zero))
-          .cast(BaseDec).as("ihc_revenue"))
-  }
 
   /** CPO = cost/ihc, ROAS = ihc_revenue/cost — `reporting.py:154-158`. */
   def withMetrics(report: DataFrame): DataFrame =

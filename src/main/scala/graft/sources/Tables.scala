@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 
 /** Parquet table loaders plus the attribution-schema derivations.
@@ -29,9 +30,18 @@ object Tables {
     spark
   }
 
+  /** A parquet read whose schema comes from the footer Spark's own
+    * inference would read, read on the driver
+    * ([[org.apache.spark.sql.execution.datasources.parquet.FooterSchema]]):
+    * the same schema without Spark's inference job. A path with no parquet
+    * file falls back to the plain read and its error. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    FooterSchema.read(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
   }
 
   def region(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "region")
@@ -83,7 +93,7 @@ object Tables {
       startDate: Option[String],
       endDateInclusive: Option[String]): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val raw = withNanosFlag(spark).read.parquet(s"$dir/events.parquet")
+    val raw = parquet(withNanosFlag(spark), s"$dir/events.parquet")
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     val NanosPerDay = 86400L * 1000000000L
     def bound(day: java.time.LocalDate, lowerInclusive: Boolean): Column = {
@@ -127,10 +137,19 @@ object Tables {
   /** session_sources analog (`challenge_db_create.sql:17-27`): every
     * non-purchase event is a session; its event_type is the marketing
     * channel; engagement flags are deterministic functions of the type. */
-  def deriveSessions(events: DataFrame): DataFrame =
+  def deriveSessions(events: DataFrame): DataFrame = sessionsWith(events)
+
+  /** [[deriveSessions]] plus each session's `cost`: its
+    * [[deriveSessionCosts]] cost, null on an unpaid channel — the
+    * reference's sessions ⟕ session_costs (`reporting.py:15-103`) done row
+    * by row, exact because event ids are unique. */
+  def deriveCostedSessions(events: DataFrame): DataFrame =
+    sessionsWith(events, when(col("event_type").isin(PaidChannels: _*), paidCost).as("cost"))
+
+  private def sessionsWith(events: DataFrame, extra: Column*): DataFrame =
     events
       .filter(col("event_type") =!= "purchase")
-      .select(
+      .select(Seq(
         col("event_id").as("session_id"),
         col("user_id"),
         col("ts_us"),
@@ -138,20 +157,22 @@ object Tables {
         col("event_type").as("channel_name"),
         when(col("event_type").isin("click", "view"), 1).otherwise(0).as("holder_engagement"),
         when(col("event_type").isin("click", "signup"), 1).otherwise(0).as("closer_engagement"),
-        when(col("event_type") === "view", 1).otherwise(0).as("impression_interaction"))
+        when(col("event_type") === "view", 1).otherwise(0).as("impression_interaction")) ++
+        extra: _*)
 
   def sessions(spark: SparkSession, dir: String): DataFrame =
     deriveSessions(events(spark, dir))
+
+  private val PaidChannels = Seq("click", "view")
+  private def paidCost: Column = col("value") / 20.0
 
   /** session_costs analog (`challenge_db_create.sql:11-15`): only paid
     * channels (click/view) carry a cost row, so downstream LEFT JOINs see
     * genuine misses (reference `db_utils.py:121-125`). */
   def deriveSessionCosts(events: DataFrame): DataFrame =
     events
-      .filter(col("event_type").isin("click", "view"))
-      .select(
-        col("event_id").as("session_id"),
-        (col("value") / 20.0).as("cost"))
+      .filter(col("event_type").isin(PaidChannels: _*))
+      .select(col("event_id").as("session_id"), paidCost.as("cost"))
 
   def sessionCosts(spark: SparkSession, dir: String): DataFrame =
     deriveSessionCosts(events(spark, dir))

@@ -85,17 +85,29 @@ class EventsEncodingSpec extends SparkSpec {
     assert(r.getLong(2) == 0L, "null event_date rows")
   }
 
+  /** One fixture dir per `ts` encoding, by name. */
+  private def fixtures: Seq[(String, String)] = Seq(
+    "nanos" -> writeFixture((id, us, uid, typ, v, p) =>
+      Row(id, us * 1000L + 789L, uid, typ, v, p), LongType),
+    "ntz" -> writeFixture((id, us, uid, typ, v, p) =>
+      Row(id, java.time.LocalDateTime.ofEpochSecond(
+        us / 1000000L, (us % 1000000L).toInt * 1000, java.time.ZoneOffset.UTC),
+        uid, typ, v, p), TimestampNTZType),
+    "ltz" -> writeFixture((id, us, uid, typ, v, p) =>
+      Row(id, java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
+        us / 1000000L, (us % 1000000L) * 1000L)), uid, typ, v, p), TimestampType))
+
+  test("the events footer schema Tables reads equals Spark's inferred one, " +
+    "under every encoding") {
+    import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+    Tables.events(spark, sfDir) // sets the nanosAsLong flag both reads need
+    fixtures.foreach { case (name, dir) =>
+      val p = s"$dir/events.parquet"
+      assert(FooterSchema.read(spark, p) === Some(spark.read.parquet(p).schema), name)
+    }
+  }
+
   test("eventsWindowed: raw-ts bounds are exact AND pushed, under every encoding") {
-    val fixtures = Seq(
-      "nanos" -> writeFixture((id, us, uid, typ, v, p) =>
-        Row(id, us * 1000L + 789L, uid, typ, v, p), LongType),
-      "ntz" -> writeFixture((id, us, uid, typ, v, p) =>
-        Row(id, java.time.LocalDateTime.ofEpochSecond(
-          us / 1000000L, (us % 1000000L).toInt * 1000, java.time.ZoneOffset.UTC),
-          uid, typ, v, p), TimestampNTZType),
-      "ltz" -> writeFixture((id, us, uid, typ, v, p) =>
-        Row(id, java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-          us / 1000000L, (us % 1000000L) * 1000L)), uid, typ, v, p), TimestampType))
     fixtures.foreach { case (name, dir) =>
       // [2024-03-11, 2024-03-11] keeps exactly event 2 (the +1s row)
       val win = Tables.eventsWindowed(spark, dir, Some("2024-03-11"), Some("2024-03-11"))
