@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.json.JsonMapper
+
 /** Dump `SparkEntry.oracleSql` as JSON WITHOUT running any Spark query —
   * the fast half of the verify recipe, for iterating on oracle SQL cost
   * (`tools/oracle_check.py` + ORACLE_COST.json) against an existing
@@ -7,22 +11,15 @@ package graft
   * out/oracle_sql.json`, re-run the DuckDB compare. A full `graft.Verify`
   * is only needed when the SPARK side of a query changes. */
 object OracleDump {
+
+  /** `m` as one JSON object, keys sorted, written to `path` in UTF-8. */
+  def writeJson(path: String, m: Map[String, String]): Unit =
+    JsonMapper.builder().build()
+      .writeValue(new java.io.File(path), new java.util.TreeMap[String, String](m.asJava))
+
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: OracleDump <out.json>")
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{\n", ",\n", "\n}")
-    java.nio.file.Files.write(java.nio.file.Paths.get(args(0)),
-      json.getBytes("UTF-8"))
+    writeJson(args(0), SparkEntry.oracleSql)
     println(s"wrote ${SparkEntry.oracleSql.size} oracles to ${args(0)}")
   }
 }

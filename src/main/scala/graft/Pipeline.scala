@@ -582,24 +582,4 @@ object Pipeline {
         cur.meta)
     }
   }
-
-  /** CLI: `Pipeline <sfDir> <stateDir> [endDate]`. */
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val stateDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline_state"
-    val endDate = if (args.length > 2) Some(args(2)) else None
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val s = run(spark, sfDir, stateDir, endDate)
-    println(
-      s"candidate_conversions=${s.candidateConversions} new_conversions=${s.newConversions} " +
-        s"new_rows=${s.newRows} total_rows=${s.totalRows}")
-    spark.stop()
-  }
 }

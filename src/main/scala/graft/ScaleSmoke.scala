@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{IhcAttribution, Journeys, Reporting}
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: the full attribution pipeline (journeys → IHC → channel
@@ -13,14 +12,7 @@ import org.apache.spark.sql.functions._
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     val events = spark.range(n).selectExpr(
       "id AS event_id",

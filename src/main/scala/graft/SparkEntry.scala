@@ -14,7 +14,7 @@ object SparkEntry {
     * CPO/ROAS over the full journey→IHC pipeline (sf0.001); driver
     * smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("channel_reporting_metrics")(spark, "/root/testdata/sf0.001")
+    reportingMetrics(spark, "/root/testdata/sf0.001")
 
   // ---- attribution pipeline wiring (SURVEY §2.A) ----
 
@@ -33,6 +33,9 @@ object SparkEntry {
       Tables.sessions(s, dir),
       Tables.sessionCosts(s, dir),
       Tables.conversions(s, dir))
+
+  private def reportingMetrics(s: SparkSession, dir: String): DataFrame =
+    Reporting.withMetrics(report(s, dir)).orderBy("channel_name", "date")
 
   /** One committed corpus-embedding-index state per (JVM, sf dir,
     * residual flag): the embeddings table ingested as documents (texts
@@ -80,9 +83,59 @@ object SparkEntry {
         state.toString
       })).value
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "conversions_extract" -> ((s, dir) =>
+  /** The corpus-index keys' queries: the first 8 embeddings. */
+  private def corpusQueries(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).filter(col("vec_id") < 8)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+
+  /** Per query over the served top-k: agreement of the PQ-codes ADC read
+    * with exact re-rank (semanticTopKAdc) with the raw-float exact probe
+    * (semanticTopK) on one committed corpus-index state. */
+  private def adcAgreement(s: SparkSession, dir: String, residual: Boolean): DataFrame = {
+    val state = corpusIndexState(s, dir, residual)
+    val q = corpusQueries(s, dir)
+    val served = Corpus.semanticTopKAdc(s, q, state)
+      .select(col("query_id"), col("doc_id"), lit(1).as("hit"))
+    Corpus.semanticTopK(s, q, state)
+      .select("query_id", "doc_id")
+      .join(served, Seq("query_id", "doc_id"), "left")
+      .groupBy("query_id")
+      .agg(
+        sum(coalesce(col("hit"), lit(0))).cast("bigint").as("n_hits"),
+        (sum(coalesce(col("hit"), lit(0))).cast("double") /
+          count(lit(1)).cast("double")).as("agreement"))
+      .orderBy("query_id")
+  }
+
+  /** One gated key: its run function, the independent DuckDB SQL over
+    * the same parquet tables that its result must hash-equal, and its
+    * non-vacuity floor at the sf0.01 gate. A hash gate that compares two
+    * EMPTY results proves nothing — a filter bug that eats every row on
+    * both sides would stay green — so the floor is 1 row unless the key's
+    * sf0.01 result is GENUINELY empty on the driver-owned testdata (then
+    * its entry says why; each such key has real rows at sf0.1 and a golden
+    * spec covering the non-empty semantics). `Verify` records a floor
+    * violation in errors.json, so "correct empty" and "silently emptied"
+    * stay apart. */
+  private final case class Query(oracle: String, minRows: Long = 1L)(
+      val run: (SparkSession, String) => DataFrame)
+
+  /** The driver contract's three views of [[registry]]. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (k, q) => k -> q.run }
+  def oracleSql: Map[String, String] = byName.map { case (k, q) => k -> q.oracle }
+  def minRows(name: String): Long = byName.get(name).fold(1L)(_.minRows)
+
+  private lazy val byName: Map[String, Query] = {
+    val m = registry.toMap
+    require(m.size == registry.size, "a SparkEntry key is registered twice")
+    m
+  }
+
+  /** Every gated key, registered once: one entry per implemented operator
+    * from SURVEY.md §2. */
+  private val registry: Seq[(String, Query)] = Seq(
+    "conversions_extract" -> Query(Oracles.conversionsExtract)((s, dir) =>
       // raw-ts window (pushes into the parquet scan) + the redundant
       // derived-date filter (exactness guard against encoding drift)
       Tables.deriveConversions(
@@ -90,81 +143,83 @@ object SparkEntry {
         .filter(col("conv_date") >= lit("2024-01-05").cast("date"))
         .orderBy("conv_id")),
 
-    "sessions_extract" -> ((s, dir) =>
+    "sessions_extract" -> Query(Oracles.sessionsExtract)((s, dir) =>
       Tables.sessions(s, dir)
         .join(Tables.sessionCosts(s, dir), Seq("session_id"), "left")
         .orderBy("session_id")),
 
-    "journey_build" -> ((s, dir) =>
+    "journey_build" -> Query(Oracles.journeyBuild)((s, dir) =>
       assigned(s, dir)
         .select("conv_id", "session_id", "user_id", "ts_us", "channel_name")
         .orderBy("conv_id", "session_id")),
 
-    "journey_flag" -> ((s, dir) =>
+    "journey_flag" -> Query(Oracles.journeyFlag)((s, dir) =>
       flagged(s, dir)
         .select("conv_id", "session_id", "conversion")
         .orderBy("conv_id", "session_id")),
 
-    "ihc_attribution" -> ((s, dir) =>
+    "ihc_attribution" -> Query(Oracles.ihcAttribution)((s, dir) =>
       attributed(s, dir)
         .select("conv_id", "session_id", "channel_name", "ihc")
         .orderBy("conv_id", "session_id")),
 
-    "ihc_redistributed" -> ((s, dir) =>
+    "ihc_redistributed" -> Query(Oracles.ihcRedistributed)((s, dir) =>
       // 'error' is this schema's untracked/no-engagement channel — the
       // stand-in for the reference's 'Direct' label (api_utils.py:322)
       IhcAttribution.attributeRedistributed(flagged(s, dir), directChannels = Seq("error"))
         .select("conv_id", "session_id", "channel_name", "ihc", "ihc_redist")
         .orderBy("conv_id", "session_id")),
 
-    "attribution_sum_check" -> ((s, dir) =>
+    "attribution_sum_check" -> Query(Oracles.attributionSumCheck)((s, dir) =>
       IhcAttribution.sumCheck(attributed(s, dir)).orderBy("conv_id")),
 
-    "ihc_lookback" -> ((s, dir) =>
+    "ihc_lookback" -> Query(Oracles.ihcLookback)((s, dir) =>
       // 2-day lookback window (172800000000 µs), matching the oracle
       IhcAttribution.attribute(Journeys.flagConversion(
           Journeys.lookbackFilter(assigned(s, dir), 172800000000L)))
         .select("conv_id", "session_id", "channel_name", "ihc")
         .orderBy("conv_id", "session_id")),
 
-    "channel_overlap" -> ((s, dir) => Journeys.channelOverlap(assigned(s, dir))),
+    "channel_overlap" -> Query(Oracles.channelOverlap)((s, dir) =>
+      Journeys.channelOverlap(assigned(s, dir))),
 
-    "attribution_model_compare" -> ((s, dir) =>
+    "attribution_model_compare" -> Query(Oracles.attributionModelCompare)((s, dir) =>
       Reporting.modelCompare(assigned(s, dir))),
 
-    "journey_length_distribution" -> ((s, dir) =>
+    "journey_length_distribution" -> Query(Oracles.journeyLengthDistribution)((s, dir) =>
       Journeys.lengthDistribution(assigned(s, dir))),
 
-    "channel_position_bias" -> ((s, dir) =>
+    "channel_position_bias" -> Query(Oracles.channelPositionBias)((s, dir) =>
       Journeys.channelPositionBias(assigned(s, dir))),
 
-    "journey_lag_by_opener" -> ((s, dir) => Journeys.lagByOpener(assigned(s, dir))),
+    "journey_lag_by_opener" -> Query(Oracles.journeyLagByOpener)((s, dir) =>
+      Journeys.lagByOpener(assigned(s, dir))),
 
-    "touch_gap_quantiles" -> ((s, dir) =>
+    "touch_gap_quantiles" -> Query(Oracles.touchGapQuantiles)((s, dir) =>
       Analytics.touchGapQuantiles(assigned(s, dir))),
 
-    "supplier_hhi" -> ((s, dir) =>
+    "supplier_hhi" -> Query(Oracles.supplierHhi)((s, dir) =>
       Analytics.supplierHhi(
         Tables.supplier(s, dir), Tables.nation(s, dir), Tables.lineitem(s, dir))),
 
-    "events_hour_profile" -> ((s, dir) =>
+    "events_hour_profile" -> Query(Oracles.eventsHourProfile)((s, dir) =>
       Analytics.eventsHourProfile(Tables.events(s, dir))),
 
-    "events_quality_audit" -> ((s, dir) =>
+    "events_quality_audit" -> Query(Oracles.eventsQualityAudit)((s, dir) =>
       Analytics.eventsQualityAudit(Tables.events(s, dir))),
 
-    "journey_stats" -> ((s, dir) => Journeys.statistics(assigned(s, dir))),
+    "journey_stats" -> Query(Oracles.journeyStats)((s, dir) =>
+      Journeys.statistics(assigned(s, dir))),
 
-    "journey_validate" -> ((s, dir) =>
+    "journey_validate" -> Query(Oracles.journeyValidate)((s, dir) =>
       Journeys.validate(flagged(s, dir)).orderBy("conv_id")),
 
-    "channel_reporting" -> ((s, dir) =>
+    "channel_reporting" -> Query(Oracles.channelReporting)((s, dir) =>
       report(s, dir).orderBy("channel_name", "date")),
 
-    "channel_reporting_metrics" -> ((s, dir) =>
-      Reporting.withMetrics(report(s, dir)).orderBy("channel_name", "date")),
+    "channel_reporting_metrics" -> Query(Oracles.channelReportingMetrics)(reportingMetrics),
 
-    "channel_reporting_window" -> ((s, dir) => {
+    "channel_reporting_window" -> Query(Oracles.channelReportingWindow) { (s, dir) =>
       // raw-ts window (pushes into the parquet scan) + the redundant
       // derived-date filter (exactness guard against encoding drift)
       val sessions = Tables.deriveSessions(
@@ -175,74 +230,83 @@ object SparkEntry {
         attributed(s, dir), sessions,
         Tables.sessionCosts(s, dir), Tables.conversions(s, dir))
         .orderBy("channel_name", "date")
-    }),
+    },
 
-    "journey_paths" -> ((s, dir) => Journeys.paths(assigned(s, dir))),
+    "journey_paths" -> Query(Oracles.journeyPaths)((s, dir) => Journeys.paths(assigned(s, dir))),
 
-    "channel_communities" -> ((s, dir) =>
+    "channel_communities" -> Query(Oracles.channelCommunities)((s, dir) =>
       graft.operators.Markov.labelPropagation(
         Journeys.channelTransitions(assigned(s, dir))
           .selectExpr("from_channel AS src", "to_channel AS dst", "n AS weight"))
         .orderBy("node")),
 
-    "basket_lift" -> ((s, dir) => Analytics.basketLift(Tables.lineitem(s, dir))),
+    "basket_lift" -> Query(Oracles.basketLift)((s, dir) =>
+      Analytics.basketLift(Tables.lineitem(s, dir))),
 
-    "channel_triangles" -> ((s, dir) =>
+    "channel_triangles" -> Query(Oracles.channelTriangles)((s, dir) =>
       graft.operators.Markov.triangleCount(
         Journeys.channelTransitions(assigned(s, dir))
           .selectExpr("from_channel AS src", "to_channel AS dst"))
         .orderBy("node")),
 
-    "scd2_enrich" -> ((s, dir) => {
+    "scd2_enrich" -> Query(Oracles.scd2Enrich) { (s, dir) =>
       val ev = Tables.events(s, dir).select("event_id", "user_id", "ts_us", "event_type")
       Temporal.intervalJoin(ev, Analytics.scd2UserState(ev),
         keyCol = "user_id", tsCol = "ts_us", dimTieBreak = Seq("version"))
         .select("event_id", "user_id", "ts_us", "version", "state")
         .orderBy("event_id")
-    }),
+    },
 
-    "orders_ewma" -> ((s, dir) => Analytics.ordersEwma(Tables.orders(s, dir))),
+    "orders_ewma" -> Query(Oracles.ordersEwma)((s, dir) =>
+      Analytics.ordersEwma(Tables.orders(s, dir))),
 
-    "orders_seasonality" -> ((s, dir) => Analytics.ordersSeasonality(Tables.orders(s, dir))),
+    "orders_seasonality" -> Query(Oracles.ordersSeasonality)((s, dir) =>
+      Analytics.ordersSeasonality(Tables.orders(s, dir))),
 
-    "orders_autocorrelation" -> ((s, dir) =>
+    "orders_autocorrelation" -> Query(Oracles.ordersAutocorrelation)((s, dir) =>
       Analytics.ordersAutocorrelation(Tables.orders(s, dir))),
 
-    "channel_conversion_rate" -> ((s, dir) =>
+    "channel_conversion_rate" -> Query(Oracles.channelConversionRate)((s, dir) =>
       Reporting.channelConversionRate(Tables.sessions(s, dir), assigned(s, dir))),
 
-    "user_purchase_histogram" -> ((s, dir) =>
+    "user_purchase_histogram" -> Query(Oracles.userPurchaseHistogram)((s, dir) =>
       Analytics.userPurchaseHistogram(Tables.events(s, dir))),
 
-    "nation_trade_balance" -> ((s, dir) =>
+    "nation_trade_balance" -> Query(Oracles.nationTradeBalance)((s, dir) =>
       Analytics.nationTradeBalance(
         Tables.supplier(s, dir), Tables.customer(s, dir), Tables.nation(s, dir),
         Tables.orders(s, dir), Tables.lineitem(s, dir))),
 
-    "integrity_audit" -> ((s, dir) =>
+    "integrity_audit" -> Query(Oracles.integrityAudit)((s, dir) =>
       Analytics.integrityAudit(
         Tables.region(s, dir), Tables.nation(s, dir), Tables.customer(s, dir),
         Tables.supplier(s, dir), Tables.part(s, dir), Tables.orders(s, dir),
         Tables.lineitem(s, dir))),
 
-    "user_stickiness" -> ((s, dir) => Analytics.userStickiness(Tables.events(s, dir))),
+    "user_stickiness" -> Query(Oracles.userStickiness)((s, dir) =>
+      Analytics.userStickiness(Tables.events(s, dir))),
 
-    "token_zipf" -> ((s, dir) => Corpus.tokenZipf(Tables.documents(s, dir))),
+    "token_zipf" -> Query(Oracles.tokenZipf)((s, dir) =>
+      Corpus.tokenZipf(Tables.documents(s, dir))),
 
-    "time_to_convert" -> ((s, dir) => Analytics.timeToConvertQuantiles(assigned(s, dir))),
+    "time_to_convert" -> Query(Oracles.timeToConvert)((s, dir) =>
+      Analytics.timeToConvertQuantiles(assigned(s, dir))),
 
-    "ab_test_welch" -> ((s, dir) => Analytics.abTestWelch(Tables.events(s, dir))),
+    "ab_test_welch" -> Query(Oracles.abTestWelch)((s, dir) =>
+      Analytics.abTestWelch(Tables.events(s, dir))),
 
-    "embed_outliers" -> ((s, dir) => Similarity.embedOutliers(Tables.embeddings(s, dir))),
+    "embed_outliers" -> Query(Oracles.embedOutliers)((s, dir) =>
+      Similarity.embedOutliers(Tables.embeddings(s, dir))),
 
-    "bpe_coverage" -> ((s, dir) => {
+    "bpe_coverage" -> Query(Oracles.bpeCoverage) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       Search.bpeCoverage(docs, Search.bpeLearn(docs))
-    }),
+    },
 
-    "channel_transitions" -> ((s, dir) => Journeys.channelTransitions(assigned(s, dir))),
+    "channel_transitions" -> Query(Oracles.channelTransitions)((s, dir) =>
+      Journeys.channelTransitions(assigned(s, dir))),
 
-    "attribution_incremental" -> ((s, dir) => {
+    "attribution_incremental" -> Query(Oracles.attributionIncremental) { (s, dir) =>
       // Simulated prior state: conversions with conv_id % 3 == 0 already
       // attributed (mirrors db_utils.py:260-302's incremental skip).
       val conv = Tables.conversions(s, dir)
@@ -252,389 +316,431 @@ object SparkEntry {
         .join(missing.select("conv_id"), Seq("conv_id"), "left_semi")
         .select("conv_id", "session_id")
         .orderBy("conv_id", "session_id")
-    }),
+    },
 
-    "first_touch_attribution" -> ((s, dir) => Reporting.firstTouch(assigned(s, dir))),
+    "first_touch_attribution" -> Query(Oracles.firstTouchAttribution)((s, dir) =>
+      Reporting.firstTouch(assigned(s, dir))),
 
-    "last_touch_attribution" -> ((s, dir) => Reporting.lastTouch(flagged(s, dir))),
+    "last_touch_attribution" -> Query(Oracles.lastTouchAttribution)((s, dir) =>
+      Reporting.lastTouch(flagged(s, dir))),
 
-    "linear_attribution" -> ((s, dir) => Reporting.linearAttribution(assigned(s, dir))),
+    "linear_attribution" -> Query(Oracles.linearAttribution)((s, dir) =>
+      Reporting.linearAttribution(assigned(s, dir))),
 
-    "time_decay_attribution" -> ((s, dir) => Reporting.timeDecayAttribution(assigned(s, dir))),
+    "time_decay_attribution" -> Query(Oracles.timeDecayAttribution)((s, dir) =>
+      Reporting.timeDecayAttribution(assigned(s, dir))),
 
-    "position_attribution" -> ((s, dir) => Reporting.positionBasedAttribution(assigned(s, dir))),
+    "position_attribution" -> Query(Oracles.positionAttribution)((s, dir) =>
+      Reporting.positionBasedAttribution(assigned(s, dir))),
 
-    "shapley_attribution" -> ((s, dir) => Reporting.shapleyAttribution(assigned(s, dir))),
+    "shapley_attribution" -> Query(Oracles.shapleyAttribution)((s, dir) =>
+      Reporting.shapleyAttribution(assigned(s, dir))),
 
-    "markov_attribution" -> ((s, dir) =>
+    "markov_attribution" -> Query(Oracles.markovAttribution)((s, dir) =>
       graft.operators.Markov.attribution(s, Tables.sessions(s, dir), assigned(s, dir))),
 
-    "channel_pagerank" -> ((s, dir) =>
+    "channel_pagerank" -> Query(Oracles.channelPagerank)((s, dir) =>
       graft.operators.Markov.channelPagerank(assigned(s, dir))),
 
-    "channel_hits" -> ((s, dir) =>
+    "channel_hits" -> Query(Oracles.channelHits)((s, dir) =>
       graft.operators.Markov.channelHits(assigned(s, dir))),
 
-    "events_anomaly" -> ((s, dir) =>
+    "events_anomaly" -> Query(Oracles.eventsAnomaly)((s, dir) =>
       Analytics.eventsAnomaly(Tables.events(s, dir))),
 
-    "data_profile" -> ((s, dir) =>
+    "data_profile" -> Query(Oracles.dataProfile)((s, dir) =>
       Analytics.dataProfile(Tables.orders(s, dir))),
 
-    "markov2_attribution" -> ((s, dir) =>
+    "markov2_attribution" -> Query(Oracles.markov2Attribution)((s, dir) =>
       graft.operators.Markov.attribution2(s, Tables.sessions(s, dir), assigned(s, dir))),
 
-    "journey_hashed_features" -> ((s, dir) =>
+    "journey_hashed_features" -> Query(Oracles.journeyHashedFeatures)((s, dir) =>
       Journeys.hashedFeatures(assigned(s, dir))),
 
-    "training_data_export" -> ((s, dir) =>
+    "training_data_export" -> Query(Oracles.trainingDataExport)((s, dir) =>
       Journeys.trainingExport(Tables.sessions(s, dir), Tables.conversions(s, dir))),
 
-    "asof_last_session" -> ((s, dir) =>
+    "asof_last_session" -> Query(Oracles.asofLastSession)((s, dir) =>
       Temporal.asofLastSession(Tables.sessions(s, dir), Tables.conversions(s, dir))),
 
-    "asof_next_session" -> ((s, dir) =>
+    "asof_next_session" -> Query(Oracles.asofNextSession)((s, dir) =>
       Temporal.asofNextSession(Tables.sessions(s, dir), Tables.conversions(s, dir))),
 
-    "user_rfm_segments" -> ((s, dir) =>
+    "user_rfm_segments" -> Query(Oracles.rfmSegments)((s, dir) =>
       Analytics.rfmSegments(Tables.events(s, dir))),
 
-    "range_session_count" -> ((s, dir) =>
+    "range_session_count" -> Query(Oracles.rangeSessionCount)((s, dir) =>
       Temporal.sessionCountWindow(Tables.sessions(s, dir), Tables.conversions(s, dir))),
 
-    "winnow_fingerprints" -> ((s, dir) =>
+    "winnow_fingerprints" -> Query(Oracles.winnowFingerprints)((s, dir) =>
       Corpus.winnowFingerprints(Tables.documents(s, dir))),
 
-    "contamination_semantic" -> ((s, dir) =>
+    "contamination_semantic" -> Query(Oracles.contaminationSemantic)((s, dir) =>
       Dedup.semanticContamination(Tables.embeddings(s, dir))),
 
-    "contamination_check" -> ((s, dir) =>
+    "contamination_check" -> Query(Oracles.contaminationCheck)((s, dir) =>
       Corpus.contaminationCheck(Tables.documents(s, dir))),
 
-    "text_pii_scrub" -> ((s, dir) => Corpus.piiScrub(Tables.documents(s, dir))),
+    "text_pii_scrub" -> Query(Oracles.textPiiScrub)((s, dir) =>
+      Corpus.piiScrub(Tables.documents(s, dir))),
 
-    "doc_chunking" -> ((s, dir) =>
+    "doc_chunking" -> Query(Oracles.docChunking)((s, dir) =>
       Corpus.chunkDocuments(Tables.documents(s, dir))),
 
-    "sequence_packing" -> ((s, dir) =>
+    "sequence_packing" -> Query(Oracles.sequencePacking)((s, dir) =>
       Corpus.sequencePacking(Tables.documents(s, dir))),
 
-    "packing_efficiency" -> ((s, dir) =>
+    "packing_efficiency" -> Query(Oracles.packingEfficiency)((s, dir) =>
       Corpus.packingEfficiency(Tables.documents(s, dir))),
 
-    "shard_skew" -> ((s, dir) => Corpus.shardSkew(Tables.documents(s, dir))),
+    "shard_skew" -> Query(Oracles.shardSkew)((s, dir) =>
+      Corpus.shardSkew(Tables.documents(s, dir))),
 
-    "doc_len_histogram" -> ((s, dir) => Corpus.docLenHistogram(Tables.documents(s, dir))),
+    "doc_len_histogram" -> Query(Oracles.docLenHistogram)((s, dir) =>
+      Corpus.docLenHistogram(Tables.documents(s, dir))),
 
-    "dup_rate_by_source" -> ((s, dir) => Corpus.dupRateBySource(Tables.documents(s, dir))),
+    "dup_rate_by_source" -> Query(Oracles.dupRateBySource)((s, dir) =>
+      Corpus.dupRateBySource(Tables.documents(s, dir))),
 
-    "winnow_overlap" -> ((s, dir) => Corpus.winnowOverlap(Tables.documents(s, dir))),
+    "winnow_overlap" -> Query(Oracles.winnowOverlap)((s, dir) =>
+      Corpus.winnowOverlap(Tables.documents(s, dir))),
 
-    "quality_length_grid" -> ((s, dir) => Corpus.qualityLengthGrid(Tables.documents(s, dir))),
+    "quality_length_grid" -> Query(Oracles.qualityLengthGrid)((s, dir) =>
+      Corpus.qualityLengthGrid(Tables.documents(s, dir))),
 
-    "vocab_growth" -> ((s, dir) => Corpus.vocabGrowth(Tables.documents(s, dir))),
+    "vocab_growth" -> Query(Oracles.vocabGrowth)((s, dir) =>
+      Corpus.vocabGrowth(Tables.documents(s, dir))),
 
-    "lang_confusion" -> ((s, dir) => Corpus.langConfusion(Tables.documents(s, dir))),
+    "lang_confusion" -> Query(Oracles.langConfusion)((s, dir) =>
+      Corpus.langConfusion(Tables.documents(s, dir))),
 
-    "corpus_mixture_entropy" -> ((s, dir) => Corpus.mixtureEntropy(Tables.documents(s, dir))),
+    "corpus_mixture_entropy" -> Query(Oracles.corpusMixtureEntropy)((s, dir) =>
+      Corpus.mixtureEntropy(Tables.documents(s, dir))),
 
-    "dedup_threshold_sweep" -> ((s, dir) =>
+    "dedup_threshold_sweep" -> Query(Oracles.dedupThresholdSweep)((s, dir) =>
       Corpus.dedupThresholdSweep(Tables.documents(s, dir))),
 
-    "mixture_temperature" -> ((s, dir) =>
+    "mixture_temperature" -> Query(Oracles.mixtureTemperature)((s, dir) =>
       Corpus.mixtureTemperature(Tables.documents(s, dir))),
 
-    "quality_dup_grid" -> ((s, dir) =>
+    "quality_dup_grid" -> Query(Oracles.qualityDupGrid)((s, dir) =>
       Corpus.qualityDupGrid(Tables.documents(s, dir))),
 
-    "source_quality_profile" -> ((s, dir) =>
+    "source_quality_profile" -> Query(Oracles.sourceQualityProfile)((s, dir) =>
       Corpus.sourceQualityProfile(Tables.documents(s, dir))),
 
-    "sessionize_gap_sweep" -> ((s, dir) =>
+    "sessionize_gap_sweep" -> Query(Oracles.sessionizeGapSweep)((s, dir) =>
       Analytics.sessionizeGapSweep(Tables.events(s, dir))),
 
-    "training_shards_balanced" -> ((s, dir) =>
+    "training_shards_balanced" -> Query(Oracles.trainingShardsBalanced)((s, dir) =>
       Corpus.trainingShardsBalanced(Tables.documents(s, dir))),
 
-    "minhash_s_curve" -> ((s, _) => Dedup.minhashSCurve(s)),
+    "minhash_s_curve" -> Query(Oracles.minhashSCurve)((s, _) => Dedup.minhashSCurve(s)),
 
-    "lm_heldout_score" -> ((s, dir) =>
+    "lm_heldout_score" -> Query(Oracles.lmHeldoutScore)((s, dir) =>
       Search.lmHeldoutScore(Tables.documents(s, dir))),
 
-    "domain_cap_sample" -> ((s, dir) =>
+    "domain_cap_sample" -> Query(Oracles.domainCapSample)((s, dir) =>
       Corpus.domainCapSample(Tables.documents(s, dir))),
 
-    "quality_ablation" -> ((s, dir) =>
+    "quality_ablation" -> Query(Oracles.qualityAblation)((s, dir) =>
       Corpus.qualityAblation(Tables.documents(s, dir))),
 
-    "nb_lang_classify" -> ((s, dir) => Search.nbClassify(Tables.documents(s, dir))),
+    "nb_lang_classify" -> Query(Oracles.nbClassify)((s, dir) =>
+      Search.nbClassify(Tables.documents(s, dir))),
 
-    "quality_classifier_score" -> ((s, dir) =>
+    "quality_classifier_score" -> Query(Oracles.qualityClassifierScore)((s, dir) =>
       Corpus.qualityClassifier(Tables.documents(s, dir))),
 
-    "quality_classifier_eval" -> ((s, dir) =>
+    "quality_classifier_eval" -> Query(Oracles.qualityClassifierEval)((s, dir) =>
       Corpus.qualityClassifierEval(Tables.documents(s, dir))),
 
-    "classifier_budget_select" -> ((s, dir) =>
+    "classifier_budget_select" -> Query(Oracles.classifierBudgetSelect)((s, dir) =>
       Corpus.classifierBudgetSelect(Tables.documents(s, dir))),
 
-    "classifier_threshold_select" -> ((s, dir) =>
+    "classifier_threshold_select" -> Query(Oracles.classifierThresholdSelect)((s, dir) =>
       Corpus.classifierThresholdSelect(Tables.documents(s, dir))),
 
-    "customer_ltv_deciles" -> ((s, dir) =>
+    "customer_ltv_deciles" -> Query(Oracles.customerLtvDeciles)((s, dir) =>
       Analytics.customerLtvDeciles(Tables.orders(s, dir))),
 
-    "data_mixture_sample" -> ((s, dir) =>
+    "data_mixture_sample" -> Query(Oracles.dataMixtureSample)((s, dir) =>
       Corpus.mixtureSample(Tables.documents(s, dir))),
 
-    "corpus_budget_select" -> ((s, dir) => Corpus.budgetSelect(Tables.documents(s, dir))),
+    "corpus_budget_select" -> Query(Oracles.corpusBudgetSelect)((s, dir) =>
+      Corpus.budgetSelect(Tables.documents(s, dir))),
 
-    "corpus_budget_by_lang" -> ((s, dir) => Corpus.budgetSelectPerLang(Tables.documents(s, dir))),
+    "corpus_budget_by_lang" -> Query(Oracles.corpusBudgetByLang)((s, dir) =>
+      Corpus.budgetSelectPerLang(Tables.documents(s, dir))),
 
-    "quality_curriculum" -> ((s, dir) =>
+    "quality_curriculum" -> Query(Oracles.qualityCurriculum)((s, dir) =>
       Corpus.qualityCurriculum(Tables.documents(s, dir))),
 
-    "lm_doc_score" -> ((s, dir) =>
+    "lm_doc_score" -> Query(Oracles.lmDocScore)((s, dir) =>
       Search.lmScore(Tables.documents(s, dir))),
 
-    "sample_stratified" -> ((s, dir) =>
+    "sample_stratified" -> Query(Oracles.sampleStratified)((s, dir) =>
       Corpus.stratifiedSample(Tables.documents(s, dir))),
 
-    "sample_priority" -> ((s, dir) =>
+    "sample_priority" -> Query(Oracles.samplePriority)((s, dir) =>
       Corpus.prioritySample(Tables.documents(s, dir))),
 
-    "corpus_curation" -> ((s, dir) =>
+    "corpus_curation" -> Query(Oracles.corpusCuration)((s, dir) =>
       Corpus.curation(Tables.documents(s, dir))),
 
-    "salted_channel_agg" -> ((s, dir) =>
+    "salted_channel_agg" -> Query(Oracles.saltedChannelAgg)((s, dir) =>
       Analytics.saltedChannelAgg(Tables.events(s, dir))),
 
-    "sketch_kmv_distinct" -> ((s, dir) =>
+    "sketch_kmv_distinct" -> Query(Oracles.sketchKmvDistinct)((s, dir) =>
       graft.operators.Sketches.kmvDistinct(Tables.events(s, dir))),
 
-    "sketch_cms_frequency" -> ((s, dir) =>
+    "sketch_cms_frequency" -> Query(Oracles.sketchCmsFrequency)((s, dir) =>
       graft.operators.Sketches.cmsFrequency(Tables.events(s, dir))),
 
-    "sketch_hll_distinct" -> ((s, dir) =>
+    "sketch_hll_distinct" -> Query(Oracles.sketchHllDistinct)((s, dir) =>
       graft.operators.Sketches.hllDistinct(Tables.events(s, dir))),
 
-    "sketch_kmv_intersection" -> ((s, dir) =>
+    "sketch_kmv_intersection" -> Query(Oracles.sketchKmvIntersection)((s, dir) =>
       graft.operators.Sketches.kmvIntersection(Tables.events(s, dir))),
 
-    "sketch_kmv_merged" -> ((s, dir) =>
+    "sketch_kmv_merged" -> Query(Oracles.sketchKmvMerged)((s, dir) =>
       graft.operators.Sketches.kmvMerged(Tables.events(s, dir))),
 
-    "sketch_cms_merged" -> ((s, dir) =>
+    // deliberately the FULL-data CMS oracle: cell-wise-sum merging must
+    // reproduce the full grid exactly, so the hash match IS the proof
+    "sketch_cms_merged" -> Query(Oracles.sketchCmsFrequency)((s, dir) =>
       graft.operators.Sketches.cmsMerged(Tables.events(s, dir))),
 
-    "sketch_hll_merged" -> ((s, dir) =>
+    "sketch_hll_merged" -> Query(Oracles.sketchHllMerged)((s, dir) =>
       graft.operators.Sketches.hllMerged(Tables.events(s, dir))),
 
-    "sketch_bloom_prune" -> ((s, dir) =>
+    // counts-only replay of the deterministic md5 position sets: the
+    // false-positive overshoot is part of the checked row
+    "sketch_bloom_prune" -> Query(Oracles.sketchBloomPrune)((s, dir) =>
       graft.operators.Sketches.bloomSemiPrune(
         Tables.lineitem(s, dir), Tables.orders(s, dir))),
 
-    "sketch_join_size" -> ((s, dir) =>
+    "sketch_join_size" -> Query(Oracles.sketchJoinSize)((s, dir) =>
       graft.operators.Sketches.amsJoinSize(
         Tables.orders(s, dir), Tables.lineitem(s, dir))),
 
-    "sketch_bloom_merged" -> ((s, dir) =>
+    // the FULL-data Bloom oracle: position-set union (bitwise OR) must
+    // reproduce the full filter exactly, so the hash match IS the proof
+    "sketch_bloom_merged" -> Query(Oracles.sketchBloomPrune)((s, dir) =>
       graft.operators.Sketches.bloomSemiPruneMerged(
         Tables.lineitem(s, dir), Tables.orders(s, dir))),
 
-    "sketch_hist_quantiles" -> ((s, dir) =>
+    "sketch_hist_quantiles" -> Query(Oracles.sketchHistQuantiles)((s, dir) =>
       graft.operators.Sketches.histQuantiles(Tables.events(s, dir))),
 
-    "sketch_hist_merged" -> ((s, dir) =>
+    // the FULL-data histogram oracle: cell-wise-sum merging must
+    // reproduce the full grid exactly, so the hash match IS the proof
+    "sketch_hist_merged" -> Query(Oracles.sketchHistMerged)((s, dir) =>
       graft.operators.Sketches.histMerged(Tables.events(s, dir))),
 
-    "q4_order_priority" -> ((s, dir) =>
+    "q4_order_priority" -> Query(Oracles.q4OrderPriority)((s, dir) =>
       Analytics.q4OrderPriority(Tables.orders(s, dir), Tables.lineitem(s, dir))),
 
-    "q13_custdist" -> ((s, dir) =>
+    "q13_custdist" -> Query(Oracles.q13CustDist)((s, dir) =>
       Analytics.q13CustDist(Tables.customer(s, dir), Tables.orders(s, dir))),
 
-    "q17_small_quantity_revenue" -> ((s, dir) =>
+    "q17_small_quantity_revenue" -> Query(Oracles.q17SmallQuantityRevenue)((s, dir) =>
       Analytics.q17SmallQuantityRevenue(Tables.lineitem(s, dir))),
 
-    "q14_promo_revenue" -> ((s, dir) =>
+    "q14_promo_revenue" -> Query(Oracles.q14PromoRevenue)((s, dir) =>
       Analytics.q14PromoRevenue(Tables.lineitem(s, dir), Tables.part(s, dir))),
 
-    "events_latest_per_user" -> ((s, dir) =>
+    "events_latest_per_user" -> Query(Oracles.eventsLatestPerUser)((s, dir) =>
       Analytics.latestEventPerUser(Tables.events(s, dir))),
 
-    "q3_top_unshipped" -> ((s, dir) =>
+    "q3_top_unshipped" -> Query(Oracles.q3TopUnshipped)((s, dir) =>
       Analytics.q3TopUnshipped(
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir))),
 
-    "q5_region_revenue" -> ((s, dir) =>
+    "q5_region_revenue" -> Query(Oracles.q5RegionRevenue)((s, dir) =>
       Analytics.q5RegionRevenue(
         Tables.region(s, dir), Tables.nation(s, dir), Tables.customer(s, dir),
         Tables.supplier(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir))),
 
-    "q7_volume_shipping" -> ((s, dir) =>
+    "q7_volume_shipping" -> Query(Oracles.q7VolumeShipping)((s, dir) =>
       Analytics.q7VolumeShipping(
         Tables.supplier(s, dir), Tables.lineitem(s, dir), Tables.orders(s, dir),
         Tables.customer(s, dir), Tables.nation(s, dir))),
 
-    "q8_market_share" -> ((s, dir) =>
+    "q8_market_share" -> Query(Oracles.q8MarketShare)((s, dir) =>
       Analytics.q8MarketShare(
         Tables.part(s, dir), Tables.supplier(s, dir), Tables.lineitem(s, dir),
         Tables.orders(s, dir), Tables.customer(s, dir), Tables.nation(s, dir),
         Tables.region(s, dir))),
 
-    "q10_returned_items" -> ((s, dir) =>
+    "q10_returned_items" -> Query(Oracles.q10ReturnedItems)((s, dir) =>
       Analytics.q10ReturnedItems(
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir),
         Tables.nation(s, dir))),
 
-    "q9_profit_by_nation" -> ((s, dir) =>
+    "q9_profit_by_nation" -> Query(Oracles.q9ProfitByNation)((s, dir) =>
       Analytics.q9ProfitByNation(
         Tables.part(s, dir), Tables.supplier(s, dir), Tables.lineitem(s, dir),
         Tables.orders(s, dir), Tables.nation(s, dir))),
 
-    "q2_min_price_supplier" -> ((s, dir) =>
+    "q2_min_price_supplier" -> Query(Oracles.q2MinPriceSupplier)((s, dir) =>
       Analytics.q2MinPriceSupplier(
         Tables.part(s, dir), Tables.supplier(s, dir), Tables.lineitem(s, dir),
         Tables.nation(s, dir), Tables.region(s, dir))),
 
-    "q11_important_parts" -> ((s, dir) =>
+    "q11_important_parts" -> Query(Oracles.q11ImportantParts)((s, dir) =>
       Analytics.q11ImportantParts(
         Tables.supplier(s, dir), Tables.lineitem(s, dir), Tables.nation(s, dir))),
 
-    "q12_shipping_priority" -> ((s, dir) =>
+    "q12_shipping_priority" -> Query(Oracles.q12ShippingPriority)((s, dir) =>
       Analytics.q12ShippingPriority(Tables.orders(s, dir), Tables.lineitem(s, dir))),
 
-    "q16_supplier_counts" -> ((s, dir) =>
+    "q16_supplier_counts" -> Query(Oracles.q16SupplierCounts)((s, dir) =>
       Analytics.q16SupplierCounts(
         Tables.part(s, dir), Tables.supplier(s, dir), Tables.lineitem(s, dir))),
 
-    "q21_waiting_suppliers" -> ((s, dir) =>
+    "q21_waiting_suppliers" -> Query(Oracles.q21WaitingSuppliers)((s, dir) =>
       Analytics.q21WaitingSuppliers(
         Tables.supplier(s, dir), Tables.lineitem(s, dir), Tables.orders(s, dir),
         Tables.nation(s, dir))),
 
-    "q20_promo_suppliers" -> ((s, dir) =>
+    "q20_promo_suppliers" -> Query(Oracles.q20PromoSuppliers)((s, dir) =>
       Analytics.q20PromoSuppliers(
         Tables.part(s, dir), Tables.supplier(s, dir), Tables.lineitem(s, dir),
         Tables.nation(s, dir))),
 
-    "revenue_trend_ols" -> ((s, dir) =>
+    "revenue_trend_ols" -> Query(Oracles.revenueTrendOls)((s, dir) =>
       Analytics.revenueTrendOls(Tables.orders(s, dir))),
 
-    "q15_top_supplier" -> ((s, dir) =>
+    "q15_top_supplier" -> Query(Oracles.q15TopSupplier)((s, dir) =>
       Analytics.q15TopSupplier(Tables.supplier(s, dir), Tables.lineitem(s, dir))),
 
-    "q18_large_volume" -> ((s, dir) =>
+    "q18_large_volume" -> Query(Oracles.q18LargeVolume)((s, dir) =>
       Analytics.q18LargeVolume(
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir))),
 
-    "q19_discounted_revenue" -> ((s, dir) =>
+    "q19_discounted_revenue" -> Query(Oracles.q19DiscountedRevenue)((s, dir) =>
       Analytics.q19DiscountedRevenue(Tables.lineitem(s, dir), Tables.part(s, dir))),
 
-    "q22_global_sales" -> ((s, dir) =>
+    "q22_global_sales" -> Query(Oracles.q22GlobalSales)((s, dir) =>
       Analytics.q22GlobalSales(Tables.customer(s, dir), Tables.orders(s, dir))),
 
-    "top_customers_window" -> ((s, dir) =>
+    "top_customers_window" -> Query(Oracles.topCustomersWindow)((s, dir) =>
       Analytics.topCustomers(Tables.customer(s, dir), Tables.orders(s, dir), 25)),
 
-    "running_total_window" -> ((s, dir) =>
+    "running_total_window" -> Query(Oracles.runningTotalWindow)((s, dir) =>
       Analytics.runningTotal(Tables.orders(s, dir))),
 
-    "events_sessionize" -> ((s, dir) =>
+    "events_sessionize" -> Query(Oracles.eventsSessionize)((s, dir) =>
       Analytics.sessionize(Tables.events(s, dir))),
 
-    "events_json_extract" -> ((s, dir) =>
+    "events_json_extract" -> Query(Oracles.eventsJsonExtract)((s, dir) =>
       Analytics.jsonExtractAgg(Tables.events(s, dir))),
 
-    "orders_enrich_denorm" -> ((s, dir) =>
+    "orders_enrich_denorm" -> Query(Oracles.ordersEnrichDenorm)((s, dir) =>
       Analytics.ordersEnrich(
         Tables.orders(s, dir), Tables.customer(s, dir),
         Tables.nation(s, dir), Tables.region(s, dir))),
 
-    "dedup_exact" -> ((s, dir) => Dedup.exact(Tables.documents(s, dir))),
+    "dedup_exact" -> Query(Oracles.dedupExact)((s, dir) => Dedup.exact(Tables.documents(s, dir))),
 
-    "dedup_exact_substring" -> ((s, dir) =>
+    "dedup_exact_substring" -> Query(Oracles.dedupExactSubstring)((s, dir) =>
       Dedup.exactSubstringSpans(Tables.documents(s, dir))),
 
-    "dedup_substring_runs" -> ((s, dir) =>
+    "dedup_substring_runs" -> Query(Oracles.dedupSubstringRuns)((s, dir) =>
       Dedup.exactSubstringRuns(Tables.documents(s, dir))),
 
-    "dedup_substring_scrub" -> ((s, dir) =>
+    "dedup_substring_scrub" -> Query(Oracles.dedupSubstringScrub)((s, dir) =>
       Dedup.exactSubstringScrub(Tables.documents(s, dir))),
 
-    "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLsh(Tables.documents(s, dir))),
+    "dedup_minhash_lsh" -> Query(Oracles.dedupMinhashLsh)((s, dir) =>
+      Dedup.minhashLsh(Tables.documents(s, dir))),
 
-    "dedup_minhash_incremental" -> ((s, dir) => {
+    "dedup_minhash_incremental" -> Query(Oracles.dedupMinhashIncremental) { (s, dir) =>
       val d = Tables.documents(s, dir)
       Dedup.minhashIncremental(
         d.filter(pmod(col("doc_id"), lit(5)) === 0),
         d.filter(pmod(col("doc_id"), lit(5)) =!= 0))
-    }),
+    },
 
-    "split_leakage_free" -> ((s, dir) =>
+    "split_leakage_free" -> Query(Oracles.splitLeakageFree)((s, dir) =>
       Dedup.leakageFreeSplit(Tables.documents(s, dir))),
 
-    "dedup_clusters" -> ((s, dir) =>
+    "dedup_clusters" -> Query(Oracles.dedupClusters)((s, dir) =>
       Dedup.clustersStar(Dedup.minhashLsh(Tables.documents(s, dir)).select("doc_a", "doc_b"))),
 
-    "dedup_hybrid_clusters" -> ((s, dir) =>
+    "dedup_hybrid_clusters" -> Query(Oracles.dedupHybridClusters)((s, dir) =>
       Dedup.hybridClusters(Tables.documents(s, dir), Tables.embeddings(s, dir))),
 
-    "dedup_semantic" -> ((s, dir) =>
+    "dedup_semantic" -> Query(Oracles.dedupSemantic)((s, dir) =>
       Dedup.semanticDedup(Tables.embeddings(s, dir))),
 
-    "dedup_embedding_incremental" -> ((s, dir) =>
+    "dedup_embedding_incremental" -> Query(Oracles.dedupEmbeddingIncremental)((s, dir) =>
       Dedup.embeddingIncremental(Tables.embeddings(s, dir))),
 
-    "dedup_embedding_eval" -> ((s, dir) =>
+    "dedup_embedding_eval" -> Query(Oracles.dedupEmbeddingEval)((s, dir) =>
       Dedup.embeddingIncrementalEval(Tables.embeddings(s, dir))),
 
-    "dedup_gate_probe_sweep" -> ((s, dir) =>
+    "dedup_gate_probe_sweep" -> Query(Oracles.dedupGateProbeSweep)((s, dir) =>
       Dedup.embeddingGateProbeSweep(Tables.embeddings(s, dir))),
 
-    "dedup_edit_verified" -> ((s, dir) => Dedup.editVerified(Tables.documents(s, dir))),
+    "dedup_edit_verified" -> Query(Oracles.dedupEditVerified)((s, dir) =>
+      Dedup.editVerified(Tables.documents(s, dir))),
 
-    "dedup_minhash_eval" -> ((s, dir) => Dedup.minhashEval(Tables.documents(s, dir))),
+    "dedup_minhash_eval" -> Query(Oracles.dedupMinhashEval)((s, dir) =>
+      Dedup.minhashEval(Tables.documents(s, dir))),
 
-    "ngram_novelty" -> ((s, dir) => Dedup.ngramNovelty(Tables.documents(s, dir))),
+    "ngram_novelty" -> Query(Oracles.ngramNovelty)((s, dir) =>
+      Dedup.ngramNovelty(Tables.documents(s, dir))),
 
-    "bpe_encode" -> ((s, dir) => {
+    "bpe_encode" -> Query(Oracles.bpeEncode) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       Search.bpeEncode(docs, Search.bpeLearn(docs))
-    }),
+    },
 
-    "dedup_chunks_exact" -> ((s, dir) => Dedup.chunkDedup(Tables.documents(s, dir))),
+    "dedup_chunks_exact" -> Query(Oracles.dedupChunks)((s, dir) =>
+      Dedup.chunkDedup(Tables.documents(s, dir))),
 
-    "chunk_dup_stats" -> ((s, dir) => Dedup.chunkDupStats(Tables.documents(s, dir))),
+    "chunk_dup_stats" -> Query(Oracles.chunkDupStats)((s, dir) =>
+      Dedup.chunkDupStats(Tables.documents(s, dir))),
 
-    "dedup_cluster_sizes" -> ((s, dir) =>
+    "dedup_cluster_sizes" -> Query(Oracles.dedupClusterSizes)((s, dir) =>
       Dedup.clusterSizeHistogram(Tables.documents(s, dir))),
 
-    "shingle_df_histogram" -> ((s, dir) => Dedup.shingleDfHistogram(Tables.documents(s, dir))),
+    "shingle_df_histogram" -> Query(Oracles.shingleDfHistogram)((s, dir) =>
+      Dedup.shingleDfHistogram(Tables.documents(s, dir))),
 
-    "training_shards" -> ((s, dir) => Corpus.trainingShards(Tables.documents(s, dir))),
+    "training_shards" -> Query(Oracles.trainingShards)((s, dir) =>
+      Corpus.trainingShards(Tables.documents(s, dir))),
 
-    "shard_checksums" -> ((s, dir) => Corpus.shardChecksums(Tables.documents(s, dir))),
+    "shard_checksums" -> Query(Oracles.shardChecksums)((s, dir) =>
+      Corpus.shardChecksums(Tables.documents(s, dir))),
 
-    "corpus_drift" -> ((s, dir) => Corpus.corpusDrift(Tables.documents(s, dir))),
+    "corpus_drift" -> Query(Oracles.corpusDrift)((s, dir) =>
+      Corpus.corpusDrift(Tables.documents(s, dir))),
 
-    "corpus_drift_summary" -> ((s, dir) =>
+    "corpus_drift_summary" -> Query(Oracles.corpusDriftSummary)((s, dir) =>
       Corpus.corpusDriftSummary(Tables.documents(s, dir))),
 
-    "dedup_keep_best" -> ((s, dir) => Dedup.clusterRepresentatives(Tables.documents(s, dir))),
+    "dedup_keep_best" -> Query(Oracles.dedupKeepBest)((s, dir) =>
+      Dedup.clusterRepresentatives(Tables.documents(s, dir))),
 
-    "corpus_datasheet" -> ((s, dir) => Corpus.corpusDatasheet(Tables.documents(s, dir))),
+    "corpus_datasheet" -> Query(Oracles.corpusDatasheet)((s, dir) =>
+      Corpus.corpusDatasheet(Tables.documents(s, dir))),
 
-    "embed_rp_project" -> ((s, dir) => Similarity.rpProject(Tables.embeddings(s, dir))),
+    "embed_rp_project" -> Query(Oracles.embedRpProject)((s, dir) =>
+      Similarity.rpProject(Tables.embeddings(s, dir))),
 
-    "embed_center_norm" -> ((s, dir) => Similarity.centerNormalize(Tables.embeddings(s, dir))),
+    "embed_center_norm" -> Query(Oracles.embedCenterNorm)((s, dir) =>
+      Similarity.centerNormalize(Tables.embeddings(s, dir))),
 
-    "embed_dim_stats" -> ((s, dir) => Similarity.dimStats(Tables.embeddings(s, dir))),
+    "embed_dim_stats" -> Query(Oracles.embedDimStats)((s, dir) =>
+      Similarity.dimStats(Tables.embeddings(s, dir))),
 
-    "embed_whiten" -> ((s, dir) => Similarity.whiten(Tables.embeddings(s, dir))),
+    "embed_whiten" -> Query(Oracles.embedWhiten)((s, dir) =>
+      Similarity.whiten(Tables.embeddings(s, dir))),
 
-    "q6_forecast_revenue" -> ((s, dir) =>
+    "q6_forecast_revenue" -> Query(Oracles.q6ForecastRevenue)((s, dir) =>
       Tables.lineitem(s, dir)
         .filter(col("l_shipdate") >= lit("1996-01-01 00:00:00").cast("timestamp") &&
           col("l_shipdate") < lit("1997-01-01 00:00:00").cast("timestamp") &&
@@ -644,190 +750,185 @@ object SparkEntry {
           dsum(col("l_extendedprice") * col("l_discount")).as("revenue"),
           count(lit(1)).as("n_items"))),
 
-    "dedup_simhash" -> ((s, dir) => Dedup.simhash(Tables.documents(s, dir))),
+    "dedup_simhash" -> Query(Oracles.dedupSimhash)((s, dir) =>
+      Dedup.simhash(Tables.documents(s, dir))),
 
-    "dedup_simhash_near" -> ((s, dir) => Dedup.simhashNear(Tables.documents(s, dir))),
+    "dedup_simhash_near" -> Query(Oracles.dedupSimhashNear)((s, dir) =>
+      Dedup.simhashNear(Tables.documents(s, dir))),
 
-    "dedup_containment" -> ((s, dir) => Dedup.ngramContainment(Tables.documents(s, dir))),
+    "dedup_containment" -> Query(Oracles.dedupNgramContainment)((s, dir) =>
+      Dedup.ngramContainment(Tables.documents(s, dir))),
 
-    "dedup_hot_spans" -> ((s, dir) => Dedup.hotSpanRemoval(Tables.documents(s, dir))),
+    "dedup_hot_spans" -> Query(Oracles.dedupHotSpans)((s, dir) =>
+      Dedup.hotSpanRemoval(Tables.documents(s, dir))),
 
-    "dsir_select" -> ((s, dir) => Corpus.dsirSelect(Tables.documents(s, dir))),
+    "dsir_select" -> Query(Oracles.dsirSelect)((s, dir) =>
+      Corpus.dsirSelect(Tables.documents(s, dir))),
 
-    "scd2_user_state" -> ((s, dir) => Analytics.scd2UserState(Tables.events(s, dir))),
+    "scd2_user_state" -> Query(Oracles.scd2UserState)((s, dir) =>
+      Analytics.scd2UserState(Tables.events(s, dir))),
 
-    "dedup_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(Tables.documents(s, dir))),
+    "dedup_ngram_jaccard" -> Query(Oracles.dedupNgramJaccard)((s, dir) =>
+      Dedup.ngramJaccard(Tables.documents(s, dir))),
 
-    "dedup_embedding" -> ((s, dir) => Dedup.embeddingNearDup(Tables.embeddings(s, dir))),
+    "dedup_embedding" -> Query(Oracles.dedupEmbedding)((s, dir) =>
+      Dedup.embeddingNearDup(Tables.embeddings(s, dir))),
 
-    "ann_bruteforce_topk" -> ((s, dir) => Similarity.bruteForceTopK(Tables.embeddings(s, dir))),
+    "ann_bruteforce_topk" -> Query(Oracles.annBruteforceTopK)((s, dir) =>
+      Similarity.bruteForceTopK(Tables.embeddings(s, dir))),
 
-    "ann_filtered_topk" -> ((s, dir) => Similarity.filteredTopK(Tables.embeddings(s, dir))),
+    "ann_filtered_topk" -> Query(Oracles.annFilteredTopK)((s, dir) =>
+      Similarity.filteredTopK(Tables.embeddings(s, dir))),
 
-    "ann_filtered_ivf_topk" -> ((s, dir) =>
+    "ann_filtered_ivf_topk" -> Query(Oracles.annFilteredIvfTopK)((s, dir) =>
       Similarity.filteredIvfTopK(Tables.embeddings(s, dir))),
 
-    "ann_recall_filtered" -> ((s, dir) =>
+    "ann_recall_filtered" -> Query(Oracles.annRecallFiltered)((s, dir) =>
       Similarity.filteredIvfRecall(Tables.embeddings(s, dir))),
 
-    "ann_adaptive_probe" -> ((s, dir) =>
+    "ann_adaptive_probe" -> Query(Oracles.annAdaptiveProbe)((s, dir) =>
       Similarity.adaptiveProbeBudget(Tables.embeddings(s, dir))),
 
-    "ann_graph_search" -> ((s, dir) =>
+    "ann_graph_search" -> Query(Oracles.annGraphSearch)((s, dir) =>
       Similarity.graphSearch(Tables.embeddings(s, dir))),
 
-    "ann_beam_sweep" -> ((s, dir) =>
+    "ann_beam_sweep" -> Query(Oracles.annBeamSweep)((s, dir) =>
       Similarity.graphBeamSweep(Tables.embeddings(s, dir))),
 
-    "ann_ivfpq_residual_topk" -> ((s, dir) =>
+    "ann_ivfpq_residual_topk" -> Query(Oracles.annIvfPqResidualTopK)((s, dir) =>
       Similarity.ivfPqResidualTopK(Tables.embeddings(s, dir))),
 
-    "ann_recall_ivfpq_residual" -> ((s, dir) =>
+    "ann_recall_ivfpq_residual" -> Query(Oracles.annRecallIvfpqResidual)((s, dir) =>
       Similarity.ivfPqResidualRecall(Tables.embeddings(s, dir))),
 
-    "ann_recall_graph" -> ((s, dir) =>
+    "ann_recall_graph" -> Query(Oracles.annRecallGraph)((s, dir) =>
       Similarity.graphRecall(Tables.embeddings(s, dir))),
 
-    "ann_filtered_graph" -> ((s, dir) =>
+    "ann_filtered_graph" -> Query(Oracles.annFilteredGraph)((s, dir) =>
       Similarity.filteredGraphSearch(Tables.embeddings(s, dir))),
 
-    "ann_recall_filtered_graph" -> ((s, dir) =>
+    "ann_recall_filtered_graph" -> Query(Oracles.annRecallFilteredGraph)((s, dir) =>
       Similarity.filteredGraphRecall(Tables.embeddings(s, dir))),
 
-    "lm_ppl_buckets" -> ((s, dir) => Search.lmPplBuckets(Tables.documents(s, dir))),
+    "lm_ppl_buckets" -> Query(Oracles.lmPplBuckets)((s, dir) =>
+      Search.lmPplBuckets(Tables.documents(s, dir))),
 
-    "ann_lsh_topk" -> ((s, dir) => Similarity.lshTopK(Tables.embeddings(s, dir))),
+    "ann_lsh_topk" -> Query(Oracles.annLshTopK)((s, dir) =>
+      Similarity.lshTopK(Tables.embeddings(s, dir))),
 
-    "ann_recall_lsh" -> ((s, dir) => Similarity.lshRecall(Tables.embeddings(s, dir))),
+    "ann_recall_lsh" -> Query(Oracles.annRecallLsh)((s, dir) =>
+      Similarity.lshRecall(Tables.embeddings(s, dir))),
 
-    "search_rrf_fusion" -> ((s, dir) =>
+    "search_rrf_fusion" -> Query(Oracles.searchRrfFusion)((s, dir) =>
       Search.rrfFusion(Tables.documents(s, dir), Tables.embeddings(s, dir))),
 
-    "search_mmr_rerank" -> ((s, dir) => Similarity.mmrRerank(Tables.embeddings(s, dir))),
+    "search_mmr_rerank" -> Query(Oracles.searchMmrRerank)((s, dir) =>
+      Similarity.mmrRerank(Tables.embeddings(s, dir))),
 
-    "ann_ivf_topk" -> ((s, dir) => Similarity.ivfTopK(Tables.embeddings(s, dir))),
+    "ann_ivf_topk" -> Query(Oracles.annIvfTopK)((s, dir) =>
+      Similarity.ivfTopK(Tables.embeddings(s, dir))),
 
-    "ann_ivf_trained_topk" -> ((s, dir) => Similarity.ivfTopKTrained(Tables.embeddings(s, dir))),
+    "ann_ivf_trained_topk" -> Query(Oracles.annIvfTrainedTopK)((s, dir) =>
+      Similarity.ivfTopKTrained(Tables.embeddings(s, dir))),
 
-    "ann_recall_ivf" -> ((s, dir) => Similarity.ivfTrainedRecall(Tables.embeddings(s, dir))),
+    "ann_recall_ivf" -> Query(Oracles.annRecallIvfTrained)((s, dir) =>
+      Similarity.ivfTrainedRecall(Tables.embeddings(s, dir))),
 
-    "ann_ndcg_ivf" -> ((s, dir) => Similarity.ivfTrainedNdcg(Tables.embeddings(s, dir))),
+    "ann_ndcg_ivf" -> Query(Oracles.annNdcgIvf)((s, dir) =>
+      Similarity.ivfTrainedNdcg(Tables.embeddings(s, dir))),
 
-    "ann_nprobe_sweep" -> ((s, dir) => Similarity.ivfNprobeSweep(Tables.embeddings(s, dir))),
+    "ann_nprobe_sweep" -> Query(Oracles.annNprobeSweep)((s, dir) =>
+      Similarity.ivfNprobeSweep(Tables.embeddings(s, dir))),
 
-    "ann_nprobe_sweep_ivfpq" -> ((s, dir) =>
+    "ann_nprobe_sweep_ivfpq" -> Query(Oracles.annNprobeSweepIvfPq)((s, dir) =>
       Similarity.ivfPqNprobeSweep(Tables.embeddings(s, dir))),
 
-    "ann_ndcg_lsh" -> ((s, dir) => Similarity.lshNdcg(Tables.embeddings(s, dir))),
+    "ann_ndcg_lsh" -> Query(Oracles.annNdcgLsh)((s, dir) =>
+      Similarity.lshNdcg(Tables.embeddings(s, dir))),
 
-    "search_ndcg_rrf" -> ((s, dir) =>
+    "search_ndcg_rrf" -> Query(Oracles.searchNdcgRrf)((s, dir) =>
       Search.rrfNdcg(Tables.documents(s, dir), Tables.embeddings(s, dir))),
 
-    "ann_knn_graph" -> ((s, dir) => Similarity.knnGraph(Tables.embeddings(s, dir))),
+    "ann_knn_graph" -> Query(Oracles.annKnnGraph)((s, dir) =>
+      Similarity.knnGraph(Tables.embeddings(s, dir))),
 
-    "contrastive_pairs" -> ((s, dir) => Similarity.contrastivePairs(Tables.embeddings(s, dir))),
+    "contrastive_pairs" -> Query(Oracles.contrastivePairs)((s, dir) =>
+      Similarity.contrastivePairs(Tables.embeddings(s, dir))),
 
-    "embed_matryoshka_recall" -> ((s, dir) =>
+    "embed_matryoshka_recall" -> Query(Oracles.annMatryoshkaRecall)((s, dir) =>
       Similarity.matryoshkaRecall(Tables.embeddings(s, dir))),
 
-    "ann_recall_pq" -> ((s, dir) => Similarity.pqRecall(Tables.embeddings(s, dir))),
+    "ann_recall_pq" -> Query(Oracles.annRecallPq)((s, dir) =>
+      Similarity.pqRecall(Tables.embeddings(s, dir))),
 
-    "ann_range_search" -> ((s, dir) => Similarity.rangeSearch(Tables.embeddings(s, dir))),
+    "ann_range_search" -> Query(Oracles.annRangeSearch)((s, dir) =>
+      Similarity.rangeSearch(Tables.embeddings(s, dir))),
 
-    "ann_pq_topk" -> ((s, dir) => Similarity.pqTopK(Tables.embeddings(s, dir))),
+    "ann_pq_topk" -> Query(Oracles.annPqTopK)((s, dir) =>
+      Similarity.pqTopK(Tables.embeddings(s, dir))),
 
-    "ann_ivfpq_topk" -> ((s, dir) => Similarity.ivfPqTopK(Tables.embeddings(s, dir))),
+    "ann_ivfpq_topk" -> Query(Oracles.annIvfPqTopK)((s, dir) =>
+      Similarity.ivfPqTopK(Tables.embeddings(s, dir))),
 
-    "ann_sq_topk" -> ((s, dir) => Similarity.sqTopK(Tables.embeddings(s, dir))),
+    "ann_sq_topk" -> Query(Oracles.annSqTopK)((s, dir) =>
+      Similarity.sqTopK(Tables.embeddings(s, dir))),
 
-    "ann_recall_sq" -> ((s, dir) => Similarity.sqRecall(Tables.embeddings(s, dir))),
+    "ann_recall_sq" -> Query(Oracles.annRecallSq)((s, dir) =>
+      Similarity.sqRecall(Tables.embeddings(s, dir))),
 
-    "ann_recall_ivfpq" -> ((s, dir) => Similarity.ivfPqRecall(Tables.embeddings(s, dir))),
+    "ann_recall_ivfpq" -> Query(Oracles.annRecallIvfPq)((s, dir) =>
+      Similarity.ivfPqRecall(Tables.embeddings(s, dir))),
 
-    "ann_index_compare" -> ((s, dir) => Similarity.indexCompare(Tables.embeddings(s, dir))),
+    "ann_index_compare" -> Query(Oracles.annIndexCompare)((s, dir) =>
+      Similarity.indexCompare(Tables.embeddings(s, dir))),
 
     // ADC-vs-exact agreement of the CORPUS embedding index's two serving
-    // paths on the SAME committed state: the PQ-codes ADC read with exact
-    // re-rank (semanticTopKAdc) against the raw-float exact probe
-    // (semanticTopK), per query over the served top-k
-    "corpus_semantic_adc" -> ((s, dir) => {
-      val state = corpusIndexState(s, dir)
-      val q = Tables.embeddings(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val served = Corpus.semanticTopKAdc(s, q, state)
-        .select(col("query_id"), col("doc_id"), lit(1).as("hit"))
-      Corpus.semanticTopK(s, q, state)
-        .select("query_id", "doc_id")
-        .join(served, Seq("query_id", "doc_id"), "left")
-        .groupBy("query_id")
-        .agg(
-          sum(coalesce(col("hit"), lit(0))).cast("bigint").as("n_hits"),
-          (sum(coalesce(col("hit"), lit(0))).cast("double") /
-            count(lit(1)).cast("double")).as("agreement"))
-        .orderBy("query_id")
-    }),
+    // paths on the SAME committed state
+    "corpus_semantic_adc" -> Query(Oracles.corpusSemanticAdc)((s, dir) =>
+      adcAgreement(s, dir, residual = false)),
 
     // metadata-filtered serving on the SAME at-rest index: per-query
     // adaptive probe budget from the persisted occupancy sidecars,
     // predicate-first candidate scan, exact cosine rank
-    "corpus_filtered_topk" -> ((s, dir) => {
-      val state = corpusIndexState(s, dir)
-      val q = Tables.embeddings(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Corpus.semanticTopKFiltered(s, q, state)
-    }),
+    "corpus_filtered_topk" -> Query(Oracles.corpusFilteredTopK)((s, dir) =>
+      Corpus.semanticTopKFiltered(s, corpusQueries(s, dir), corpusIndexState(s, dir))),
 
     // filtered AND code-served in one path: occupancy-budgeted probe,
     // candidates from the PQ codes (predicate via a column-pruned
     // cells read — no raw floats), exact re-rank on the shortlist only
-    "corpus_filtered_adc" -> ((s, dir) => {
-      val state = corpusIndexState(s, dir)
-      val q = Tables.embeddings(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Corpus.semanticTopKFilteredAdc(s, q, state)
-    }),
+    "corpus_filtered_adc" -> Query(Oracles.corpusFilteredAdc)((s, dir) =>
+      Corpus.semanticTopKFilteredAdc(s, corpusQueries(s, dir), corpusIndexState(s, dir))),
 
     // two-column predicate conjunction on the declared (label, src)
     // occupancy — the multi-attribute filter real corpora serve
-    "corpus_filtered_two_col" -> ((s, dir) => {
-      val state = corpusIndexState(s, dir)
-      val q = Tables.embeddings(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      Corpus.semanticTopKFilteredOn(s, q, state, Map("label" -> 0, "src" -> 1))
-    }),
+    "corpus_filtered_two_col" -> Query(Oracles.corpusFilteredTwoCol)((s, dir) =>
+      Corpus.semanticTopKFilteredOn(s, corpusQueries(s, dir), corpusIndexState(s, dir),
+        Map("label" -> 0, "src" -> 1))),
 
     // the residual-codebook twin of corpus_semantic_adc on its own
-    // at-rest state: per-query agreement of residual-ADC serving with
-    // the exact probe — read next to corpus_semantic_adc's row, the
+    // at-rest state: read next to corpus_semantic_adc's row, the
     // agreement delta IS the residual gain at the same code budget
-    "corpus_adc_residual" -> ((s, dir) => {
-      val state = corpusIndexState(s, dir, residual = true)
-      val q = Tables.embeddings(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val served = Corpus.semanticTopKAdc(s, q, state)
-        .select(col("query_id"), col("doc_id"), lit(1).as("hit"))
-      Corpus.semanticTopK(s, q, state)
-        .select("query_id", "doc_id")
-        .join(served, Seq("query_id", "doc_id"), "left")
-        .groupBy("query_id")
-        .agg(
-          sum(coalesce(col("hit"), lit(0))).cast("bigint").as("n_hits"),
-          (sum(coalesce(col("hit"), lit(0))).cast("double") /
-            count(lit(1)).cast("double")).as("agreement"))
-        .orderBy("query_id")
-    }),
+    "corpus_adc_residual" -> Query(Oracles.corpusAdcResidual)((s, dir) =>
+      adcAgreement(s, dir, residual = true)),
 
-    "knn_classify" -> ((s, dir) => Similarity.knnClassify(Tables.embeddings(s, dir))),
+    "knn_classify" -> Query(Oracles.knnClassify)((s, dir) =>
+      Similarity.knnClassify(Tables.embeddings(s, dir))),
 
-    "label_centroids" -> ((s, dir) => Similarity.labelCentroids(Tables.embeddings(s, dir))),
+    "label_centroids" -> Query(Oracles.labelCentroids)((s, dir) =>
+      Similarity.labelCentroids(Tables.embeddings(s, dir))),
 
-    "topic_assign" -> ((s, dir) => Similarity.topicAssign(Tables.embeddings(s, dir))),
+    "topic_assign" -> Query(Oracles.topicAssign)((s, dir) =>
+      Similarity.topicAssign(Tables.embeddings(s, dir))),
 
-    "tfidf_top_terms" -> ((s, dir) => Search.tfidfTopTerms(Tables.documents(s, dir))),
+    "tfidf_top_terms" -> Query(Oracles.tfidfTopTerms)((s, dir) =>
+      Search.tfidfTopTerms(Tables.documents(s, dir))),
 
-    "bm25_search" -> ((s, dir) => Search.bm25Search(Tables.documents(s, dir))),
+    "bm25_search" -> Query(Oracles.bm25Search)((s, dir) =>
+      Search.bm25Search(Tables.documents(s, dir))),
 
-    "bm25_search_indexed" -> ((s, dir) => {
+    // the in-memory BM25 oracle: the on-disk index must serve exactly the
+    // scores of the in-memory search, so the hash match IS the proof
+    "bm25_search_indexed" -> Query(Oracles.bm25Search) { (s, dir) =>
       // key by data dir AND index-format version: a layout change must
       // never silently serve an index built by older code
       val idx = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_idx_" +
@@ -838,75 +939,91 @@ object SparkEntry {
       if (!new java.io.File(s"$idx/stats").exists())
         Search.buildIndex(Tables.documents(s, dir), idx)
       Search.searchIndexed(s, idx)
-    }),
+    },
 
-    "bigram_lm" -> ((s, dir) => Search.bigramLm(Tables.documents(s, dir))),
+    "bigram_lm" -> Query(Oracles.bigramLm)((s, dir) => Search.bigramLm(Tables.documents(s, dir))),
 
-    "token_pmi" -> ((s, dir) => Search.tokenPmi(Tables.documents(s, dir))),
+    "token_pmi" -> Query(Oracles.tokenPmi)((s, dir) => Search.tokenPmi(Tables.documents(s, dir))),
 
-    "text_entropy" -> ((s, dir) => Corpus.textEntropy(Tables.documents(s, dir))),
+    "text_entropy" -> Query(Oracles.textEntropy)((s, dir) =>
+      Corpus.textEntropy(Tables.documents(s, dir))),
 
-    "bigram_kn_lm" -> ((s, dir) => Search.bigramKnLm(Tables.documents(s, dir))),
+    "bigram_kn_lm" -> Query(Oracles.bigramKnLm)((s, dir) =>
+      Search.bigramKnLm(Tables.documents(s, dir))),
 
-    "bpe_top_merges" -> ((s, dir) => Search.bpeTopMerges(Tables.documents(s, dir))),
+    "bpe_top_merges" -> Query(Oracles.bpeTopMerges)((s, dir) =>
+      Search.bpeTopMerges(Tables.documents(s, dir))),
 
-    "unigram_pieces" -> ((s, dir) =>
+    "unigram_pieces" -> Query(Oracles.unigramPieces)((s, dir) =>
       Search.unigramPieces(s, Search.unigramLearn(Tables.documents(s, dir)))),
 
-    "unigram_encode" -> ((s, dir) => {
+    "unigram_encode" -> Query(Oracles.unigramEncode) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       Search.unigramEncode(docs, Search.unigramLearn(docs))
-    }),
+    },
 
-    "unigram_fertility" -> ((s, dir) => {
+    "unigram_fertility" -> Query(Oracles.unigramFertility) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       Search.unigramFertility(docs, Search.unigramLearn(docs))
-    }),
+    },
 
-    "text_normalize" -> ((s, dir) => Search.normalize(Tables.documents(s, dir))),
+    "text_normalize" -> Query(Oracles.textNormalize)((s, dir) =>
+      Search.normalize(Tables.documents(s, dir))),
 
-    "top_ngrams" -> ((s, dir) => Dedup.topShingles(Tables.documents(s, dir))),
+    "top_ngrams" -> Query(Oracles.topNgrams)((s, dir) =>
+      Dedup.topShingles(Tables.documents(s, dir))),
 
-    "events_funnel" -> ((s, dir) => Analytics.funnel(Tables.events(s, dir))),
+    "events_funnel" -> Query(Oracles.eventsFunnel)((s, dir) =>
+      Analytics.funnel(Tables.events(s, dir))),
 
-    "events_window_funnel" -> ((s, dir) => Analytics.windowFunnel(Tables.events(s, dir))),
+    "events_window_funnel" -> Query(Oracles.eventsWindowFunnel)((s, dir) =>
+      Analytics.windowFunnel(Tables.events(s, dir))),
 
-    "cohort_retention" -> ((s, dir) => Analytics.cohortRetention(Tables.events(s, dir))),
+    "cohort_retention" -> Query(Oracles.cohortRetention)((s, dir) =>
+      Analytics.cohortRetention(Tables.events(s, dir))),
 
-    "order_value_percentiles" -> ((s, dir) =>
+    "order_value_percentiles" -> Query(Oracles.orderValuePercentiles)((s, dir) =>
       Analytics.orderValuePercentiles(Tables.orders(s, dir))),
 
-    "clickers_no_purchase" -> ((s, dir) =>
+    // floor 0: the 30-day click window vs purchase set — no sf0.01 user
+    // clicks without purchasing inside the window (4 real rows at sf0.1)
+    "clickers_no_purchase" -> Query(Oracles.clickersNoPurchase, minRows = 0)((s, dir) =>
       Analytics.clickersWhoNeverPurchased(Tables.events(s, dir))),
 
-    "user_channel_profile" -> ((s, dir) =>
+    "user_channel_profile" -> Query(Oracles.userChannelProfile)((s, dir) =>
       Analytics.userChannelProfile(Tables.events(s, dir))),
 
-    "events_rollup" -> ((s, dir) => Analytics.eventsRollup(Tables.events(s, dir))),
+    "events_rollup" -> Query(Oracles.eventsRollup)((s, dir) =>
+      Analytics.eventsRollup(Tables.events(s, dir))),
 
-    "events_pivot" -> ((s, dir) => Analytics.eventsPivot(Tables.events(s, dir))),
+    "events_pivot" -> Query(Oracles.eventsPivot)((s, dir) =>
+      Analytics.eventsPivot(Tables.events(s, dir))),
 
-    "events_cube" -> ((s, dir) => Analytics.eventsCube(Tables.events(s, dir))),
+    "events_cube" -> Query(Oracles.eventsCube)((s, dir) =>
+      Analytics.eventsCube(Tables.events(s, dir))),
 
-    "events_grouping_sets" -> ((s, dir) =>
+    "events_grouping_sets" -> Query(Oracles.eventsGroupingSets)((s, dir) =>
       Analytics.eventsGroupingSets(Tables.events(s, dir))),
 
-    "clickers_who_purchased" -> ((s, dir) =>
+    "clickers_who_purchased" -> Query(Oracles.clickersWhoPurchased)((s, dir) =>
       Analytics.clickersWhoPurchased(Tables.events(s, dir))),
 
-    "events_dow_hour_heatmap" -> ((s, dir) =>
+    "events_dow_hour_heatmap" -> Query(Oracles.eventsDowHourHeatmap)((s, dir) =>
       Analytics.eventsDowHourHeatmap(Tables.events(s, dir))),
 
-    "events_daily_dense" -> ((s, dir) =>
+    "events_daily_dense" -> Query(Oracles.eventsDailyDense)((s, dir) =>
       Analytics.eventsDailyDense(Tables.events(s, dir))),
 
-    "orders_moving_avg" -> ((s, dir) => Analytics.ordersMovingAvg(Tables.orders(s, dir))),
+    "orders_moving_avg" -> Query(Oracles.ordersMovingAvg)((s, dir) =>
+      Analytics.ordersMovingAvg(Tables.orders(s, dir))),
 
-    "orders_yoy_growth" -> ((s, dir) => Analytics.yoyGrowth(Tables.orders(s, dir))),
+    "orders_yoy_growth" -> Query(Oracles.ordersYoyGrowth)((s, dir) =>
+      Analytics.yoyGrowth(Tables.orders(s, dir))),
 
-    "orders_abc_pareto" -> ((s, dir) => Analytics.abcClassification(Tables.orders(s, dir))),
+    "orders_abc_pareto" -> Query(Oracles.ordersAbcPareto)((s, dir) =>
+      Analytics.abcClassification(Tables.orders(s, dir))),
 
-    "text_langid" -> ((s, dir) =>
+    "text_langid" -> Query(Oracles.textLangid)((s, dir) =>
       Tables.documents(s, dir).select(
         col("doc_id"),
         col("lang").as("declared_lang"),
@@ -914,7 +1031,7 @@ object SparkEntry {
         TextFunctions.langId(col("text")).as("predicted_lang"))
         .orderBy("doc_id")),
 
-    "text_quality" -> ((s, dir) =>
+    "text_quality" -> Query(Oracles.textQuality)((s, dir) =>
       Tables.documents(s, dir).select(
         col("doc_id"),
         TextFunctions.tokenCount(col("text")).as("n_tokens"),
@@ -923,7 +1040,7 @@ object SparkEntry {
         TextFunctions.qualityScore(col("text")).as("quality_score"))
         .orderBy("doc_id")),
 
-    "token_count" -> ((s, dir) =>
+    "token_count" -> Query(Oracles.tokenCount)((s, dir) =>
       Tables.documents(s, dir).select(
         col("doc_id"),
         TextFunctions.tokenCount(col("text")).as("ws_tokens"),
@@ -931,28 +1048,35 @@ object SparkEntry {
         TextFunctions.subwordEstimate(col("text")).as("subword_estimate"))
         .orderBy("doc_id")),
 
-    "doc_fingerprint" -> ((s, dir) =>
+    "doc_fingerprint" -> Query(Oracles.docFingerprint)((s, dir) =>
       Tables.documents(s, dir).select(
         col("doc_id"),
         TextFunctions.fingerprint(col("text")).as("fingerprint"),
         substring(TextFunctions.fingerprint(col("text")), 1, 8).as("fp_bucket"))
         .orderBy("doc_id")),
 
-    "text_repetition" -> ((s, dir) => Corpus.repetitionMetrics(Tables.documents(s, dir))),
+    "text_repetition" -> Query(Oracles.textRepetition)((s, dir) =>
+      Corpus.repetitionMetrics(Tables.documents(s, dir))),
 
-    "multimodal_meta" -> ((s, dir) => Multimodal.metadata(Tables.documents(s, dir))),
+    "multimodal_meta" -> Query(Oracles.multimodalMeta)((s, dir) =>
+      Multimodal.metadata(Tables.documents(s, dir))),
 
-    "multimodal_ahash" -> ((s, dir) => Multimodal.aHashes(Tables.documents(s, dir))),
+    "multimodal_ahash" -> Query(Oracles.multimodalAhash)((s, dir) =>
+      Multimodal.aHashes(Tables.documents(s, dir))),
 
-    "multimodal_dhash" -> ((s, dir) => Multimodal.dHashes(Tables.documents(s, dir))),
+    "multimodal_dhash" -> Query(Oracles.multimodalDhash)((s, dir) =>
+      Multimodal.dHashes(Tables.documents(s, dir))),
 
-    "multimodal_phash_neardup" -> ((s, dir) =>
+    // floor 0: 64-bit perceptual-hash near-dup pairs — the sf0.01 image
+    // slice has no pair within the Hamming radius (7 real pairs at sf0.1);
+    // the brightness-perturbed golden spec pins the matching semantics
+    "multimodal_phash_neardup" -> Query(Oracles.multimodalPhashNeardup, minRows = 0)((s, dir) =>
       Multimodal.imageNearDup(Tables.documents(s, dir))),
 
-    "multimodal_frame_sample" -> ((s, dir) =>
+    "multimodal_frame_sample" -> Query(Oracles.multimodalFrameSample)((s, dir) =>
       Multimodal.frameSample(Tables.documents(s, dir))),
 
-    "multimodal_features" -> ((s, dir) => {
+    "multimodal_features" -> Query(Oracles.multimodalFeatures) { (s, dir) =>
       // Scalar-only projection (f0..f15 instead of the array column): the
       // driver's compare harness sorts/hashes every column, and array
       // cells are unhashable there.
@@ -963,12 +1087,12 @@ object SparkEntry {
           col("width"), col("height"), col("sample_rate"), col("n_channels"),
           col("bit_depth"), col("pcm_peak")) ++ featCols: _*)
         .orderBy("doc_id")
-    }),
+    },
 
-    "events_session_window" -> ((s, dir) =>
+    "events_session_window" -> Query(Oracles.eventsSessionWindow)((s, dir) =>
       Analytics.sessionWindow(Tables.events(s, dir))),
 
-    "stream_windowed_counts" -> ((s, dir) =>
+    "stream_windowed_counts" -> Query(Oracles.streamWindowedCounts)((s, dir) =>
       Tables.events(s, dir)
         .withColumn("event_ts", timestamp_micros(col("ts_us")))
         .groupBy(window(col("event_ts"), "1 hour").as("w"), col("event_type"))
@@ -976,7 +1100,7 @@ object SparkEntry {
         .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total_value"))
         .orderBy("window_start", "event_type")),
 
-    "q1_pricing_summary" -> ((s, dir) =>
+    "q1_pricing_summary" -> Query(Oracles.q1PricingSummary)((s, dir) =>
       Tables.lineitem(s, dir)
         .filter(col("l_shipdate") <= lit("1998-09-02 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -990,304 +1114,5 @@ object SparkEntry {
           (dsum(col("l_discount")) / count(lit(1)).cast("double")).as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus"))
-  )
-
-  /** Non-vacuity floor per query at the sf0.01 gate: a hash gate that
-    * compares two EMPTY results proves nothing — a filter bug that eats
-    * every row on both sides would stay green. Default floor is 1 row;
-    * the explicit-0 entries are the queries whose sf0.01 result is
-    * GENUINELY empty on the driver-owned testdata (verified at sf0.1
-    * where both produce real rows, and each has a golden spec covering
-    * the non-empty semantics). `Verify` records a floor violation in
-    * errors.json so the scoreboard distinguishes "correct empty" from
-    * "silently emptied". */
-  def minRows(name: String): Long = name match {
-    // 30-day click window vs purchase set: no sf0.01 user clicks without
-    // purchasing inside the window (4 real rows at sf0.1).
-    case "clickers_no_purchase" => 0L
-    // 64-bit perceptual-hash near-dup pairs: the sf0.01 image slice has
-    // no pair within the Hamming radius (7 real pairs at sf0.1); the
-    // brightness-perturbed golden spec pins the matching semantics.
-    case "multimodal_phash_neardup" => 0L
-    case _ => 1L
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "conversions_extract"       -> Oracles.conversionsExtract,
-    "sessions_extract"          -> Oracles.sessionsExtract,
-    "journey_build"             -> Oracles.journeyBuild,
-    "journey_flag"              -> Oracles.journeyFlag,
-    "ihc_attribution"           -> Oracles.ihcAttribution,
-    "ihc_redistributed"         -> Oracles.ihcRedistributed,
-    "attribution_sum_check"     -> Oracles.attributionSumCheck,
-    "ihc_lookback"              -> Oracles.ihcLookback,
-    "channel_overlap"           -> Oracles.channelOverlap,
-    "attribution_model_compare" -> Oracles.attributionModelCompare,
-    "orders_seasonality"        -> Oracles.ordersSeasonality,
-    "journey_length_distribution" -> Oracles.journeyLengthDistribution,
-    "channel_position_bias"     -> Oracles.channelPositionBias,
-    "journey_lag_by_opener"     -> Oracles.journeyLagByOpener,
-    "events_quality_audit"      -> Oracles.eventsQualityAudit,
-    "touch_gap_quantiles"       -> Oracles.touchGapQuantiles,
-    "orders_autocorrelation"    -> Oracles.ordersAutocorrelation,
-    "channel_conversion_rate"   -> Oracles.channelConversionRate,
-    "user_purchase_histogram"   -> Oracles.userPurchaseHistogram,
-    "supplier_hhi"              -> Oracles.supplierHhi,
-    "events_hour_profile"       -> Oracles.eventsHourProfile,
-    "journey_stats"             -> Oracles.journeyStats,
-    "journey_validate"          -> Oracles.journeyValidate,
-    "channel_reporting"         -> Oracles.channelReporting,
-    "channel_reporting_metrics" -> Oracles.channelReportingMetrics,
-    "channel_reporting_window"  -> Oracles.channelReportingWindow,
-    "attribution_incremental"   -> Oracles.attributionIncremental,
-    "journey_paths"             -> Oracles.journeyPaths,
-    "channel_transitions"       -> Oracles.channelTransitions,
-    "channel_communities"       -> Oracles.channelCommunities,
-    "basket_lift"               -> Oracles.basketLift,
-    "channel_triangles"         -> Oracles.channelTriangles,
-    "scd2_enrich"               -> Oracles.scd2Enrich,
-    "orders_ewma"               -> Oracles.ordersEwma,
-    "integrity_audit"           -> Oracles.integrityAudit,
-    "user_stickiness"           -> Oracles.userStickiness,
-    "token_zipf"                -> Oracles.tokenZipf,
-    "time_to_convert"           -> Oracles.timeToConvert,
-    "ab_test_welch"             -> Oracles.abTestWelch,
-    "shapley_attribution"       -> Oracles.shapleyAttribution,
-    "embed_outliers"            -> Oracles.embedOutliers,
-    "bpe_coverage"              -> Oracles.bpeCoverage,
-    "q1_pricing_summary"        -> Oracles.q1PricingSummary,
-    "training_data_export"      -> Oracles.trainingDataExport,
-    "journey_hashed_features"   -> Oracles.journeyHashedFeatures,
-    "first_touch_attribution"   -> Oracles.firstTouchAttribution,
-    "last_touch_attribution"    -> Oracles.lastTouchAttribution,
-    "linear_attribution"        -> Oracles.linearAttribution,
-    "time_decay_attribution"    -> Oracles.timeDecayAttribution,
-    "position_attribution"      -> Oracles.positionAttribution,
-    "markov_attribution"        -> Oracles.markovAttribution,
-    "markov2_attribution"       -> Oracles.markov2Attribution,
-    "channel_pagerank"          -> Oracles.channelPagerank,
-    "channel_hits"              -> Oracles.channelHits,
-    "events_anomaly"            -> Oracles.eventsAnomaly,
-    "data_profile"              -> Oracles.dataProfile,
-    "asof_last_session"         -> Oracles.asofLastSession,
-    "asof_next_session"         -> Oracles.asofNextSession,
-    "user_rfm_segments"         -> Oracles.rfmSegments,
-    "range_session_count"       -> Oracles.rangeSessionCount,
-    "winnow_fingerprints"       -> Oracles.winnowFingerprints,
-    "contamination_check"       -> Oracles.contaminationCheck,
-    "contamination_semantic"    -> Oracles.contaminationSemantic,
-    "text_pii_scrub"            -> Oracles.textPiiScrub,
-    "sample_stratified"         -> Oracles.sampleStratified,
-    "sample_priority"           -> Oracles.samplePriority,
-    "doc_chunking"              -> Oracles.docChunking,
-    "sequence_packing"          -> Oracles.sequencePacking,
-    "packing_efficiency"        -> Oracles.packingEfficiency,
-    "shard_skew"                -> Oracles.shardSkew,
-    "doc_len_histogram"         -> Oracles.docLenHistogram,
-    "dup_rate_by_source"        -> Oracles.dupRateBySource,
-    "winnow_overlap"            -> Oracles.winnowOverlap,
-    "quality_length_grid"       -> Oracles.qualityLengthGrid,
-    "vocab_growth"              -> Oracles.vocabGrowth,
-    "lang_confusion"            -> Oracles.langConfusion,
-    "corpus_mixture_entropy"    -> Oracles.corpusMixtureEntropy,
-    "dedup_threshold_sweep"     -> Oracles.dedupThresholdSweep,
-    "mixture_temperature"       -> Oracles.mixtureTemperature,
-    "quality_dup_grid"          -> Oracles.qualityDupGrid,
-    "source_quality_profile"    -> Oracles.sourceQualityProfile,
-    "sessionize_gap_sweep"      -> Oracles.sessionizeGapSweep,
-    "training_shards_balanced"  -> Oracles.trainingShardsBalanced,
-    "minhash_s_curve"           -> Oracles.minhashSCurve,
-    "lm_heldout_score"          -> Oracles.lmHeldoutScore,
-    "domain_cap_sample"         -> Oracles.domainCapSample,
-    "quality_ablation"          -> Oracles.qualityAblation,
-    "nb_lang_classify"          -> Oracles.nbClassify,
-    "quality_classifier_score"  -> Oracles.qualityClassifierScore,
-    "quality_classifier_eval"   -> Oracles.qualityClassifierEval,
-    "classifier_budget_select"  -> Oracles.classifierBudgetSelect,
-    "classifier_threshold_select" -> Oracles.classifierThresholdSelect,
-    "customer_ltv_deciles"      -> Oracles.customerLtvDeciles,
-    "data_mixture_sample"       -> Oracles.dataMixtureSample,
-    "quality_curriculum"        -> Oracles.qualityCurriculum,
-    "lm_doc_score"              -> Oracles.lmDocScore,
-    "corpus_curation"           -> Oracles.corpusCuration,
-    "salted_channel_agg"        -> Oracles.saltedChannelAgg,
-    "sketch_kmv_distinct"       -> Oracles.sketchKmvDistinct,
-    "sketch_cms_frequency"      -> Oracles.sketchCmsFrequency,
-    "sketch_hll_distinct"       -> Oracles.sketchHllDistinct,
-    "sketch_kmv_merged"         -> Oracles.sketchKmvMerged,
-    "sketch_kmv_intersection"   -> Oracles.sketchKmvIntersection,
-    // deliberately the FULL-data CMS oracle: cell-wise-sum merging must
-    // reproduce the full grid exactly, so the hash match IS the proof
-    "sketch_cms_merged"         -> Oracles.sketchCmsFrequency,
-    "sketch_hll_merged"         -> Oracles.sketchHllMerged,
-    "sketch_hist_quantiles"     -> Oracles.sketchHistQuantiles,
-    // counts-only replay of the deterministic md5 position sets: the
-    // false-positive overshoot is part of the checked row
-    "sketch_bloom_prune"        -> Oracles.sketchBloomPrune,
-    "sketch_join_size"          -> Oracles.sketchJoinSize,
-    // the FULL-data Bloom oracle: position-set union (bitwise OR) must
-    // reproduce the full filter exactly, so the hash match IS the proof
-    "sketch_bloom_merged"       -> Oracles.sketchBloomPrune,
-    // the FULL-data histogram oracle: cell-wise-sum merging must
-    // reproduce the full grid exactly, so the hash match IS the proof
-    "sketch_hist_merged"        -> Oracles.sketchHistMerged,
-    "q4_order_priority"         -> Oracles.q4OrderPriority,
-    "q13_custdist"              -> Oracles.q13CustDist,
-    "q17_small_quantity_revenue" -> Oracles.q17SmallQuantityRevenue,
-    "q14_promo_revenue"         -> Oracles.q14PromoRevenue,
-    "events_latest_per_user"    -> Oracles.eventsLatestPerUser,
-    "q3_top_unshipped"          -> Oracles.q3TopUnshipped,
-    "q5_region_revenue"         -> Oracles.q5RegionRevenue,
-    "q7_volume_shipping"        -> Oracles.q7VolumeShipping,
-    "q8_market_share"           -> Oracles.q8MarketShare,
-    "q10_returned_items"        -> Oracles.q10ReturnedItems,
-    "q9_profit_by_nation"       -> Oracles.q9ProfitByNation,
-    "q2_min_price_supplier"     -> Oracles.q2MinPriceSupplier,
-    "q11_important_parts"       -> Oracles.q11ImportantParts,
-    "q12_shipping_priority"     -> Oracles.q12ShippingPriority,
-    "q16_supplier_counts"       -> Oracles.q16SupplierCounts,
-    "q21_waiting_suppliers"     -> Oracles.q21WaitingSuppliers,
-    "q20_promo_suppliers"       -> Oracles.q20PromoSuppliers,
-    "revenue_trend_ols"         -> Oracles.revenueTrendOls,
-    "q15_top_supplier"          -> Oracles.q15TopSupplier,
-    "q18_large_volume"          -> Oracles.q18LargeVolume,
-    "q19_discounted_revenue"    -> Oracles.q19DiscountedRevenue,
-    "q22_global_sales"          -> Oracles.q22GlobalSales,
-    "top_customers_window"      -> Oracles.topCustomersWindow,
-    "running_total_window"      -> Oracles.runningTotalWindow,
-    "events_sessionize"         -> Oracles.eventsSessionize,
-    "events_json_extract"       -> Oracles.eventsJsonExtract,
-    "orders_enrich_denorm"      -> Oracles.ordersEnrichDenorm,
-    "dedup_exact"               -> Oracles.dedupExact,
-    "dedup_exact_substring"     -> Oracles.dedupExactSubstring,
-    "dedup_substring_runs"      -> Oracles.dedupSubstringRuns,
-    "dedup_substring_scrub"     -> Oracles.dedupSubstringScrub,
-    "dedup_minhash_lsh"         -> Oracles.dedupMinhashLsh,
-    "dedup_minhash_incremental" -> Oracles.dedupMinhashIncremental,
-    "split_leakage_free"        -> Oracles.splitLeakageFree,
-    "dedup_clusters"            -> Oracles.dedupClusters,
-    "dedup_hybrid_clusters"     -> Oracles.dedupHybridClusters,
-    "dedup_semantic"            -> Oracles.dedupSemantic,
-    "dedup_embedding_incremental" -> Oracles.dedupEmbeddingIncremental,
-    "dedup_embedding_eval"      -> Oracles.dedupEmbeddingEval,
-    "dedup_gate_probe_sweep"    -> Oracles.dedupGateProbeSweep,
-    "dedup_edit_verified"       -> Oracles.dedupEditVerified,
-    "dedup_minhash_eval"        -> Oracles.dedupMinhashEval,
-    "ngram_novelty"             -> Oracles.ngramNovelty,
-    "dedup_chunks_exact"        -> Oracles.dedupChunks,
-    "chunk_dup_stats"           -> Oracles.chunkDupStats,
-    "dedup_cluster_sizes"       -> Oracles.dedupClusterSizes,
-    "nation_trade_balance"      -> Oracles.nationTradeBalance,
-    "shingle_df_histogram"      -> Oracles.shingleDfHistogram,
-    "training_shards"           -> Oracles.trainingShards,
-    "shard_checksums"           -> Oracles.shardChecksums,
-    "corpus_drift"              -> Oracles.corpusDrift,
-    "corpus_drift_summary"      -> Oracles.corpusDriftSummary,
-    "dedup_keep_best"           -> Oracles.dedupKeepBest,
-    "corpus_datasheet"          -> Oracles.corpusDatasheet,
-    "embed_rp_project"          -> Oracles.embedRpProject,
-    "embed_center_norm"         -> Oracles.embedCenterNorm,
-    "embed_dim_stats"           -> Oracles.embedDimStats,
-    "embed_whiten"              -> Oracles.embedWhiten,
-    "q6_forecast_revenue"       -> Oracles.q6ForecastRevenue,
-    "dedup_simhash"             -> Oracles.dedupSimhash,
-    "dedup_simhash_near"        -> Oracles.dedupSimhashNear,
-    "dedup_containment"         -> Oracles.dedupNgramContainment,
-    "dedup_hot_spans"           -> Oracles.dedupHotSpans,
-    "dsir_select"               -> Oracles.dsirSelect,
-    "scd2_user_state"           -> Oracles.scd2UserState,
-    "dedup_ngram_jaccard"       -> Oracles.dedupNgramJaccard,
-    "dedup_embedding"           -> Oracles.dedupEmbedding,
-    "ann_bruteforce_topk"       -> Oracles.annBruteforceTopK,
-    "ann_filtered_topk"         -> Oracles.annFilteredTopK,
-    "ann_filtered_ivf_topk"     -> Oracles.annFilteredIvfTopK,
-    "ann_adaptive_probe"        -> Oracles.annAdaptiveProbe,
-    "ann_graph_search"          -> Oracles.annGraphSearch,
-    "ann_beam_sweep"            -> Oracles.annBeamSweep,
-    "ann_ivfpq_residual_topk"   -> Oracles.annIvfPqResidualTopK,
-    "ann_recall_ivfpq_residual" -> Oracles.annRecallIvfpqResidual,
-    "ann_recall_graph"          -> Oracles.annRecallGraph,
-    "ann_filtered_graph"        -> Oracles.annFilteredGraph,
-    "ann_recall_filtered_graph" -> Oracles.annRecallFilteredGraph,
-    "ann_recall_filtered"       -> Oracles.annRecallFiltered,
-    "lm_ppl_buckets"            -> Oracles.lmPplBuckets,
-    "ann_lsh_topk"              -> Oracles.annLshTopK,
-    "ann_recall_lsh"            -> Oracles.annRecallLsh,
-    "ann_ndcg_ivf"              -> Oracles.annNdcgIvf,
-    "ann_nprobe_sweep"          -> Oracles.annNprobeSweep,
-    "ann_nprobe_sweep_ivfpq"    -> Oracles.annNprobeSweepIvfPq,
-    "ann_ndcg_lsh"              -> Oracles.annNdcgLsh,
-    "search_ndcg_rrf"           -> Oracles.searchNdcgRrf,
-    "search_rrf_fusion"         -> Oracles.searchRrfFusion,
-    "search_mmr_rerank"         -> Oracles.searchMmrRerank,
-    "ann_ivf_topk"              -> Oracles.annIvfTopK,
-    "ann_ivf_trained_topk"      -> Oracles.annIvfTrainedTopK,
-    "ann_recall_ivf"            -> Oracles.annRecallIvfTrained,
-    "ann_knn_graph"             -> Oracles.annKnnGraph,
-    "contrastive_pairs"         -> Oracles.contrastivePairs,
-    "embed_matryoshka_recall"   -> Oracles.annMatryoshkaRecall,
-    "ann_recall_pq"             -> Oracles.annRecallPq,
-    "top_ngrams"                -> Oracles.topNgrams,
-    "events_funnel"             -> Oracles.eventsFunnel,
-    "events_window_funnel"      -> Oracles.eventsWindowFunnel,
-    "cohort_retention"          -> Oracles.cohortRetention,
-    "order_value_percentiles"   -> Oracles.orderValuePercentiles,
-    "clickers_no_purchase"      -> Oracles.clickersNoPurchase,
-    "user_channel_profile"      -> Oracles.userChannelProfile,
-    "events_rollup"             -> Oracles.eventsRollup,
-    "events_pivot"              -> Oracles.eventsPivot,
-    "events_cube"               -> Oracles.eventsCube,
-    "events_grouping_sets"      -> Oracles.eventsGroupingSets,
-    "clickers_who_purchased"    -> Oracles.clickersWhoPurchased,
-    "events_dow_hour_heatmap"   -> Oracles.eventsDowHourHeatmap,
-    "events_daily_dense"        -> Oracles.eventsDailyDense,
-    "orders_moving_avg"         -> Oracles.ordersMovingAvg,
-    "orders_yoy_growth"         -> Oracles.ordersYoyGrowth,
-    "orders_abc_pareto"         -> Oracles.ordersAbcPareto,
-    "corpus_budget_select"      -> Oracles.corpusBudgetSelect,
-    "corpus_budget_by_lang"     -> Oracles.corpusBudgetByLang,
-    "text_langid"               -> Oracles.textLangid,
-    "text_quality"              -> Oracles.textQuality,
-    "token_count"               -> Oracles.tokenCount,
-    "doc_fingerprint"           -> Oracles.docFingerprint,
-    "text_repetition"           -> Oracles.textRepetition,
-    "tfidf_top_terms"           -> Oracles.tfidfTopTerms,
-    "bm25_search"               -> Oracles.bm25Search,
-    "bm25_search_indexed"       -> Oracles.bm25Search,
-    "bigram_lm"                 -> Oracles.bigramLm,
-    "token_pmi"                 -> Oracles.tokenPmi,
-    "text_entropy"              -> Oracles.textEntropy,
-    "bigram_kn_lm"              -> Oracles.bigramKnLm,
-    "bpe_top_merges"            -> Oracles.bpeTopMerges,
-    "bpe_encode"                -> Oracles.bpeEncode,
-    "unigram_pieces"            -> Oracles.unigramPieces,
-    "unigram_encode"            -> Oracles.unigramEncode,
-    "unigram_fertility"         -> Oracles.unigramFertility,
-    "text_normalize"            -> Oracles.textNormalize,
-    "ann_range_search"          -> Oracles.annRangeSearch,
-    "ann_pq_topk"               -> Oracles.annPqTopK,
-    "ann_ivfpq_topk"            -> Oracles.annIvfPqTopK,
-    "ann_sq_topk"               -> Oracles.annSqTopK,
-    "ann_recall_sq"             -> Oracles.annRecallSq,
-    "ann_recall_ivfpq"          -> Oracles.annRecallIvfPq,
-    "ann_index_compare"         -> Oracles.annIndexCompare,
-    "corpus_semantic_adc"       -> Oracles.corpusSemanticAdc,
-    "corpus_filtered_topk"      -> Oracles.corpusFilteredTopK,
-    "corpus_filtered_adc"       -> Oracles.corpusFilteredAdc,
-    "corpus_filtered_two_col"   -> Oracles.corpusFilteredTwoCol,
-    "corpus_adc_residual"       -> Oracles.corpusAdcResidual,
-    "knn_classify"              -> Oracles.knnClassify,
-    "label_centroids"           -> Oracles.labelCentroids,
-    "topic_assign"              -> Oracles.topicAssign,
-    "multimodal_meta"           -> Oracles.multimodalMeta,
-    "multimodal_ahash"          -> Oracles.multimodalAhash,
-    "multimodal_dhash"          -> Oracles.multimodalDhash,
-    "multimodal_phash_neardup"  -> Oracles.multimodalPhashNeardup,
-    "multimodal_frame_sample"   -> Oracles.multimodalFrameSample,
-    "multimodal_features"       -> Oracles.multimodalFeatures,
-    "events_session_window"     -> Oracles.eventsSessionWindow,
-    "stream_windowed_counts"    -> Oracles.streamWindowedCounts
   )
 }

@@ -1276,7 +1276,7 @@ object Corpus {
     val predFilter = idx.predCols
       .map(c => col(c) === lit(predicates(c))).reduce(_ && _)
     // merged predicate-slice occupancy: ≤K rows of index metadata
-    val occRows = spark.read.parquet(idx.occDirs.map(d => s"$stateDir/$d"): _*)
+    val occRows = graft.sources.Tables.parquet(spark, idx.occDirs.map(d => s"$stateDir/$d"): _*)
       .filter(predFilter)
       .groupBy("cell").agg(sum("n").as("o"))
       .collect().map(r => (r.getAs[Long]("cell"), r.getAs[Long]("o")))
@@ -1323,7 +1323,7 @@ object Corpus {
     graft.functions.GraftFunctions.register(spark)
     val idx = filteredIndexAtRest(spark, stateDir, predicates)
     val probes = budgetedProbes(spark, stateDir, idx, queries, predicates, targetPct)
-    val index = spark.read.parquet(idx.cellDirs.map(d => s"$stateDir/$d"): _*)
+    val index = graft.sources.Tables.parquet(spark, idx.cellDirs.map(d => s"$stateDir/$d"): _*)
       .filter(col("cell").isInCollection(probedCells(probes)))
     val predFilter = idx.predCols
       .map(c => col(c) === lit(predicates(c))).reduce(_ && _)
@@ -1388,7 +1388,7 @@ object Corpus {
     // ints only, the embedding floats stay unread
     val predFilter = idx.predCols
       .map(c => col(c) === lit(predicates(c))).reduce(_ && _)
-    val metaSlice = spark.read.parquet(idx.cellDirs.map(d => s"$stateDir/$d"): _*)
+    val metaSlice = graft.sources.Tables.parquet(spark, idx.cellDirs.map(d => s"$stateDir/$d"): _*)
       .filter(col("cell").isInCollection(cells))
       .filter(predFilter)
       .select(Seq(col("cell"), col("doc_id")) ++ idx.predCols.map(col): _*)

@@ -1016,8 +1016,6 @@ object Dedup {
       val next = if (iter == 0) round(e) else round(round(e))
       val nextStats = edgeStats(next)
       changed = nextStats != eStats
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[star] iter=$iter edges=${nextStats._1} changed=$changed")
       e = next
       eStats = nextStats
       iter += 1

@@ -30,14 +30,14 @@ object Tables {
     spark
   }
 
-  /** A parquet read whose schema comes from the footer Spark's own
-    * inference would read, read on the driver
+  /** A parquet read of one or more paths whose schema comes from the
+    * footer Spark's own inference would read, read on the driver
     * ([[org.apache.spark.sql.execution.datasources.parquet.FooterSchema]]):
     * the same schema without Spark's inference job. A path with no parquet
     * file falls back to the plain read and its error. */
-  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
-    FooterSchema.read(spark, path)
-      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  private[graft] def parquet(spark: SparkSession, paths: String*): DataFrame =
+    FooterSchema.read(spark, paths: _*)
+      .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)

@@ -1,34 +1,38 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 
-/** The schema Spark's non-merging parquet inference would give a path,
-  * read from one footer on the driver. Spark's inference reads the same
-  * footer with a Spark job of its own; passing this schema to the scan
-  * saves that job. The footer reader, the summary-file rules and the
-  * schema converter (session conf, Spark's key-value schema first) are
-  * Spark's, which keeps them `private[parquet]`: hence this package. */
+/** The schema Spark's non-merging parquet inference would give a read of
+  * one or more root paths, read from one footer on the driver. Spark's
+  * inference reads the same footer with a Spark job of its own; passing
+  * this schema to the scan saves that job. The footer reader, the
+  * summary-file rules and the schema converter (session conf, Spark's
+  * key-value schema first) are Spark's, which keeps them
+  * `private[parquet]`: hence this package. */
 object FooterSchema {
 
-  /** `None` when `path` holds no parquet file — the caller's plain read
-    * then raises Spark's own error. */
-  def read(spark: SparkSession, path: String): Option[StructType] = {
+  /** `None` when the paths hold no parquet file, or one path is missing —
+    * the caller's plain read then raises Spark's own error. The leaves of
+    * all paths are sorted together, as Spark's inference sorts them. */
+  def read(spark: SparkSession, paths: String*): Option[StructType] = {
     val session = spark.asInstanceOf[classic.SparkSession]
     val conf = session.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    def leaves(s: FileStatus): Seq[FileStatus] =
+    def leaves(fs: FileSystem, s: FileStatus): Seq[FileStatus] =
       if (!s.isDirectory) Seq(s)
       else fs.listStatus(s.getPath).toSeq
         .filterNot(c => HadoopFSUtils.shouldFilterOutPathName(c.getPath.getName))
-        .flatMap(leaves)
+        .flatMap(leaves(fs, _))
     val files =
-      try leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+      try paths.flatMap { p =>
+        val root = new Path(p)
+        val fs = root.getFileSystem(conf)
+        leaves(fs, fs.getFileStatus(root))
+      }.sortBy(_.getPath.toString)
       catch { case _: java.io.FileNotFoundException => Nil }
     val summaries =
       Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)

@@ -34,7 +34,15 @@ class FooterSchemaSpec extends SparkSpec with SparkJobs {
     assert(new java.io.File(p).listFiles().exists(_.getName == "_SUCCESS"))
     assert(FooterSchema.read(spark, p) === Some(inferred(p)))
     assert(Tables.parquet(spark, p).collect().length === 2)
+    // several roots: their files sort together, so the first file in path
+    // order gives the schema, not the first root's
+    val q = s"$dir/u.parquet"
+    Seq((3L, "c", 4.5, 7)).toDF("id", "s", "x", "extra").write.parquet(q)
+    assert(FooterSchema.read(spark, q, p) === Some(spark.read.parquet(q, p).schema))
+    assert(FooterSchema.read(spark, q, p) === Some(inferred(p)))
+    assert(Tables.parquet(spark, q, p).collect().length === 3)
     assert(FooterSchema.read(spark, s"$dir/absent.parquet").isEmpty)
+    assert(FooterSchema.read(spark, p, s"$dir/absent.parquet").isEmpty)
     intercept[org.apache.spark.sql.AnalysisException] {
       Tables.parquet(spark, s"$dir/absent.parquet")
     }

@@ -1273,6 +1273,28 @@ class LayoutSpec extends SparkSpec with SparkJobs {
     assert(jobs.size <= 12, s"semanticTopKAdc: ${jobs.size} jobs, budget 12")
   }
 
+  test("job budget: both filtered serving paths read the occupancy and " +
+    "cells dirs without a footer-inference job") {
+    import graft.operators.Corpus
+    import spark.implicits._
+    val state = Files.createTempDirectory("graft-filtjobs").toString
+    assert(Corpus.ingestIncremental(spark,
+      (0L to 19L).map(labeledDoc).toDF(labeledCols: _*), state) === 20L)
+    assert(Corpus.refreshEmbeddingIndex(spark, state) === 1L)
+    Corpus.initEmbeddingCodebooks(spark, state)
+    assert(Corpus.encodeEmbeddingIndex(spark, state) === 1L)
+    val queries = Seq((100L, denseHot(7)), (101L, denseHot(22))).toDF("query_id", "embedding")
+    val (exact, exactJobs) = jobsOf(Corpus.semanticTopKFilteredOn(
+      spark, queries, state, Map("label" -> 1)).collect())
+    val (adc, adcJobs) = jobsOf(Corpus.semanticTopKFilteredAdc(
+      spark, queries, state, Map("label" -> 1)).collect())
+    assert(exact.nonEmpty && adc.nonEmpty)
+    info(s"semanticTopKFilteredOn: ${exactJobs.size} jobs (budget 13), " +
+      s"semanticTopKFilteredAdc: ${adcJobs.size} jobs (budget 19)")
+    assert(exactJobs.size <= 13, s"semanticTopKFilteredOn: ${exactJobs.size} jobs, budget 13")
+    assert(adcJobs.size <= 19, s"semanticTopKFilteredAdc: ${adcJobs.size} jobs, budget 19")
+  }
+
   test("occupancy backfill: a labeled index whose sidecars are lost is " +
     "backfilled by the next refresh without re-assignment") {
     import graft.operators.Corpus

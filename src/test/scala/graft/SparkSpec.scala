@@ -5,13 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session per suite; sf0.001 testdata for invariants. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sfDir = "/root/testdata/sf0.001"
 }
