@@ -220,7 +220,7 @@ object ScaleSmoke {
     // pinned at ≈ the target cell size (1024) across a 10× corpus growth,
     // where a fixed k would grow it ~10×. Both sizes sit past the 16-cell
     // clamp knee so the flatness signal is real. Assignment reuses the
-    // operator's own trained quantizer + cellRank chain.
+    // operator's own trained quantizer + cell assignment.
     Seq(nSem, nSem * 10).foreach { nv =>
       val v = spark.range(nv).selectExpr(
         "id AS vec_id",
@@ -231,9 +231,7 @@ object ScaleSmoke {
         val cents = graft.operators.Similarity.trainCentroids(v, k, iters = 2)
         val feat = v.select(col("vec_id"), col("embedding"),
           graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm"))
-        val cellCounts = feat.select(element_at(
-          graft.operators.Similarity.cellRank(cents, col("embedding"), col("nrm")), 1)
-          .getField("cid").as("cell"))
+        val cellCounts = feat.select(graft.operators.Similarity.cellOf(cents).as("cell"))
           .groupBy("cell").count().collect()
         val pairs = cellCounts.map(r => { val c = r.getAs[Long]("count"); c * c }).sum
         println(f"[scale] semdedup nVecs=$nv cells=$k sum_cell_sq=$pairs " +

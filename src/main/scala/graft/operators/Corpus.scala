@@ -509,8 +509,71 @@ object Corpus {
     n
   }
 
+  /** One embedding-index generation of a manifest snapshot's `live`
+    * entries: the quantizer tag `qTag` (`quantizer/<gen>`) and the index
+    * dirs built against it. An index dir is `<kind>/<docTag>__<gen>` —
+    * kind `embcells` (cell assignments), `embocc` (occupancy sidecar) or
+    * `embcodes` (PQ codes), docTag the document batch it covers — and
+    * [[dir]] is the one place that name is built. */
+  private final case class IndexGen(qTag: String, live: Seq[String]) {
+    private val suffix = "__" + qTag.stripPrefix("quantizer/")
+
+    /** The `kind` dir of document batch `docTag` in this generation. */
+    def dir(kind: String, docTag: String): String = s"$kind/$docTag$suffix"
+
+    /** This generation's live `kind` dirs, in manifest order. */
+    def dirs(kind: String): Seq[String] =
+      live.filter(c => c.startsWith(s"$kind/") && c.endsWith(suffix))
+
+    lazy val cellDirs: Seq[String] = dirs("embcells")
+
+    /** The document batches this generation's live `kind` dirs cover. */
+    def docTags(kind: String): Set[String] =
+      dirs(kind).map(_.stripPrefix(s"$kind/").stripSuffix(suffix)).toSet
+
+    /** Whether `e` is a cells or occupancy dir of another generation, or
+      * of a batch not in `docs`: what a refresh drops. */
+    def dead(docs: Set[String])(e: String): Boolean =
+      Seq("embcells/", "embocc/").exists(p => e.startsWith(p) &&
+        (!e.endsWith(suffix) || !docs(e.stripPrefix(p).stripSuffix(suffix))))
+  }
+
+  /** The same batch and generation's index dir of another `kind`. */
+  private def twin(e: String, kind: String): String = kind + e.substring(e.indexOf('/'))
+
+  /** The document batch index dir `e` covers, in any generation. */
+  private def indexedDoc(e: String): Option[String] =
+    Seq("embcells/", "embocc/", "embcodes/").find(e.startsWith)
+      .map(p => e.stripPrefix(p).split("__", 2)(0))
+
+  /** The live embedding-index generation of `snap`, when a quantizer is
+    * live. Pure: no snapshot of its own, no I/O. */
+  private def liveGen(snap: graft.sources.Manifest.Snapshot): Option[IndexGen] =
+    snap.live.find(_.startsWith("quantizer/")).map(IndexGen(_, snap.live))
+
+  /** [[liveGen]], or the refusal of the paths that need an index. */
+  private def indexGen(snap: graft.sources.Manifest.Snapshot, stateDir: String): IndexGen =
+    liveGen(snap).getOrElse(throw new java.io.IOException(
+      s"no embedding index at $stateDir — run refreshEmbeddingIndex first"))
+
+  /** `gen`, refused by the serving paths when it has no cells: a
+    * quantizer live with zero cell dirs (e.g. every doc deleted, then
+    * refreshed) would otherwise hand the reader an empty parquet path
+    * list and an opaque schema-inference error. */
+  private def withCells(gen: IndexGen, stateDir: String): IndexGen =
+    if (gen.cellDirs.nonEmpty) gen
+    else throw new java.io.IOException(
+      s"no embedding index cells at $stateDir — run refreshEmbeddingIndex first")
+
+  /** The live codebook tag, or the refusal of the paths that need one. */
+  private def codebookTag(snap: graft.sources.Manifest.Snapshot, stateDir: String): String =
+    snap.live.find(_.startsWith("embpq/")).getOrElse(
+      throw new java.io.IOException(
+        s"no embedding codebooks at $stateDir — run initEmbeddingCodebooks first"))
+
   /** Read the persisted coarse quantizer back as the in-memory centroid
-    * array [[graft.operators.Similarity.cellRank]] consumes. Norms are
+    * array the probe vocabulary ([[graft.operators.Similarity.cellOf]],
+    * [[graft.operators.Similarity.probeCells]]) consumes. Norms are
     * recomputed from the stored floats with the identical decimal
     * arithmetic training used — floats round-trip parquet exactly, so
     * the read-back quantizer is bit-equal to the trained one. */
@@ -563,9 +626,7 @@ object Corpus {
       (Seq(col("doc_id"), col("embedding"),
         graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm")) ++
         ride): _*)
-    feat.withColumn("cell",
-      element_at(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1)
-        .getField("cid"))
+    feat.withColumn("cell", Similarity.cellOf(cents))
       .select((Seq(col("doc_id"), col("cell"), col("embedding"), col("nrm")) ++
         ride): _*)
   }
@@ -607,7 +668,10 @@ object Corpus {
     * cell-clustered dirs [[writeCellsAndOcc]] writes, row-group stats
     * prune the read to the probed cells. The probes JOIN still does the
     * per-query pairing; the pushed filter is what keeps a 100 TB index
-    * from being fully scanned per query batch. */
+    * from being fully scanned per query batch. Every probe of the index
+    * at rest takes it: [[semanticTopK]], [[semanticTopKAdc]],
+    * [[semanticTopKFilteredOn]], [[semanticTopKFilteredAdc]] and
+    * [[ingestSemanticNearDup]]. */
   private def probedCells(probes: DataFrame): Seq[Long] =
     probes.select("cell").collect().map(_.getLong(0)).distinct.toSeq
 
@@ -653,129 +717,85 @@ object Corpus {
     import graft.sources.Manifest
     val ttlMs = 5 * 60 * 1000L
     var lease = acquireRefreshMutex(spark, stateDir, mutexWaitMs, "embidx_refresh")
+    def docsOf(live: Seq[String]): Set[String] =
+      live.collect { case d if d.startsWith("documents/") => d.stripPrefix("documents/") }.toSet
     try {
       Manifest.cleanStale(spark, stateDir, Seq("embcells", "embocc", "quantizer"))
       val snap = Manifest.snapshot(spark, stateDir)
-      val docTags = snap.live
-        .collect { case d if d.startsWith("documents/") => d.stripPrefix("documents/") }
-        .toSet
+      val docTags = docsOf(snap.live)
       if (docTags.isEmpty) return 0L
-      val curQ = snap.live.find(_.startsWith("quantizer/"))
+      val live = liveGen(snap)
       val trainedN = snap.meta.get("emb_quantizer_n").map(_.toLong)
       val corpus = spark.read
         .parquet(docTags.toSeq.sorted.map(t => s"$stateDir/documents/$t"): _*)
       val n = corpus.count()
-      val retrain = curQ.isEmpty ||
+      val retrain = live.isEmpty ||
         trainedN.forall(q => n.toDouble >= retrainFactor * q)
-      def cellTag(docTag: String, qTag: String): String =
-        s"embcells/${docTag}__${qTag.stripPrefix("quantizer/")}"
-      def occTag(docTag: String, qTag: String): String =
-        s"embocc/${docTag}__${qTag.stripPrefix("quantizer/")}"
-      if (retrain) {
-        val k = Similarity.autoCellCount(n)
-        val cents = Similarity.trainCentroids(
-          corpus.select(col("doc_id").as("vec_id"), col("embedding")), k,
-          nPre = Some(n)) // `n` already counted for the retrain decision
-        val qTag =
-          s"quantizer/q${snap.alloc + 1}_${java.util.UUID.randomUUID().toString.take(8)}"
-        import spark.implicits._
-        cents.toSeq.map { case (cid, vec, _) => (cid, vec.toSeq) }
-          .toDF("cid", "embedding").coalesce(1).write.parquet(s"$stateDir/$qTag")
-        val occd = scala.collection.mutable.Set.empty[String]
-        docTags.toSeq.sorted.foreach { t =>
-          lease = Manifest.renewLease(spark, stateDir, lease, ttlMs)
-          if (writeCellsAndOcc(spark, spark.read.parquet(s"$stateDir/documents/$t"),
-              cents, s"$stateDir/${cellTag(t, qTag)}", s"$stateDir/${occTag(t, qTag)}",
-              predicateCols))
-            occd += t
-        }
-        if (!Manifest.holdsLease(spark, stateDir, lease))
-          throw new java.io.IOException(
-            s"embidx_refresh lease at $stateDir was reaped mid-refresh; " +
-              "aborting without publishing")
-        Manifest.publishMerge(spark, stateDir) { cur =>
-          val curDocs = cur.live
-            .collect { case d if d.startsWith("documents/") => d.stripPrefix("documents/") }
-            .toSet
-          // the whole embedding index swaps to the new generation; cells
-          // exist only for the doc tags re-assigned above — a batch a
-          // concurrent ingest committed meanwhile is picked up by the
-          // next refresh (same eventual shape as the signature index)
-          val keep = cur.live.filterNot(e =>
-            e.startsWith("embcells/") || e.startsWith("embocc/") ||
-              e.startsWith("quantizer/"))
-          val adds = qTag +: docTags.intersect(curDocs).toSeq.sorted.flatMap(t =>
-            cellTag(t, qTag) +: (if (occd(t)) Seq(occTag(t, qTag)) else Nil))
-          ((keep ++ adds).distinct, cur.meta +
-            ("emb_quantizer_n" -> n.toString) +
-            ("embocc_cols" -> predicateCols.mkString(",")))
-        }
-        docTags.size.toLong
-      } else {
-        val qTag = curQ.get
-        // assign-only refreshes follow the PERSISTED declaration — a
-        // caller passing a different predicateCols set cannot mix
-        // sidecar schemas inside one index generation
-        val declared = declaredPredCols(snap.meta)
-        val suffix = "__" + qTag.stripPrefix("quantizer/")
-        val celled = snap.live.collect {
-          case c if c.startsWith("embcells/") && c.endsWith(suffix) =>
-            c.stripPrefix("embcells/").stripSuffix(suffix)
-        }.toSet
-        val occed = snap.live.collect {
-          case c if c.startsWith("embocc/") && c.endsWith(suffix) =>
-            c.stripPrefix("embocc/").stripSuffix(suffix)
-        }.toSet
-        val missing = docTags -- celled
-        // a cells dir that predates occupancy sidecars (or whose sidecar
-        // was lost) would otherwise never be backfilled, permanently
-        // refusing filtered serving on a fully-covered corpus — treat
-        // covered cell dirs lacking an occ twin as work too, aggregating
-        // the sidecar from the existing cells (no re-assignment)
-        val occMissing = (celled -- occed -- missing).toSeq.sorted.filter { t =>
-          val cols = spark.read.parquet(s"$stateDir/${cellTag(t, qTag)}").columns
-          declared.forall(cols.contains)
-        }
-        def idxOrphan(prefix: String) = snap.live.exists(c => c.startsWith(prefix) &&
-          (!c.endsWith(suffix) ||
-            !docTags(c.stripPrefix(prefix).stripSuffix(suffix))))
-        val orphaned = idxOrphan("embcells/") || idxOrphan("embocc/")
-        if (missing.isEmpty && occMissing.isEmpty && !orphaned) return 0L
-        val cents = readQuantizer(spark, stateDir, qTag)
-        val occd = scala.collection.mutable.Set.empty[String]
-        missing.toSeq.sorted.foreach { t =>
-          lease = Manifest.renewLease(spark, stateDir, lease, ttlMs)
-          if (writeCellsAndOcc(spark, spark.read.parquet(s"$stateDir/documents/$t"),
-              cents, s"$stateDir/${cellTag(t, qTag)}", s"$stateDir/${occTag(t, qTag)}",
-              declared))
-            occd += t
-        }
-        occMissing.foreach { t =>
-          lease = Manifest.renewLease(spark, stateDir, lease, ttlMs)
-          writeOccFromCells(spark, s"$stateDir/${cellTag(t, qTag)}",
-            s"$stateDir/${occTag(t, qTag)}", declared)
-          occd += t
-        }
-        if (!Manifest.holdsLease(spark, stateDir, lease))
-          throw new java.io.IOException(
-            s"embidx_refresh lease at $stateDir was reaped mid-refresh; " +
-              "aborting without publishing")
-        Manifest.publishMerge(spark, stateDir) { cur =>
-          val curDocs = cur.live
-            .collect { case d if d.startsWith("documents/") => d.stripPrefix("documents/") }
-            .toSet
-          def dead(prefix: String)(e: String) = e.startsWith(prefix) &&
-            (!e.endsWith(suffix) ||
-              !curDocs(e.stripPrefix(prefix).stripSuffix(suffix)))
-          val keep = cur.live.filterNot(e =>
-            dead("embcells/")(e) || dead("embocc/")(e))
-          val adds = missing.intersect(curDocs).toSeq.sorted.flatMap(t =>
-            cellTag(t, qTag) +: (if (occd(t)) Seq(occTag(t, qTag)) else Nil)) ++
-            occMissing.filter(curDocs.contains).map(t => occTag(t, qTag))
-          ((keep ++ adds).distinct, cur.meta)
-        }
-        missing.size.toLong + occMissing.size.toLong
+      // a retrain assigns every batch into a new generation; otherwise
+      // batches join the live one, and assign-only refreshes follow the
+      // PERSISTED declaration — a caller passing a different
+      // predicateCols set cannot mix sidecar schemas inside one index
+      // generation
+      val gen = if (retrain) IndexGen(
+        s"quantizer/q${snap.alloc + 1}_${java.util.UUID.randomUUID().toString.take(8)}", Nil)
+        else live.get
+      val declared = if (retrain) predicateCols else declaredPredCols(snap.meta)
+      val celled = gen.docTags("embcells")
+      val missing = (docTags -- celled).toSeq.sorted
+      // a cells dir that predates occupancy sidecars (or whose sidecar
+      // was lost) would otherwise never be backfilled, permanently
+      // refusing filtered serving on a fully-covered corpus — treat
+      // covered cell dirs lacking an occ twin as work too, aggregating
+      // the sidecar from the existing cells (no re-assignment)
+      val occMissing = (celled -- gen.docTags("embocc") -- missing).toSeq.sorted.filter { t =>
+        val cols = spark.read.parquet(s"$stateDir/${gen.dir("embcells", t)}").columns
+        declared.forall(cols.contains)
       }
+      if (missing.isEmpty && occMissing.isEmpty && !snap.live.exists(gen.dead(docTags)))
+        return 0L
+      val cents =
+        if (retrain) {
+          val trained = Similarity.trainAtAutoCellCount(
+            corpus.select(col("doc_id").as("vec_id"), col("embedding")), 0, 2,
+            nPre = Some(n)) // `n` already counted for the retrain decision
+          import spark.implicits._
+          trained.toSeq.map { case (cid, vec, _) => (cid, vec.toSeq) }
+            .toDF("cid", "embedding").coalesce(1).write.parquet(s"$stateDir/${gen.qTag}")
+          trained
+        } else readQuantizer(spark, stateDir, gen.qTag)
+      val occd = missing.filter { t =>
+        lease = Manifest.renewLease(spark, stateDir, lease, ttlMs)
+        writeCellsAndOcc(spark, spark.read.parquet(s"$stateDir/documents/$t"), cents,
+          s"$stateDir/${gen.dir("embcells", t)}", s"$stateDir/${gen.dir("embocc", t)}",
+          declared)
+      }.toSet
+      occMissing.foreach { t =>
+        lease = Manifest.renewLease(spark, stateDir, lease, ttlMs)
+        writeOccFromCells(spark, s"$stateDir/${gen.dir("embcells", t)}",
+          s"$stateDir/${gen.dir("embocc", t)}", declared)
+      }
+      if (!Manifest.holdsLease(spark, stateDir, lease))
+        throw new java.io.IOException(
+          s"embidx_refresh lease at $stateDir was reaped mid-refresh; " +
+            "aborting without publishing")
+      Manifest.publishMerge(spark, stateDir) { cur =>
+        // a retrain swaps the whole embedding index to the new
+        // generation; cells exist only for the doc tags assigned above —
+        // a batch a concurrent ingest committed meanwhile is picked up by
+        // the next refresh (same eventual shape as the signature index)
+        val curDocs = docsOf(cur.live)
+        val keep = cur.live.filterNot(e =>
+          gen.dead(curDocs)(e) || (retrain && e.startsWith("quantizer/")))
+        val adds = (if (retrain) Seq(gen.qTag) else Nil) ++
+          missing.filter(curDocs).flatMap(t =>
+            gen.dir("embcells", t) +: (if (occd(t)) Seq(gen.dir("embocc", t)) else Nil)) ++
+          occMissing.filter(curDocs).map(gen.dir("embocc", _))
+        ((keep ++ adds).distinct,
+          if (retrain) cur.meta + ("emb_quantizer_n" -> n.toString) +
+            ("embocc_cols" -> predicateCols.mkString(","))
+          else cur.meta)
+      }
+      missing.size.toLong + occMissing.size.toLong
     } finally {
       if (Manifest.holdsLease(spark, stateDir, lease))
         Manifest.releaseLease(spark, stateDir, lease)
@@ -785,31 +805,33 @@ object Corpus {
   /** The committed embedding index AT REST, pinned to ONE manifest
     * snapshot: the live quantizer (bounded metadata, collected as
     * literals) and its generation's cell assignments as one DataFrame
-    * (doc_id, cell, embedding, nrm). The shared read behind
-    * [[semanticTopK]] and [[graft.streaming.Streaming
-    * .semanticNearMarksFromState]] — reading quantizer and cells from
-    * the same snapshot is what makes a concurrent generation swap
-    * (quantizer retrain) invisible mid-query: readers see either the
-    * old index whole or the new one whole, never a torn mix. */
+    * (doc_id, cell, embedding, nrm). The read behind [[semanticTopK]]
+    * and [[graft.streaming.Streaming.semanticNearMarksFromState]]; the
+    * other index paths resolve the same generation through [[liveGen]]
+    * on their own snapshot. Reading quantizer and cells from the same
+    * snapshot is what makes a concurrent generation swap (quantizer
+    * retrain) invisible mid-query: readers see either the old index
+    * whole or the new one whole, never a torn mix. */
   private[graft] def embeddingIndexAtRest(
       spark: org.apache.spark.sql.SparkSession, stateDir: String)
     : (Array[(Long, Array[Float], Double)], DataFrame) = {
-    import graft.sources.Manifest
-    val snap = Manifest.snapshot(spark, stateDir)
-    val qTag = snap.live.find(_.startsWith("quantizer/")).getOrElse(
-      throw new java.io.IOException(
-        s"no embedding index at $stateDir — run refreshEmbeddingIndex first"))
-    val suffix = "__" + qTag.stripPrefix("quantizer/")
-    val cellDirs = snap.live.filter(c =>
-      c.startsWith("embcells/") && c.endsWith(suffix))
-    // quantizer live with zero cell dirs (e.g. every doc deleted, then
-    // refreshed): an empty parquet path list throws an opaque
-    // schema-inference error — fail with the same descriptive message
-    if (cellDirs.isEmpty)
-      throw new java.io.IOException(
-        s"no embedding index cells at $stateDir — run refreshEmbeddingIndex first")
-    (readQuantizer(spark, stateDir, qTag), readIndex(spark, CellsSchema, stateDir, cellDirs))
+    val snap = graft.sources.Manifest.snapshot(spark, stateDir)
+    val gen = withCells(indexGen(snap, stateDir), stateDir)
+    (readQuantizer(spark, stateDir, gen.qTag),
+      readIndex(spark, CellsSchema, stateDir, gen.cellDirs))
   }
+
+  /** The query-probe frame (query_id, qe, q_nrm, cell) of the corpus
+    * serving paths: each query over its `nProbe` nearest cells. */
+  private def queryProbes(queries: DataFrame, cents: Array[(Long, Array[Float], Double)],
+      nProbe: Int): DataFrame =
+    queries.select(
+      col("query_id"), col("embedding"),
+      graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm"))
+      .select(
+        col("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"),
+        explode(Similarity.probeCells(cents, col("embedding"), col("nrm"), nProbe))
+          .as("cell"))
 
   /** Top-k SEMANTIC SEARCH against the committed corpus's embedding
     * index AT REST — the query path that makes the [[refreshEmbeddingIndex]]
@@ -828,14 +850,7 @@ object Corpus {
       nProbe: Int = 2, k: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val (cents, index) = embeddingIndexAtRest(spark, stateDir)
-    val featQ = queries.select(
-      col("query_id"), col("embedding"),
-      graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val probes = featQ.select(
-      col("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"),
-      explode(transform(
-        slice(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-        s => s.getField("cid"))).as("cell"))
+    val probes = queryProbes(queries, cents, nProbe)
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("doc_id"))
     broadcast(probes)
       .join(index.filter(col("cell").isInCollection(probedCells(probes))), "cell")
@@ -902,12 +917,12 @@ object Corpus {
         s"(found $nInit of $codebookSize at $stateDir)")
     val (cb, cbSumsq) =
       if (byResidual) {
-        val qTag = snap0.live.find(_.startsWith("quantizer/")).getOrElse(
+        val gen = liveGen(snap0).getOrElse(
           throw new java.io.IOException(
             s"residual codebooks need a live quantizer at $stateDir — " +
               "run refreshEmbeddingIndex first"))
         Similarity.trainPqCodebooksResidual(
-          corpus, readQuantizer(spark, stateDir, qTag), nSub, codebookSize, iters)
+          corpus, readQuantizer(spark, stateDir, gen.qTag), nSub, codebookSize, iters)
       } else Similarity.trainPqCodebooks(corpus, nSub, codebookSize, iters)
     val rows = for { j <- cb.indices; c <- cb(j).indices }
       yield (j, c, cb(j)(c).toSeq, cbSumsq(j)(c))
@@ -1025,25 +1040,16 @@ object Corpus {
     try {
       Manifest.cleanStale(spark, stateDir, Seq("embcodes"))
       val snap = Manifest.snapshot(spark, stateDir)
-      val qTag = snap.live.find(_.startsWith("quantizer/")).getOrElse(
-        throw new java.io.IOException(
-          s"no embedding index at $stateDir — run refreshEmbeddingIndex first"))
-      val pqTag = snap.live.find(_.startsWith("embpq/")).getOrElse(
-        throw new java.io.IOException(
-          s"no embedding codebooks at $stateDir — run initEmbeddingCodebooks first"))
-      val suffix = "__" + qTag.stripPrefix("quantizer/")
-      val cellDirs = snap.live.filter(c =>
-        c.startsWith("embcells/") && c.endsWith(suffix))
-      def codeTag(cellTag: String): String =
-        "embcodes/" + cellTag.stripPrefix("embcells/")
-      val codesLive = snap.live.filter(_.startsWith("embcodes/")).toSet
-      val missing = cellDirs.filterNot(c => codesLive.contains(codeTag(c))).sorted
+      val gen = indexGen(snap, stateDir)
+      val pqTag = codebookTag(snap, stateDir)
+      val missing =
+        gen.cellDirs.filterNot(c => snap.live.contains(twin(c, "embcodes"))).sorted
       val orphaned = snap.live.exists(e => e.startsWith("embcodes/") &&
-        !cellDirs.contains("embcells/" + e.stripPrefix("embcodes/")))
+        !gen.cellDirs.contains(twin(e, "embcells")))
       if (missing.isEmpty && !orphaned) return 0L
       val (cb, cbSumsq) = readEmbCodebooks(spark, stateDir, pqTag)
       val residCents =
-        if (embResidual(snap.meta)) Some(readQuantizer(spark, stateDir, qTag))
+        if (embResidual(snap.meta)) Some(readQuantizer(spark, stateDir, gen.qTag))
         else None
       missing.foreach { c =>
         lease = Manifest.renewLease(spark, stateDir, lease, ttlMs)
@@ -1052,7 +1058,7 @@ object Corpus {
         graft.sources.Layout.writeClustered(
           encodeCellCodes(spark.read.parquet(s"$stateDir/$c"), cb, cbSumsq,
             residCents),
-          s"$stateDir/${codeTag(c)}", Seq("cell"), nFiles = 4)
+          s"$stateDir/${twin(c, "embcodes")}", Seq("cell"), nFiles = 4)
       }
       if (!Manifest.holdsLease(spark, stateDir, lease))
         throw new java.io.IOException(
@@ -1064,8 +1070,8 @@ object Corpus {
         // add codes only for cells still live in the winner's snapshot
         val curCells = cur.live.filter(_.startsWith("embcells/")).toSet
         val keep = cur.live.filterNot(e => e.startsWith("embcodes/") &&
-          !curCells.contains("embcells/" + e.stripPrefix("embcodes/")))
-        val adds = missing.filter(curCells.contains).map(codeTag)
+          !curCells.contains(twin(e, "embcells")))
+        val adds = missing.filter(curCells.contains).map(twin(_, "embcodes"))
         ((keep ++ adds).distinct, cur.meta)
       }
       missing.size.toLong
@@ -1079,16 +1085,16 @@ object Corpus {
     * dirs serve from their `embcodes` twin (8-int codes — the raw
     * floats never load), cells ingested since the last encode pass
     * encode on the fly. The shared candidate source behind
-    * [[semanticTopKAdc]] and [[semanticTopKFilteredAdc]]. */
+    * [[semanticTopKAdc]] and [[semanticTopKFilteredAdc]], whose
+    * shortlists both end in [[adcRerank]]. */
   private def atRestCodes(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, live: Seq[String], cellDirs: Seq[String],
+      stateDir: String, gen: IndexGen,
       cb: Array[Array[Array[Float]]], cbSumsq: Array[Array[Double]],
       residCents: Option[Array[(Long, Array[Float], Double)]]): DataFrame = {
-    def codeTag(cellTag: String): String =
-      "embcodes/" + cellTag.stripPrefix("embcells/")
-    val (cold, hot) = cellDirs.partition(c => live.contains(codeTag(c)))
+    val (cold, hot) = gen.cellDirs.partition(c => gen.live.contains(twin(c, "embcodes")))
     val coldCodes =
-      if (cold.nonEmpty) Some(readIndex(spark, CodesSchema, stateDir, cold.map(codeTag)))
+      if (cold.nonEmpty)
+        Some(readIndex(spark, CodesSchema, stateDir, cold.map(twin(_, "embcodes"))))
       else None
     val hotCodes =
       if (hot.nonEmpty)
@@ -1130,48 +1136,45 @@ object Corpus {
     import graft.sources.Manifest
     graft.functions.GraftFunctions.register(spark)
     val snap = Manifest.snapshot(spark, stateDir)
-    val qTag = snap.live.find(_.startsWith("quantizer/")).getOrElse(
-      throw new java.io.IOException(
-        s"no embedding index at $stateDir — run refreshEmbeddingIndex first"))
-    val pqTag = snap.live.find(_.startsWith("embpq/")).getOrElse(
-      throw new java.io.IOException(
-        s"no embedding codebooks at $stateDir — run initEmbeddingCodebooks first"))
-    val suffix = "__" + qTag.stripPrefix("quantizer/")
-    val cellDirs = snap.live.filter(c =>
-      c.startsWith("embcells/") && c.endsWith(suffix))
-    if (cellDirs.isEmpty)
-      throw new java.io.IOException(
-        s"no embedding index cells at $stateDir — run refreshEmbeddingIndex first")
-    val cents = readQuantizer(spark, stateDir, qTag)
+    val gen = indexGen(snap, stateDir)
+    val pqTag = codebookTag(snap, stateDir)
+    withCells(gen, stateDir) // a state lacking codebooks and cells names the codebooks
+    val cents = readQuantizer(spark, stateDir, gen.qTag)
     val (cb, cbSumsq) = readEmbCodebooks(spark, stateDir, pqTag)
     val residCents = if (embResidual(snap.meta)) Some(cents) else None
-    val codes = atRestCodes(spark, stateDir, snap.live, cellDirs, cb, cbSumsq, residCents)
-    val featQ = queries.select(
-      col("query_id"), col("embedding"),
-      graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val probes = featQ.select(
-      col("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"),
-      explode(transform(
-        slice(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-        s => s.getField("cid"))).as("cell"))
+    val codes = atRestCodes(spark, stateDir, gen, cb, cbSumsq, residCents)
+    val probes = queryProbes(queries, cents, nProbe)
     // probed-cells pushdown BEFORE the reconstruction map: fewer rows
     // reconstructed AND the clustered codes scan row-group-prunes
     val cand = withEmbRecon(
       codes.filter(col("cell").isInCollection(probedCells(probes))),
       cb, residCents)
       .select("cell", "doc_id", "recon", "recon_nrm")
+    adcRerank(spark, stateDir, gen, broadcast(probes).join(cand, "cell"),
+      Seq(col("query_id"), col("doc_id")), rerank, k)
+  }
+
+  /** The ADC serving tail shared by [[semanticTopKAdc]] and
+    * [[semanticTopKFilteredAdc]]: over the probed (query, candidate)
+    * `pairs` (qe, q_nrm, recon, recon_nrm, `keys`…), the decimal-exact
+    * ADC cosine keeps each query's top `rerank` as a materialized
+    * shortlist; its |Q|·rerank doc_ids (bounded serving metadata — the
+    * collect is the boundary-table class) push into the raw read of
+    * `gen`'s cells as an In filter, and the exact ordered-fold cosine
+    * re-ranks them to the top `k`: (keys…, adc_cosine, cosine, rank). */
+  private def adcRerank(spark: org.apache.spark.sql.SparkSession, stateDir: String,
+      gen: IndexGen, pairs: DataFrame, keys: Seq[Column], rerank: Int, k: Int): DataFrame = {
     val aw = Window.partitionBy("query_id")
       .orderBy(col("adc_cosine").desc, col("doc_id"))
-    val short = Materialize(broadcast(probes).join(cand, "cell")
+    val short = Materialize(pairs
       .withColumn("adc_cosine",
         graft.functions.VectorFunctions.dotExact(col("recon"), col("qe")) /
           (col("recon_nrm") * col("q_nrm")))
       .withColumn("arn", row_number().over(aw))
       .filter(col("arn") <= rerank)
-      .select("query_id", "doc_id", "qe", "q_nrm", "adc_cosine"))
-    // bounded |Q|·rerank shortlist → In-pushed raw read for the re-rank
+      .select(keys ++ Seq(col("qe"), col("q_nrm"), col("adc_cosine")): _*))
     val ids = short.select("doc_id").collect().map(_.getLong(0)).distinct.toSeq
-    val raw = readIndex(spark, CellsSchema, stateDir, cellDirs)
+    val raw = readIndex(spark, CellsSchema, stateDir, gen.cellDirs)
       .filter(col("doc_id").isInCollection(ids))
       .select("doc_id", "embedding", "nrm")
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("doc_id"))
@@ -1181,8 +1184,8 @@ object Corpus {
           (col("nrm") * col("q_nrm")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("adc_cosine"),
-        col("cosine"), col("rank").cast("int").as("rank"))
+      .select(keys ++ Seq(col("adc_cosine"), col("cosine"),
+        col("rank").cast("int").as("rank")): _*)
       .orderBy("query_id", "rank")
   }
 
@@ -1221,34 +1224,24 @@ object Corpus {
     * on every missing piece (an undeclared predicate column would
     * silently budget over a sidecar that never counted it). */
   private case class FilteredIndex(
-      snap: graft.sources.Manifest.Snapshot, qTag: String,
-      cellDirs: Seq[String], occDirs: Seq[String],
-      cents: Array[(Long, Array[Float], Double)], predCols: Seq[String])
+      snap: graft.sources.Manifest.Snapshot, gen: IndexGen, occDirs: Seq[String],
+      cents: Array[(Long, Array[Float], Double)], predCols: Seq[String],
+      predFilter: Column)
 
   private def filteredIndexAtRest(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, predicates: Map[String, Int]): FilteredIndex = {
-    import graft.sources.Manifest
-    val snap = Manifest.snapshot(spark, stateDir)
-    val qTag = snap.live.find(_.startsWith("quantizer/")).getOrElse(
-      throw new java.io.IOException(
-        s"no embedding index at $stateDir — run refreshEmbeddingIndex first"))
-    val suffix = "__" + qTag.stripPrefix("quantizer/")
-    val cellDirs = snap.live.filter(c =>
-      c.startsWith("embcells/") && c.endsWith(suffix))
-    if (cellDirs.isEmpty)
-      throw new java.io.IOException(
-        s"no embedding index cells at $stateDir — run refreshEmbeddingIndex first")
-    val occDirs = snap.live.filter(c =>
-      c.startsWith("embocc/") && c.endsWith(suffix))
+    val snap = graft.sources.Manifest.snapshot(spark, stateDir)
+    val gen = withCells(indexGen(snap, stateDir), stateDir)
+    val occDirs = gen.dirs("embocc")
     if (occDirs.isEmpty)
       throw new java.io.IOException(
         s"no occupancy table at $stateDir — ingest labeled documents and " +
           "refreshEmbeddingIndex first")
     // a partially-labeled corpus has cells with no label column at all —
     // the predicate would silently misread them; refuse instead
-    if (occDirs.size != cellDirs.size)
+    if (occDirs.size != gen.cellDirs.size)
       throw new java.io.IOException(
-        s"only ${occDirs.size} of ${cellDirs.size} batches at $stateDir carry " +
+        s"only ${occDirs.size} of ${gen.cellDirs.size} batches at $stateDir carry " +
           "labels — filtered serving needs every ingested batch labeled")
     val declared = declaredPredCols(snap.meta)
     val undeclared = predicates.keySet -- declared.toSet
@@ -1259,9 +1252,9 @@ object Corpus {
           s"${declared.mkString(", ")}) — re-declare via refreshEmbeddingIndex's " +
           "predicateCols at the next retrain")
     require(predicates.nonEmpty, "filtered serving needs at least one predicate")
-    FilteredIndex(snap, qTag, cellDirs, occDirs,
-      readQuantizer(spark, stateDir, qTag),
-      declared.filter(predicates.contains))
+    val predCols = declared.filter(predicates.contains)
+    FilteredIndex(snap, gen, occDirs, readQuantizer(spark, stateDir, gen.qTag), predCols,
+      predCols.map(c => col(c) === lit(predicates(c))).reduce(_ && _))
   }
 
   /** The occupancy-budgeted probe frame (query_id, chosen_nprobe, qe,
@@ -1272,12 +1265,10 @@ object Corpus {
     * when none does). Shared by both filtered serving paths. */
   private def budgetedProbes(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, idx: FilteredIndex, queries: DataFrame,
-      predicates: Map[String, Int], targetPct: Int): DataFrame = {
-    val predFilter = idx.predCols
-      .map(c => col(c) === lit(predicates(c))).reduce(_ && _)
+      targetPct: Int): DataFrame = {
     // merged predicate-slice occupancy: ≤K rows of index metadata
     val occRows = graft.sources.Tables.parquet(spark, idx.occDirs.map(d => s"$stateDir/$d"): _*)
-      .filter(predFilter)
+      .filter(idx.predFilter)
       .groupBy("cell").agg(sum("n").as("o"))
       .collect().map(r => (r.getAs[Long]("cell"), r.getAs[Long]("o")))
     val nMatch = occRows.map(_._2).sum
@@ -1287,9 +1278,7 @@ object Corpus {
       graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm"))
     val ranked = featQ.select(
       col("query_id"), col("embedding").as("qe"), col("nrm").as("q_nrm"),
-      posexplode(transform(
-        Similarity.cellRank(idx.cents, col("embedding"), col("nrm")),
-        s => s.getField("cid"))).as(Seq("p0", "cell")))
+      posexplode(Similarity.rankedCells(idx.cents)).as(Seq("p0", "cell")))
       .withColumn("p", (col("p0") + 1).cast("int"))
     val cw = Window.partitionBy("query_id").orderBy("p")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1322,12 +1311,10 @@ object Corpus {
       k: Int = 10, targetPct: Int = 90): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val idx = filteredIndexAtRest(spark, stateDir, predicates)
-    val probes = budgetedProbes(spark, stateDir, idx, queries, predicates, targetPct)
-    val index = graft.sources.Tables.parquet(spark, idx.cellDirs.map(d => s"$stateDir/$d"): _*)
+    val probes = budgetedProbes(spark, stateDir, idx, queries, targetPct)
+    val index = graft.sources.Tables.parquet(spark, idx.gen.cellDirs.map(d => s"$stateDir/$d"): _*)
       .filter(col("cell").isInCollection(probedCells(probes)))
-    val predFilter = idx.predCols
-      .map(c => col(c) === lit(predicates(c))).reduce(_ && _)
-    val cand = index.filter(predFilter)
+    val cand = index.filter(idx.predFilter)
       .select(Seq(col("cell"), col("doc_id")) ++ idx.predCols.map(col) ++
         Seq(col("embedding").as("ce"), col("nrm").as("c_nrm")): _*)
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("doc_id"))
@@ -1370,15 +1357,11 @@ object Corpus {
       k: Int = 10, targetPct: Int = 90, rerank: Int = 32): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val idx = filteredIndexAtRest(spark, stateDir, predicates)
-    val pqTag = idx.snap.live.find(_.startsWith("embpq/")).getOrElse(
-      throw new java.io.IOException(
-        s"no embedding codebooks at $stateDir — run initEmbeddingCodebooks first"))
-    val (cb, cbSumsq) = readEmbCodebooks(spark, stateDir, pqTag)
+    val (cb, cbSumsq) = readEmbCodebooks(spark, stateDir, codebookTag(idx.snap, stateDir))
     val residCents = if (embResidual(idx.snap.meta)) Some(idx.cents) else None
-    val probes = budgetedProbes(spark, stateDir, idx, queries, predicates, targetPct)
+    val probes = budgetedProbes(spark, stateDir, idx, queries, targetPct)
     val cells = probedCells(probes)
-    val codes = atRestCodes(spark, stateDir, idx.snap.live, idx.cellDirs,
-      cb, cbSumsq, residCents)
+    val codes = atRestCodes(spark, stateDir, idx.gen, cb, cbSumsq, residCents)
     // probed-cells pushdown before the reconstruction map (see
     // semanticTopKAdc) — row-group pruning on the clustered codes dirs
     val cand = withEmbRecon(
@@ -1386,40 +1369,15 @@ object Corpus {
       .select("cell", "doc_id", "recon", "recon_nrm")
     // predicate metadata: a column-pruned slice of the cells dirs —
     // ints only, the embedding floats stay unread
-    val predFilter = idx.predCols
-      .map(c => col(c) === lit(predicates(c))).reduce(_ && _)
-    val metaSlice = graft.sources.Tables.parquet(spark, idx.cellDirs.map(d => s"$stateDir/$d"): _*)
+    val metaSlice = graft.sources.Tables
+      .parquet(spark, idx.gen.cellDirs.map(d => s"$stateDir/$d"): _*)
       .filter(col("cell").isInCollection(cells))
-      .filter(predFilter)
+      .filter(idx.predFilter)
       .select(Seq(col("cell"), col("doc_id")) ++ idx.predCols.map(col): _*)
-    val aw = Window.partitionBy("query_id")
-      .orderBy(col("adc_cosine").desc, col("doc_id"))
-    val short = Materialize(broadcast(probes).join(cand, "cell")
-      .join(metaSlice, Seq("cell", "doc_id"))
-      .withColumn("adc_cosine",
-        graft.functions.VectorFunctions.dotExact(col("recon"), col("qe")) /
-          (col("recon_nrm") * col("q_nrm")))
-      .withColumn("arn", row_number().over(aw))
-      .filter(col("arn") <= rerank)
-      .select(Seq(col("query_id"), col("chosen_nprobe"), col("doc_id")) ++
-        idx.predCols.map(col) ++
-        Seq(col("qe"), col("q_nrm"), col("adc_cosine")): _*))
-    // bounded |Q|·rerank shortlist → In-pushed raw read for the re-rank
-    val ids = short.select("doc_id").collect().map(_.getLong(0)).distinct.toSeq
-    val raw = readIndex(spark, CellsSchema, stateDir, idx.cellDirs)
-      .filter(col("doc_id").isInCollection(ids))
-      .select("doc_id", "embedding", "nrm")
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("doc_id"))
-    broadcast(short).join(raw, "doc_id")
-      .withColumn("cosine",
-        graft.functions.VectorFunctions.dotFold(col("embedding"), col("qe")) /
-          (col("nrm") * col("q_nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(Seq(col("query_id"), col("chosen_nprobe"), col("doc_id")) ++
-        idx.predCols.map(col) ++
-        Seq(col("adc_cosine"), col("cosine"), col("rank").cast("int").as("rank")): _*)
-      .orderBy("query_id", "rank")
+    adcRerank(spark, stateDir, idx.gen,
+      broadcast(probes).join(cand, "cell").join(metaSlice, Seq("cell", "doc_id")),
+      Seq(col("query_id"), col("chosen_nprobe"), col("doc_id")) ++ idx.predCols.map(col),
+      rerank, k)
   }
 
   /** Incremental ingest with a SEMANTIC (embedding) near-dup admission
@@ -1453,34 +1411,27 @@ object Corpus {
     graft.functions.GraftFunctions.register(spark)
     refreshEmbeddingIndex(spark, stateDir)
     val snap = Manifest.snapshot(spark, stateDir)
-    val keep = snap.live.find(_.startsWith("quantizer/")) match {
+    val keep = liveGen(snap).filter(_.cellDirs.nonEmpty) match {
       case None => batch // empty corpus: nothing to probe
-      case Some(qTag) =>
-        val suffix = "__" + qTag.stripPrefix("quantizer/")
-        val cellDirs = snap.live.filter(c =>
-          c.startsWith("embcells/") && c.endsWith(suffix))
-        if (cellDirs.isEmpty) batch
-        else {
-          val cents = readQuantizer(spark, stateDir, qTag)
-          val index = readIndex(spark, CellsSchema, stateDir, cellDirs)
-          val featB = batch.select(
-            col("doc_id"), col("embedding"),
-            graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm"))
-          val probes = featB.select(
-            col("doc_id").as("new_doc"), col("embedding").as("be"),
-            col("nrm").as("b_nrm"),
-            explode(transform(
-              slice(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-              s => s.getField("cid"))).as("cell"))
-          val rejects = broadcast(probes)
-            .join(index.filter(col("cell").isInCollection(probedCells(probes))),
-              "cell")
-            .filter(
-              graft.functions.VectorFunctions.dotFold(col("embedding"), col("be")) /
-                (col("nrm") * col("b_nrm")) >= threshold)
-            .select(col("new_doc").as("doc_id")).distinct()
-          batch.join(rejects, Seq("doc_id"), "left_anti")
-        }
+      case Some(gen) =>
+        val cents = readQuantizer(spark, stateDir, gen.qTag)
+        val index = readIndex(spark, CellsSchema, stateDir, gen.cellDirs)
+        val featB = batch.select(
+          col("doc_id"), col("embedding"),
+          graft.functions.VectorFunctions.normExact(col("embedding")).as("nrm"))
+        val probes = featB.select(
+          col("doc_id").as("new_doc"), col("embedding").as("be"),
+          col("nrm").as("b_nrm"),
+          explode(Similarity.probeCells(cents, col("embedding"), col("nrm"), nProbe))
+            .as("cell"))
+        val rejects = broadcast(probes)
+          .join(index.filter(col("cell").isInCollection(probedCells(probes))),
+            "cell")
+          .filter(
+            graft.functions.VectorFunctions.dotFold(col("embedding"), col("be")) /
+              (col("nrm") * col("b_nrm")) >= threshold)
+          .select(col("new_doc").as("doc_id")).distinct()
+        batch.join(rejects, Seq("doc_id"), "left_anti")
     }
     val n = ingestIncremental(spark, keep, stateDir, maxLiveBatches,
       beforePublish = beforePublish)
@@ -1604,13 +1555,9 @@ object Corpus {
           // batch below once it's written, so takedown is atomic on the
           // WHOLE serving surface and survivors stay searchable.
           val touchedTags = touchedDocs.map(_.stripPrefix("documents/")).toSet
-          def idxTouched(e: String): Boolean =
-            Seq("embcells/", "embocc/", "embcodes/").exists(p =>
-              e.startsWith(p) &&
-                touchedTags.contains(e.stripPrefix(p).split("__", 2)(0)))
           var newLive = snap.live.filterNot(touchedDocs.toSet)
             .filterNot(touchedFps.toSet)
-            .filterNot(idxTouched)
+            .filterNot(e => indexedDoc(e).exists(touchedTags))
           val anySurvivors = survivors.limit(1).count() > 0
           if (anySurvivors) {
             Layout.writeClustered(survivors, s"$stateDir/documents/$tag",
@@ -1618,17 +1565,16 @@ object Corpus {
             staged = staged :+ s"documents/$tag"
             newLive = newLive :+ s"documents/$tag"
           }
-          snap.live.find(_.startsWith("quantizer/")).foreach { qTag =>
-            val suffix = "__" + qTag.stripPrefix("quantizer/")
+          liveGen(snap).foreach { gen =>
             if (anySurvivors && survivors.columns.contains("embedding")) {
               // survivors re-index against the LIVE quantizer (same
               // deterministic assignment their old cells had), read back
               // from the clustered write so one frame serves both dirs
-              val cents = readQuantizer(spark, stateDir, qTag)
+              val cents = readQuantizer(spark, stateDir, gen.qTag)
               val declared = declaredPredCols(snap.meta)
               val written = spark.read.parquet(s"$stateDir/documents/$tag")
-              val cellRel = s"embcells/$tag$suffix"
-              val occRel = s"embocc/$tag$suffix"
+              val cellRel = gen.dir("embcells", tag)
+              val occRel = gen.dir("embocc", tag)
               val gotOcc = writeCellsAndOcc(spark, written, cents,
                 s"$stateDir/$cellRel", s"$stateDir/$occRel", declared)
               staged = staged :+ cellRel
@@ -1640,7 +1586,7 @@ object Corpus {
                 val (cb, cbSumsq) = readEmbCodebooks(spark, stateDir, pqTag)
                 val residCents =
                   if (embResidual(snap.meta)) Some(cents) else None
-                val codeRel = s"embcodes/$tag$suffix"
+                val codeRel = gen.dir("embcodes", tag)
                 Layout.writeClustered(
                   encodeCellCodes(spark.read.parquet(s"$stateDir/$cellRel"),
                     cb, cbSumsq, residCents),

@@ -1080,6 +1080,12 @@ object Dedup {
       .orderBy("vec_id")
   }
 
+  /** (vec_id, embedding, nrm): the vectors with their exact norm. */
+  private def normed(embeddings: DataFrame): DataFrame =
+    embeddings.select(
+      col("vec_id"), col("embedding"),
+      VectorFunctions.normExact(col("embedding")).as("nrm"))
+
   /** The scored-candidate stage of [[semanticDedup]] — (cell-assigned
     * vectors, threshold-filtered cosine pairs) — factored out so the plan
     * audit can inspect the candidate-generation subplan directly (the
@@ -1094,12 +1100,8 @@ object Dedup {
     // bound Σ cell² stays near-linear as n grows — a fixed k would turn
     // quadratic. The count is one metadata-cheap job at plan-build time.
     val cents = Similarity.trainAtAutoCellCount(embeddings, nCentroids, iters)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val best = element_at(
-      Similarity.cellRank(cents, col("embedding"), col("nrm")), 1)
-    val assigned = feat.select(
+    val best = Similarity.nearestCell(cents)
+    val assigned = normed(embeddings).select(
       col("vec_id"), col("embedding"), col("nrm"),
       best.getField("cid").as("cell"),
       (-best.getField("negcos")).as("cos_centroid")).transform(Materialize(_))
@@ -1148,19 +1150,14 @@ object Dedup {
       iters: Int = 2, nProbe: Int = 2, threshold: Double = 0.3): DataFrame = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val cents = Similarity.trainAtAutoCellCount(embeddings, nCentroids, iters)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
+    val feat = normed(embeddings)
     val train = feat.filter(col("vec_id") % holdoutMod =!= 0)
-      .withColumn("cell",
-        element_at(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1)
-          .getField("cid"))
+      .withColumn("cell", Similarity.cellOf(cents))
     val bench = feat.filter(col("vec_id") % holdoutMod === 0)
       .select(col("vec_id").as("bench_id"), col("embedding").as("be"),
         col("nrm").as("b_nrm"),
-        explode(transform(
-          slice(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-          s => s.getField("cid"))).as("cell"))
+        explode(Similarity.probeCells(cents, col("embedding"), col("nrm"), nProbe))
+          .as("cell"))
     val pairs = broadcast(bench).join(train, "cell")
       .withColumn("cosine",
         VectorFunctions.dotFold(col("embedding"), col("be")) /
@@ -1224,25 +1221,17 @@ object Dedup {
           lit(null).cast("double").as("max_cosine"),
           lit(true).as("admit"))
         .orderBy("new_vec")
-    val cents = centsPre.getOrElse {
-      if (nCentroids > 0) Similarity.trainCentroids(idx, nCentroids, iters)
-      else Similarity.trainCentroids(idx, Similarity.autoCellCount(idxN), iters,
-        nPre = Some(idxN)) // idxN already counted above
-    }
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
+    val cents = centsPre.getOrElse(
+      Similarity.trainAtAutoCellCount(idx, nCentroids, iters, nPre = Some(idxN)))
+    val feat = normed(embeddings)
     val assigned = feat.filter(col("vec_id") % batchMod =!= 0)
-      .withColumn("cell",
-        element_at(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1)
-          .getField("cid"))
+      .withColumn("cell", Similarity.cellOf(cents))
     val batch = feat.filter(col("vec_id") % batchMod === 0)
     val probes = batch
       .select(col("vec_id").as("new_vec"), col("embedding").as("be"),
         col("nrm").as("b_nrm"),
-        explode(transform(
-          slice(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1, nProbe),
-          s => s.getField("cid"))).as("cell"))
+        explode(Similarity.probeCells(cents, col("embedding"), col("nrm"), nProbe))
+          .as("cell"))
     // GUARDED broadcast: a day-batch broadcasts (the fast asymmetric
     // probe); an unbounded batch is past the cap and must shuffle-join
     // on cell instead of shipping batch·nProbe embedding rows to the
@@ -1289,22 +1278,7 @@ object Dedup {
     val probe = embeddingIncremental(
       embeddings, batchMod, nCentroids, iters, nProbe, threshold)
       .select(col("new_vec"), col("max_cosine").as("probe_max"))
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    val idx = feat.filter(col("vec_id") % batchMod =!= 0)
-      .select(col("embedding").as("ie"), col("nrm").as("i_nrm"))
-    // the exact truth scans index×batch with the BATCH side broadcast —
-    // the bruteForceTopK shape (at 100 TB the eval runs on a sampled
-    // batch; the index side streams, one partial max per batch vector)
-    val exact = idx
-      .crossJoin(broadcast(feat.filter(col("vec_id") % batchMod === 0)
-        .select(col("vec_id").as("new_vec"), col("embedding").as("be"),
-          col("nrm").as("b_nrm"))))
-      .withColumn("cosine",
-        VectorFunctions.dotFold(col("ie"), col("be")) /
-          (col("i_nrm") * col("b_nrm")))
-      .groupBy("new_vec").agg(max("cosine").as("exact_max"))
+    val exact = exactGateMax(normed(embeddings), batchMod)
     // left join: batch rows must survive an EMPTY exact side (empty
     // index → no exact candidates), mirroring the probe's all-admit
     probe.join(exact, Seq("new_vec"), "left")
@@ -1317,6 +1291,22 @@ object Dedup {
         "probe_reject", "exact_reject", "missed")
       .orderBy("new_vec")
   }
+
+  /** Each batch vector's best cosine over the WHOLE index — the exact
+    * gate verdict's input: index×batch with the BATCH side broadcast,
+    * the bruteForceTopK shape (at 100 TB it runs on a sampled batch; the
+    * index side streams, one partial max per batch vector). Shared by
+    * [[embeddingIncrementalEval]] and [[embeddingGateProbeSweep]]. */
+  private def exactGateMax(feat: DataFrame, batchMod: Long): DataFrame =
+    feat.filter(col("vec_id") % batchMod =!= 0)
+      .select(col("embedding").as("ie"), col("nrm").as("i_nrm"))
+      .crossJoin(broadcast(feat.filter(col("vec_id") % batchMod === 0)
+        .select(col("vec_id").as("new_vec"), col("embedding").as("be"),
+          col("nrm").as("b_nrm"))))
+      .withColumn("cosine",
+        VectorFunctions.dotFold(col("ie"), col("be")) /
+          (col("i_nrm") * col("b_nrm")))
+      .groupBy("new_vec").agg(max("cosine").as("exact_max"))
 
   /** Gate recall per PROBE budget — the tuning table the C115 miss
     * measurement calls for: for nProbe ∈ `probes`, how many of the exact
@@ -1339,34 +1329,19 @@ object Dedup {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val idx = embeddings.filter(col("vec_id") % batchMod =!= 0)
     val cents = Similarity.trainAtAutoCellCount(idx, nCentroids, iters)
-    val feat = embeddings.select(
-      col("vec_id"), col("embedding"),
-      VectorFunctions.normExact(col("embedding")).as("nrm"))
-    // batch side broadcast, index side streams (the C115 exact shape);
+    val feat = normed(embeddings)
     // one row per batch vector, checkpointed once instead of recomputing
     // the corpus-sized cross join under every budget's aggregate
-    val exact = Materialize(feat.filter(col("vec_id") % batchMod =!= 0)
-      .select(col("embedding").as("ie"), col("nrm").as("i_nrm"))
-      .crossJoin(broadcast(feat.filter(col("vec_id") % batchMod === 0)
-        .select(col("vec_id").as("new_vec"), col("embedding").as("be"),
-          col("nrm").as("b_nrm"))))
-      .withColumn("cosine",
-        VectorFunctions.dotFold(col("ie"), col("be")) /
-          (col("i_nrm") * col("b_nrm")))
-      .groupBy("new_vec").agg(max("cosine").as("exact_max")))
+    val exact = Materialize(exactGateMax(feat, batchMod))
     val maxProbe = probes.max
     val assigned = feat.filter(col("vec_id") % batchMod =!= 0)
-      .withColumn("cell",
-        element_at(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1)
-          .getField("cid"))
+      .withColumn("cell", Similarity.cellOf(cents))
     val batch = feat.filter(col("vec_id") % batchMod === 0)
     val probesAll = batch
       .select(col("vec_id").as("new_vec"), col("embedding").as("be"),
         col("nrm").as("b_nrm"),
-        posexplode(transform(
-          slice(Similarity.cellRank(cents, col("embedding"), col("nrm")),
-            1, maxProbe),
-          s => s.getField("cid"))).as(Seq("p0", "cell")))
+        posexplode(Similarity.probeCells(cents, col("embedding"), col("nrm"), maxProbe))
+          .as(Seq("p0", "cell")))
     val probesB = Broadcasts.upTo(probesAll, batch.count() * maxProbe)
     val wBest = Window.partitionBy("nprobe", "new_vec")
       .orderBy(col("cosine").desc, col("dup_of"))

@@ -45,10 +45,6 @@ object Similarity {
   private def cosineOf(vec: String, nrm: String): Column =
     VectorFunctions.dotExact(col("qe"), col(vec)) / (col("q_nrm") * col(nrm))
 
-  /** Each row's nearest cell under the literal quantizer `cents`. */
-  private def cellOf(cents: Array[(Long, Array[Float], Double)]): Column =
-    element_at(cellRank(cents, col("embedding"), col("nrm")), 1).getField("cid")
-
   /** The keyed top-k rank tail every ANN ranking ends in: per `keys`,
     * `rank` by (`score` DESC, `tiebreak` ASC), ranks ≤ k kept. */
   private def topK(
@@ -266,8 +262,7 @@ object Similarity {
     // every query's FULL cell ranking p = 1..K (the probe order)
     val qcells = feat.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"),
-        posexplode(transform(cellRank(cents, col("embedding"), col("nrm")),
-          s => s.getField("cid"))).as(Seq("p0", "cell")))
+        posexplode(rankedCells(cents)).as(Seq("p0", "cell")))
       .select(col("query_id"), col("cell"), (col("p0") + 1).as("p"))
     // dense (query × label × p) grid so the per-p sums see EVERY query's
     // cumulative mass, including queries whose p-th cell holds no
@@ -374,12 +369,14 @@ object Similarity {
   /** Train the coarse quantizer at `nCentroids` when given, else at the
     * corpus-derived [[autoCellCount]] — sharing ONE count job between the
     * cell-count decision and [[trainCentroids]]'s sample threshold (the
-    * auto-sized call previously paid two identical counts). */
+    * auto-sized call previously paid two identical counts). A caller that
+    * already counted the corpus passes it as `nPre` and pays none. */
   private[graft] def trainAtAutoCellCount(
-      embeddings: DataFrame, nCentroids: Int, iters: Int): Array[(Long, Array[Float], Double)] =
-    if (nCentroids > 0) trainCentroids(embeddings, nCentroids, iters)
+      embeddings: DataFrame, nCentroids: Int, iters: Int,
+      nPre: Option[Long] = None): Array[(Long, Array[Float], Double)] =
+    if (nCentroids > 0) trainCentroids(embeddings, nCentroids, iters, nPre = nPre)
     else {
-      val n = embeddings.count()
+      val n = nPre.getOrElse(embeddings.count())
       trainCentroids(embeddings, autoCellCount(n), iters, nPre = Some(n))
     }
 
@@ -406,13 +403,40 @@ object Similarity {
     * (a greatest/least argmax cascade duplicates subtrees
     * combinatorially — ~100k dot nodes at K=16, nProbe=2). */
   private[graft] def cellRank(
-      cents: Array[(Long, Array[Float], Double)],
-      emb: org.apache.spark.sql.Column, nrm: org.apache.spark.sql.Column) =
+      cents: Array[(Long, Array[Float], Double)], emb: Column, nrm: Column): Column =
     sort_array(array(cents.toSeq.map { case (cid, vec, cnrm) =>
       struct(
         (-(VectorFunctions.dotExact(emb, typedlit(vec)) / (nrm * lit(cnrm)))).as("negcos"),
         lit(cid).as("cid"))
     }: _*))
+
+  /** The IVF probe vocabulary every cell-assigning or probing operator
+    * speaks, all over one [[cellRank]] of `emb` (norm `nrm`) against the
+    * literal quantizer `cents`. The nearest cell as its (negcos, cid)
+    * struct — `cid` is the assignment, `−negcos` the centroid cosine. */
+  private[graft] def nearestCell(
+      cents: Array[(Long, Array[Float], Double)],
+      emb: Column = col("embedding"), nrm: Column = col("nrm")): Column =
+    element_at(cellRank(cents, emb, nrm), 1)
+
+  /** The nearest cell's id: the one map-stage cell assignment. */
+  private[graft] def cellOf(
+      cents: Array[(Long, Array[Float], Double)],
+      emb: Column = col("embedding"), nrm: Column = col("nrm")): Column =
+    nearestCell(cents, emb, nrm).getField("cid")
+
+  /** The ids of the first `nProbe` cells: a query's probe set. */
+  private[graft] def probeCells(
+      cents: Array[(Long, Array[Float], Double)], emb: Column, nrm: Column,
+      nProbe: Int): Column =
+    transform(slice(cellRank(cents, emb, nrm), 1, nProbe), s => s.getField("cid"))
+
+  /** The ids of every cell in probe order: the prefix a per-row or
+    * per-budget probe cut reads. */
+  private[graft] def rankedCells(
+      cents: Array[(Long, Array[Float], Double)],
+      emb: Column = col("embedding"), nrm: Column = col("nrm")): Column =
+    transform(cellRank(cents, emb, nrm), s => s.getField("cid"))
 
   /** Deterministically TRAINED coarse quantizer: `iters` Lloyd iterations
     * from the fixed first-K init, over a deterministic md5-bucket SAMPLE
@@ -595,14 +619,13 @@ object Similarity {
   private def probeCandidates(
       feat: DataFrame, cents: Array[(Long, Array[Float], Double)], nQueries: Int,
       budget: Either[Int, Seq[Int]], corpus: DataFrame): DataFrame = {
-    val ranked = cellRank(cents, col("embedding"), col("nrm"))
-    def cids(cells: Column) = transform(cells, s => s.getField("cid"))
     val q = feat.filter(col("vec_id") < nQueries)
     val probes = budget match {
       case Left(nProbe) =>
-        q.select(queryCols :+ explode(cids(slice(ranked, 1, nProbe))).as("cell"): _*)
+        q.select(queryCols :+
+          explode(probeCells(cents, col("embedding"), col("nrm"), nProbe)).as("cell"): _*)
       case Right(budgets) =>
-        q.select(queryCols :+ posexplode(cids(ranked)).as(Seq("p0", "cell")): _*)
+        q.select(queryCols :+ posexplode(rankedCells(cents)).as(Seq("p0", "cell")): _*)
           .withColumn("nprobe", explode(typedlit(budgets)))
           .filter(col("p0") + 1 <= col("nprobe"))
           .drop("p0")

@@ -99,9 +99,7 @@ object VectorStore {
       .dropDuplicates("vec_id") // in-batch replays collapse before admission
       .select(col("vec_id"), col("embedding"),
         VectorFunctions.normExact(col("embedding")).as("nrm"))
-      .withColumn("cell",
-        element_at(Similarity.cellRank(cents, col("embedding"), col("nrm")), 1)
-          .getField("cid"))
+      .withColumn("cell", Similarity.cellOf(cents))
       .select("cell", "vec_id", "embedding", "nrm")
     var admitted = feat
       .join(committedIds(snap.live), Seq("vec_id"), "left_anti")
@@ -146,25 +144,33 @@ object VectorStore {
       nProbe: Int = 2, k: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val cents = centroids(spark, stateDir)
+    val cand = vectors(spark, stateDir)
+      .select(col("cell"), col("vec_id").as("neighbor_id"),
+        col("embedding").as("ce"), col("nrm").as("c_nrm"))
+    probeTopK(queries, cents, nProbe, k, cand, "ce", "c_nrm", "cosine")
+  }
+
+  /** The probe frame and rank tail of [[query]] and [[queryAdc]]: each
+    * query probes its `nProbe` nearest cells of `cand` (cell,
+    * neighbor_id, `vec`, `nrm`), scores the decimal-exact cosine against
+    * `vec` as `score`, and keeps its top `k`. */
+  private def probeTopK(
+      queries: DataFrame, cents: Array[(Long, Array[Float], Double)], nProbe: Int,
+      k: Int, cand: DataFrame, vec: String, nrm: String, score: String): DataFrame = {
     val probes = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         VectorFunctions.normExact(col("embedding")).as("q_nrm"))
       .select(col("query_id"), col("qe"), col("q_nrm"),
-        explode(transform(
-          slice(Similarity.cellRank(cents, col("qe"), col("q_nrm")), 1, nProbe),
-          s => s.getField("cid"))).as("cell"))
-    val cand = vectors(spark, stateDir)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce"), col("nrm").as("c_nrm"))
-    val rk = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
+        explode(Similarity.probeCells(cents, col("qe"), col("q_nrm"), nProbe)).as("cell"))
+    val rk = Window.partitionBy("query_id").orderBy(col(score).desc, col("neighbor_id"))
     broadcast(probes)
       .join(cand, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        VectorFunctions.dotExact(col("qe"), col("ce")) / (col("q_nrm") * col("c_nrm")))
+      .withColumn(score,
+        VectorFunctions.dotExact(col("qe"), col(vec)) / (col("q_nrm") * col(nrm)))
       .withColumn("rank", row_number().over(rk))
       .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .select("query_id", "neighbor_id", score, "rank")
       .orderBy("query_id", "rank")
   }
 
@@ -520,23 +526,7 @@ object VectorStore {
     val cand = withRecon(codes, pq)
       .select(col("cell"), col("vec_id").as("neighbor_id"),
         col("recon"), col("recon_nrm"))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        VectorFunctions.normExact(col("embedding")).as("q_nrm"))
-      .select(col("query_id"), col("qe"), col("q_nrm"),
-        explode(transform(
-          slice(Similarity.cellRank(cents, col("qe"), col("q_nrm")), 1, nProbe),
-          s => s.getField("cid"))).as("cell"))
-    val rk = Window.partitionBy("query_id").orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    broadcast(probes)
-      .join(cand, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_cosine",
-        VectorFunctions.dotExact(col("qe"), col("recon")) / (col("q_nrm") * col("recon_nrm")))
-      .withColumn("rank", row_number().over(rk))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adc_cosine", "rank")
-      .orderBy("query_id", "rank")
+    probeTopK(queries, cents, nProbe, k, cand, "recon", "recon_nrm", "adc_cosine")
   }
 
   /** Takedown parity for the vector side — the [[Corpus.deleteDocs]]

@@ -248,13 +248,37 @@ object Manifest {
 
   private def leaseDir(base: String): Path = new Path(manifestDir(base), LeaseDirName)
 
+  /** Lease files are written and read through the raw file system: no
+    * `.crc` sidecar, whose separate rename under a checksummed store would
+    * let a reader pair a new lease with the old checksum. The `#end`
+    * trailer is the lease's own integrity check. Deletes go through the
+    * checksummed store, which also drops a sidecar an older writer left. */
+  private def leaseFs(spark: SparkSession, base: String): FileSystem =
+    fs(spark, base) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+
+  /** Acquisition is an exclusive create. A renewal writes a sibling that
+    * [[LeaseRe]] does not match and renames it over the lease, so a
+    * concurrent reader sees the old lease or the new one whole, never a
+    * truncated file (where the store's rename replaces atomically: POSIX
+    * local, HDFS). */
   private def writeLease(f: FileSystem, base: String, l: Lease, exclusive: Boolean): Unit = {
     val p = new Path(leaseDir(base), s"${l.owner}.txt")
-    val out = f.create(p, !exclusive)
+    val target =
+      if (exclusive) p
+      else new Path(leaseDir(base), s".${l.owner}.${java.util.UUID.randomUUID()}.tmp")
+    val out = f.create(target, false)
     try out.write(
       s"#acquired=${l.acquiredMs}\n#expires=${l.expiresMs}\n$End\n"
         .getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    // FileSystem.rename refuses an existing target on HDFS; FileContext's
+    // OVERWRITE rename is that store's atomic replace
+    if (!exclusive && !f.rename(target, p))
+      org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, f.getConf)
+        .rename(target, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Acquire a vacuum lease for `owner` (a unique writer tag) lasting
@@ -267,7 +291,7 @@ object Manifest {
       owner: String,
       ttlMs: Long = 15 * 60 * 1000L): Lease = {
     require(!owner.contains('/') && !owner.contains('\n'), s"bad lease owner: $owner")
-    val f = fs(spark, base)
+    val f = leaseFs(spark, base)
     if (!f.exists(leaseDir(base))) f.mkdirs(leaseDir(base))
     val now = System.currentTimeMillis()
     val l = Lease(owner, now, now + ttlMs)
@@ -290,7 +314,7 @@ object Manifest {
     * no competing acquisition to steal from. A torn/unparseable file is
     * not provably ours, so it also aborts (safe side). */
   def renewLease(spark: SparkSession, base: String, lease: Lease, ttlMs: Long): Lease = {
-    val f = fs(spark, base)
+    val f = leaseFs(spark, base)
     val p = new Path(leaseDir(base), s"${lease.owner}.txt")
     val usurped =
       try f.exists(p) && !parse(readFile(f, p)).exists { case (_, meta) =>
@@ -321,7 +345,7 @@ object Manifest {
     * interleaving writes with the new holder. A torn/unparseable file
     * reads as not-held (abort is the safe side of that race). */
   def holdsLease(spark: SparkSession, base: String, lease: Lease): Boolean = {
-    val f = fs(spark, base)
+    val f = leaseFs(spark, base)
     val p = new Path(leaseDir(base), s"${lease.owner}.txt")
     if (!f.exists(p)) return false
     try parse(readFile(f, p)).exists { case (_, meta) =>
@@ -336,11 +360,12 @@ object Manifest {
   }
 
   /** Unexpired leases at `base`; expired lease files are deleted lazily
-    * here (torn/unparseable ones count as active until their file ages
-    * past an hour — a half-written heartbeat must not unshield a live
-    * writer). */
+    * here (torn/unparseable ones — a crash mid-acquisition, a damaged
+    * file — count as active until their file ages past an hour: an
+    * unreadable lease must not unshield a live writer). */
   def activeLeases(spark: SparkSession, base: String): Seq[Lease] = {
-    val f = fs(spark, base)
+    val f = leaseFs(spark, base)
+    def reap(p: Path): Unit = fs(spark, base).delete(p, false)
     val dir = leaseDir(base)
     if (!f.exists(dir)) return Seq.empty
     val now = System.currentTimeMillis()
@@ -358,10 +383,10 @@ object Manifest {
             catch { case scala.util.control.NonFatal(_) => None }
           parsed match {
             case Some(l) if l.expiresMs > now => Some(l)
-            case Some(_)                      => f.delete(s.getPath, false); None
-            case None => // torn mid-heartbeat: treat as active for an hour
+            case Some(_)                      => reap(s.getPath); None
+            case None => // torn: treat as active for an hour
               if (s.getModificationTime < now - 60 * 60 * 1000L) {
-                f.delete(s.getPath, false); None
+                reap(s.getPath); None
               } else Some(Lease(owner, s.getModificationTime, now + 1))
           }
         case _ => None

@@ -1047,7 +1047,7 @@ object Streaming {
     * (vec_id, event_ts) aggregate — bounded state, append output.
     *
     * Determinism: same quantizer literals ([[graft.operators.Similarity
-    * .cellRank]]), same ordered-fold cosine, and the argmax is a
+    * .probeCells]]), same ordered-fold cosine, and the argmax is a
     * struct-MIN over (−cosine, dup_of) — value-identical to the batch
     * probe's (cosine DESC, dup_of ASC) rank (TwinSweep pins marks equal
     * to `dedup_embedding_incremental` on the shared split). */
@@ -1066,10 +1066,8 @@ object Streaming {
     val probes = feat.select(
       col("vec_id").as("new_vec"), col("event_ts"),
       col("embedding").as("be"), col("nrm").as("b_nrm"),
-      explode(transform(
-        slice(graft.operators.Similarity.cellRank(
-          cents, col("embedding"), col("nrm")), 1, nProbe),
-        s => s.getField("cid"))).as("cell"))
+      explode(graft.operators.Similarity.probeCells(
+        cents, col("embedding"), col("nrm"), nProbe)).as("cell"))
     val idx = index.select(col("cell"), col("doc_id").as("dup_of"),
       col("embedding").as("ie"), col("nrm").as("i_nrm"))
     val scored = probes.join(idx, Seq("cell"), "left_outer")

@@ -321,6 +321,38 @@ class LayoutSpec extends SparkSpec with SparkJobs {
     leaseFile.delete()
   }
 
+  test("lease renewal replaces the file whole: a concurrent reader never reads it torn") {
+    import graft.sources.Manifest
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    val state = Files.createTempDirectory("graft-renew-atomic").toString
+    val lease = Manifest.acquireLease(spark, state, "pipeline", ttlMs = 60000L)
+    val stop = new AtomicBoolean(false)
+    val reads = new AtomicInteger(0)
+    val torn = new AtomicInteger(0)
+    // holdsLease reads a torn or missing file as not-held; activeLeases
+    // stands a torn file in with its modification time as acquiredMs
+    val reader = new Thread(() =>
+      while (!stop.get()) {
+        if (!Manifest.holdsLease(spark, state, lease) ||
+            !Manifest.activeLeases(spark, state).map(_.acquiredMs)
+              .contains(lease.acquiredMs))
+          torn.incrementAndGet()
+        reads.incrementAndGet()
+      })
+    reader.start()
+    while (reads.get() == 0) Thread.sleep(1L)
+    var cur = lease
+    try (1 to 250).foreach(_ => cur = Manifest.renewLease(spark, state, cur, 60000L))
+    finally { stop.set(true); reader.join() }
+    assert(torn.get() === 0, s"${torn.get()} of ${reads.get()} reads saw a torn lease")
+    assert(reads.get() > 1)
+    assert(cur.acquiredMs === lease.acquiredMs)
+    // no checksum sidecar and no renewal temp file is left beside the lease
+    assert(new java.io.File(s"$state/_manifest/leases").list().toSeq === Seq("pipeline.txt"))
+    Manifest.releaseLease(spark, state, cur)
+    assert(Manifest.activeLeases(spark, state).isEmpty)
+  }
+
   test("admission gate re-judges against the race winner's snapshot (drift TOCTOU closed)") {
     import graft.operators.Corpus
     import graft.sources.Manifest

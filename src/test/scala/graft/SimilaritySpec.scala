@@ -710,7 +710,7 @@ class SimilaritySpec extends SparkSpec with SparkJobs {
 
   test("parallelism invariance: the driver-held searches return the default " +
     "session's rows at 7 shuffle partitions, AQE off and no broadcast joins") {
-    import graft.operators.Corpus
+    import graft.operators.{Corpus, Dedup}
     import graft.sources.Tables
     import org.apache.spark.sql.{DataFrame, SparkSession}
     import org.apache.spark.sql.functions._
@@ -731,13 +731,21 @@ class SimilaritySpec extends SparkSpec with SparkJobs {
     Corpus.initEmbeddingCodebooks(spark, state)
     Corpus.encodeEmbeddingIndex(spark, state)
     def emb(s: SparkSession): DataFrame = Tables.embeddings(s, sfDir)
+    def queries(s: SparkSession): DataFrame = emb(s).filter(col("vec_id") < 8)
+      .select(col("vec_id").as("query_id"), col("embedding"))
     val cases = Seq[(String, SparkSession => DataFrame)](
       ("graphSearch", s => Similarity.graphSearch(emb(s))),
       ("graphBeamSweep", s => Similarity.graphBeamSweep(emb(s))),
       ("filteredGraphSearch", s => Similarity.filteredGraphSearch(emb(s), broadcastCap = 0)),
       ("indexCompare", s => Similarity.indexCompare(emb(s))),
-      ("semanticTopKAdc", s => Corpus.semanticTopKAdc(s, emb(s).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding")), state)))
+      ("semanticTopKAdc", s => Corpus.semanticTopKAdc(s, queries(s), state)),
+      // the cell assignments and probe sides outside Similarity
+      ("semanticContamination", s => Dedup.semanticContamination(emb(s))),
+      ("embeddingIncremental", s => Dedup.embeddingIncremental(emb(s), broadcastCap = 0)),
+      ("embeddingGateProbeSweep", s => Dedup.embeddingGateProbeSweep(emb(s))),
+      ("semanticTopK", s => Corpus.semanticTopK(s, queries(s), state)),
+      ("semanticTopKFiltered", s => Corpus.semanticTopKFiltered(s, queries(s), state)),
+      ("semanticTopKFilteredAdc", s => Corpus.semanticTopKFilteredAdc(s, queries(s), state)))
     info(f"index build: ${(System.nanoTime() - t0) / 1e9}%.1f s")
     cases.foreach { case (name, run) =>
       val t = System.nanoTime()
