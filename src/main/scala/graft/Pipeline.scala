@@ -27,8 +27,13 @@ import scala.jdk.CollectionConverters._
   * reference gets the same property from its chronological processing
   * order, `journey_builder.py:45-105`.)
   *
-  * EVERY per-run cost is O(extract + delta), never O(history):
-  *   - assignment input is semi-joined down to the users owning a missing
+  * What a run costs: the attribution and its writes are O(delta), the
+  * report fold O(|channels|·|dates| + delta); the extract scans are
+  * O(history). On the default layout each
+  * run scans the whole events history three times — once in the
+  * missing-set collect and twice in the assignment job (with the
+  * benchmark's 50,000 events: 50,000 rows and 100,000 rows).
+  *   - assignment input is restricted to the users owning a missing
   *     conversion BEFORE the journey window runs (exact, by per-user
   *     independence) — a daily run attributes the day's users, not every
   *     user ever seen;
@@ -50,12 +55,14 @@ import scala.jdk.CollectionConverters._
   *     revenue); the public readers project the four attribution columns.
   *   - `processed_conversions/<tag>/` — the manifest of conv_ids this run
   *     attributed (tracked for ALL conversions incl. journeyless ones).
-  *   - `report_base/<tag>/` — the folded exact-decimal report state.
-  *   - `report/<tag>/` + `channel_reporting_csv/<tag>/` — the published
-  *     channel report artifacts (`reporting.py:105-168`).
-  * and then publishes all five in ONE atomic [[graft.sources.Manifest]]
+  *   - `report_base/<tag>/` — the folded exact-decimal report state, one
+  *     file sorted by (channel, date). The channel report
+  *     (`reporting.py:105-168`) is a pure render of it, done on read by
+  *     [[report]]; `graft.Main --output_path` writes it as the reference's
+  *     single CSV.
+  * and then publishes all three in ONE atomic [[graft.sources.Manifest]]
   * version (attribution/processed accumulate across runs; the report
-  * entries replace the previous run's). Readers resolve the live set from
+  * base replaces the previous run's). Readers resolve the live set from
   * the manifest, so a crash at ANY point before the publish leaves the
   * observable state bit-identical to "run never happened"; the next run
   * deletes the orphan staged dirs and recomputes the same delta. This is
@@ -77,27 +84,28 @@ import scala.jdk.CollectionConverters._
   *
   * Job budget: at daily-delta size a run's latency is set by per-job
   * scheduling and planning, not by compute, so a delta run launches at
-  * most 10 Spark jobs and a no-op re-run at most 2, none of them a schema
+  * most 7 Spark jobs and a no-op re-run at most 2, none of them a schema
   * inference (asserted in PipelineSpec). On the default layout a delta
-  * run takes 10:
+  * run takes 7:
   *   - 0 to resolve schemas: the `events` footer is read on the driver
   *     and state dirs are read with their known DDLs;
   *   - 2 to select the missing conversions: the broadcast of the processed
   *     ids and the collect of the missing (conv_id, user_id) pairs, which
   *     also observes the candidate count (the first run, with no processed
   *     ids, skips the broadcast);
-  *   - 3 for the staged delta: the per-user assignment shuffle, the
-  *     per-conversion IHC shuffle and the write, which observes the row
-  *     count that enters the committed total — the delta's users and
-  *     conversions restrict it as literal filters, with no broadcast job;
+  *   - 2 for the staged delta: the per-user assignment shuffle and the
+  *     write, which observes the row count that enters the committed
+  *     total — the flag and IHC windows key on (user_id, conv_id), so they
+  *     run in the assignment's partitions, and the delta's users and
+  *     conversions restrict it as literal filters, with no broadcast job
+  *     (on the bucketed layout the staged delta has no exchange at all);
   *   - 1 for the processed-conversions write, from the driver-held ids;
   *   - 2 for the report base: the shuffle of the one aggregate that folds
-  *     the staged delta into the committed base, and the write;
-  *   - 2 for the report: one sorted partition written as parquet and as
-  *     the CSV artifact.
-  * A no-op re-run is the missing-conversion selection's two jobs. An OCC
-  * retry adds a read of the race winner's ids among this run's, the two
-  * re-staging writes if they overlap, and the report's four jobs.
+  *     the staged delta into the committed base, and the write.
+  * The first run, with no processed ids, takes 6. A no-op re-run is the
+  * missing-conversion selection's two jobs. An OCC retry adds a read of
+  * the race winner's ids among this run's, the two re-staging writes if
+  * they overlap, and the report base's two re-fold jobs.
   */
 object Pipeline {
 
@@ -107,6 +115,9 @@ object Pipeline {
       newRows: Long,
       totalRows: Long)
 
+  // the vacuum sweeps also name `report` and `channel_reporting_csv`: state
+  // published when the report was staged beside its base still has them,
+  // and the first run after it deletes them once it publishes
   private val StateTables =
     Seq("attribution", "processed_conversions", "report_base", "report",
       "channel_reporting_csv")
@@ -121,9 +132,6 @@ object Pipeline {
     * only complete runs and the re-run converges). */
   private[graft] final case class InjectedCrash(point: String)
     extends RuntimeException(s"injected crash at $point")
-
-  private def liveDirs(spark: SparkSession, stateDir: String, table: String): Seq[String] =
-    dirsOf(Manifest.live(spark, stateDir), stateDir, table)
 
   private def dirsOf(live: Seq[String], stateDir: String, table: String): Seq[String] =
     live.filter(_.startsWith(table + "/")).map(rel => s"$stateDir/$rel")
@@ -140,7 +148,7 @@ object Pipeline {
 
   private def readLiveOrEmpty(
       spark: SparkSession, stateDir: String, table: String, ddl: String): DataFrame =
-    readDirsOrEmpty(spark, liveDirs(spark, stateDir, table), ddl)
+    readDirsOrEmpty(spark, dirsOf(Manifest.live(spark, stateDir), stateDir, table), ddl)
 
   // the schemas of the state tables, as the pipeline writes them
   private val AttributionDdl =
@@ -155,9 +163,6 @@ object Pipeline {
   private val ReportBaseDdl =
     "channel_name STRING, date DATE, cost DECIMAL(38,6), ihc DECIMAL(38,6), " +
       "ihc_revenue DECIMAL(38,6)"
-  private val ReportDdl =
-    "channel_name STRING, date DATE, cost DOUBLE, ihc DOUBLE, " +
-      "ihc_revenue DOUBLE, CPO DOUBLE, ROAS DOUBLE"
 
   /** The persisted attribution table (union of all committed run deltas),
     * or an empty frame with the right schema before the first publish. */
@@ -173,14 +178,13 @@ object Pipeline {
   def processedConversions(spark: SparkSession, stateDir: String): DataFrame =
     readLiveOrEmpty(spark, stateDir, "processed_conversions", ProcessedDdl)
 
-  /** The committed channel report (CPO/ROAS) of the latest successful run. */
+  /** The committed channel report (CPO/ROAS) of the latest successful run,
+    * rendered from its `report_base` state: one partition sorted by
+    * (channel, date). */
   def report(spark: SparkSession, stateDir: String): DataFrame =
-    readLiveOrEmpty(spark, stateDir, "report", ReportDdl)
-
-  /** Directory of the committed single-file CSV artifact (the reference's
-    * `channel_reporting.csv`), if a run has published one. */
-  def reportCsvDir(spark: SparkSession, stateDir: String): Option[String] =
-    liveDirs(spark, stateDir, "channel_reporting_csv").headOption
+    Reporting.withMetrics(Reporting.fromReportBase(
+      readLiveOrEmpty(spark, stateDir, "report_base", ReportBaseDdl)))
+      .coalesce(1).sortWithinPartitions("channel_name", "date")
 
   // ---- bucketed extract: the 100 TB deployment layout ----
   // Journey assignment is the pipeline's one big shuffle (every session +
@@ -445,32 +449,26 @@ object Pipeline {
     // report state by (channel, date): O(|channels|·|dates| + delta),
     // bit-identical to re-aggregating all history (exact decimal sums). It
     // reads what was actually staged — no double evaluation of the delta
-    // DAG, and NO read of any prior run's attribution data. The report
-    // artifacts get their own tag so an OCC retry can re-fold against a
-    // race winner's base without re-staging the delta.
+    // DAG, and NO read of any prior run's attribution data. The base gets
+    // its own tag so an OCC retry can re-fold against a race winner's base
+    // without re-staging the delta.
     var reportTag: String = null
     def stageReport(v: Long, committedBase: DataFrame): Unit = {
       reportTag = freshTag(v)
       // (channel, date) keys are unique, so one partition sorted by them is
-      // the state and the report in their final order; the report is
-      // rendered once as parquet and once as the CSV artifact, one job each
+      // the state in the report's final order
       Reporting.foldReportBase(committedBase,
         staged("attribution", tag, StagedAttributionDdl))
         .coalesce(1).sortWithinPartitions("channel_name", "date")
         .write.parquet(s"$stateDir/report_base/$reportTag")
-      val rep = Reporting.withMetrics(
-        Reporting.fromReportBase(staged("report_base", reportTag, ReportBaseDdl)))
-        .coalesce(1).sortWithinPartitions("channel_name", "date")
-      rep.write.parquet(s"$stateDir/report/$reportTag")
-      Reporting.exportCsv(rep, s"$stateDir/channel_reporting_csv/$reportTag")
     }
     stageReport(snap.alloc + 1,
       readDirsOrEmpty(spark, dirsOf(snap.live, stateDir, "report_base"), ReportBaseDdl))
     stageDone("before_publish")
     beforePublish()
 
-    // ---- publish: one atomic manifest CAS makes all five dirs live ----
-    // (attribution/processed accumulate; report_base/report/csv replace).
+    // ---- publish: one atomic manifest CAS makes all three dirs live ----
+    // (attribution/processed accumulate; report_base replaces).
     // Racing runs SERIALIZE: the loser re-reads the winner's snapshot,
     // drops any conversions the winner already attributed from its staged
     // delta, re-folds the report on the winner's base, and retries — so
@@ -494,8 +492,7 @@ object Pipeline {
       Manifest.tryPublish(spark, stateDir, snapNow,
         accumulated ++ Seq(
           s"attribution/$tag", s"processed_conversions/$tag",
-          s"report_base/$reportTag", s"report/$reportTag",
-          s"channel_reporting_csv/$reportTag"),
+          s"report_base/$reportTag"),
         snapNow.meta + (RowsKey -> total.toString)) match {
         case Some(_) => committedTotal = total
         case None =>
@@ -534,7 +531,7 @@ object Pipeline {
           snapNow = next
       }
     }
-    // post-publish vacuum: the previous run's report/csv dirs (and any
+    // post-publish vacuum: the previous run's report base (and any
     // superseded retry staging) just became unreferenced — delete them now
     // rather than leaving garbage for the next run's recovery sweep.
     Manifest.cleanStale(spark, stateDir, StateTables, staleGraceMs)

@@ -17,16 +17,20 @@ import org.apache.spark.sql.functions._
   *  - C: closer_engagement share; conversion-flagged session if none
   *  - ihc = (I + H + C) / 3
   *
-  * Pure window computation over `conv_id` partitions — linear in sessions,
-  * no state, no iteration; scales with the number of journeys.
+  * Pure window computation over journey partitions — linear in sessions,
+  * no state, no iteration; scales with the number of journeys. The
+  * windows key on (user_id, conv_id), which groups exactly as `conv_id`
+  * (a conversion belongs to one user), so they run in the partitions of
+  * the per-user assignment with no exchange of their own.
   */
 object IhcAttribution {
 
   /** Per-session per-phase weights: input columns + `w_i`, `w_h`, `w_c`
-    * (each summing to 1 per conversion) + the combined `ihc`. */
+    * (each summing to 1 per conversion) + the combined `ihc`. `flagged`
+    * carries `user_id`, as [[Journeys.flagConversion]] requires. */
   def withPhaseWeights(flagged: DataFrame): DataFrame = {
-    val byConv  = Window.partitionBy("conv_id")
-    val ordered = Window.partitionBy("conv_id").orderBy(col("ts_us").asc, col("session_id").asc)
+    val byConv  = Window.partitionBy("user_id", "conv_id")
+    val ordered = byConv.orderBy(col("ts_us").asc, col("session_id").asc)
 
     val initializer: Column =
       when(row_number().over(ordered) === 1, 1.0).otherwise(0.0)

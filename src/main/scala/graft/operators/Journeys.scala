@@ -96,10 +96,15 @@ object Journeys {
 
   /** Mark the conversion session: the journey's latest session (it is
     * already strictly before the conversion), ties broken by smallest
-    * session_id — reference `journey_builder.py:139-156`. */
+    * session_id — reference `journey_builder.py:139-156`.
+    *
+    * The window keys on (user_id, conv_id): a conversion's sessions all
+    * belong to its user, so the groups are the journeys, and the
+    * assignment's `user_id` hash partitioning already satisfies the
+    * window — no per-conversion exchange. */
   def flagConversion(assigned: DataFrame): DataFrame = {
-    val latest =
-      Window.partitionBy("conv_id").orderBy(col("ts_us").desc, col("session_id").asc)
+    val latest = Window.partitionBy("user_id", "conv_id")
+      .orderBy(col("ts_us").desc, col("session_id").asc)
     assigned.withColumn(
       "conversion",
       when(row_number().over(latest) === 1, 1).otherwise(0))

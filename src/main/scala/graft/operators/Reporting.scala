@@ -229,7 +229,8 @@ object Reporting {
     * row is settled no matter the methodology debate).
     *
     * Scale shape: the journey frame is localCheckpointed ONCE (narrow
-    * projection) and feeds all five rollups — without it each model
+    * projection, keeping `user_id` for the last-touch flag window) and
+    * feeds all five rollups — without it each model
     * re-runs the upstream assignment DAG; each model is its existing
     * audited one-window plan; the compare joins five |channels|-row
     * aggregates to the distinct-channel list (metadata-sized). Missing
@@ -237,7 +238,8 @@ object Reporting {
     * identical-tree doubles. */
   def modelCompare(assigned: DataFrame): DataFrame = {
     val a = assigned
-      .select("conv_id", "session_id", "ts_us", "conv_ts_us", "channel_name", "revenue")
+      .select("user_id", "conv_id", "session_id", "ts_us", "conv_ts_us", "channel_name",
+        "revenue")
       .localCheckpoint()
     def rev(df: DataFrame, tag: String) =
       df.select(col("channel_name"), col("revenue").as(s"rev_$tag"))

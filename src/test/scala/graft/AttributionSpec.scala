@@ -3,13 +3,19 @@ package graft
 import graft.operators.{IhcAttribution, Journeys, Reporting}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
-class AttributionSpec extends SparkSpec {
+class AttributionSpec extends SparkSpec with BeforeAndAfterAll {
 
   private lazy val sessions    = Tables.sessions(spark, sfDir)
   private lazy val conversions = Tables.conversions(spark, sfDir)
   private lazy val assigned    = Journeys.assign(sessions, conversions).cache()
   private lazy val attributed  = IhcAttribution.attribute(Journeys.flagConversion(assigned)).cache()
+
+  // the suites share one session: release the pins so no later suite
+  // starts with cached frames in its CacheManager
+  override def afterAll(): Unit =
+    try { attributed.unpersist(); assigned.unpersist() } finally super.afterAll()
 
   test("markov removal effect: a channel on every converting path gets full credit") {
     import spark.implicits._

@@ -38,10 +38,14 @@ class MainSpec extends SparkSpec {
       "--start_date", "2024-01-05", "--end_date", "2024-01-20",
       "--output_path", out), spark)
     assert(code === 0)
-    assert(Pipeline.report(spark, state).count() > 0)
-    val csv = spark.read.option("header", "true").csv(out)
-    assert(csv.count() > 0)
-    assert(csv.columns.contains("channel_name"))
+    // one header'd CSV file holding the committed report's rows, in order
+    val report = Pipeline.report(spark, state)
+    val rendered = report.collect().toSeq
+    assert(rendered.nonEmpty)
+    assert(new java.io.File(out).listFiles().count(_.getName.endsWith(".csv")) === 1)
+    val csv = spark.read.option("header", "true").schema(report.schema).csv(out)
+    assert(csv.columns.toSeq === report.columns.toSeq)
+    assert(csv.collect().toSeq === rendered)
   }
 
   test("start_date bounds the processed conversions exactly like the reference extract") {

@@ -30,10 +30,10 @@ class PipelineSpec extends SparkSpec with SparkJobs {
   private def isInference(j: SparkListenerJobStart): Boolean =
     Option(j.properties).forall(_.getProperty("spark.sql.execution.id") == null)
 
-  /** Per-run job budget: a delta run launches at most 10 jobs and a no-op
-    * run at most 2, and no read infers its schema (events' is read from
-    * its footer on the driver, state dirs are read with their known
-    * schemas). */
+  /** Per-run job budget: a delta run launches at most 7 jobs, the first
+    * run at most 6 and a no-op run at most 2, and no read infers its
+    * schema (events' is read from its footer on the driver, state dirs are
+    * read with their known schemas). */
   private def assertJobBudget(jobs: Seq[SparkListenerJobStart], budget: Int): Unit = {
     info(s"${jobs.size} jobs (budget $budget)")
     assert(jobs.size <= budget, s"${jobs.size} jobs, budget $budget")
@@ -59,7 +59,7 @@ class PipelineSpec extends SparkSpec with SparkJobs {
     assert(s1.newConversions > 0)
     assert(s1.newRows > 0)
     assert(s1.totalRows === s1.newRows)
-    assertJobBudget(jobs1, 10)
+    assertJobBudget(jobs1, 6)
     // the observed counts equal direct counts of the same inputs
     assert(s1.candidateConversions === conversionsUpTo(Some("2024-01-15")).count())
     assert(s1.newConversions === s1.candidateConversions)
@@ -77,7 +77,7 @@ class PipelineSpec extends SparkSpec with SparkJobs {
     val (s3, jobs3) = jobsOf(Pipeline.run(spark, sfDir, stateDir, endDate = None))
     assert(s3.newConversions > 0)
     assert(s3.candidateConversions === s1.candidateConversions + s3.newConversions)
-    assertJobBudget(jobs3, 10)
+    assertJobBudget(jobs3, 7)
     assert(s3.candidateConversions === conversionsUpTo(None).count())
     assert(s3.newConversions + s1.newConversions ===
       Pipeline.processedConversions(spark, stateDir).count())
@@ -88,25 +88,79 @@ class PipelineSpec extends SparkSpec with SparkJobs {
     assert(s3.totalRows === persisted.count())
     assert(s3.newRows === s3.totalRows - s1.totalRows)
 
-    // report artifacts: the report is ONE parquet file sorted by
-    // (channel, date) — one file is one partition, so the collect is the
-    // file's row order — and the CSV holds the same rows in the same order
+    // the state is three tables: the report base is ONE parquet file, and
+    // the report is rendered from it on read, sorted by (channel, date)
+    val live = Manifest.live(spark, stateDir)
+    assert(live.map(_.takeWhile(_ != '/')).distinct.sorted ===
+      Seq("attribution", "processed_conversions", "report_base"))
+    val baseDirs = live.filter(_.startsWith("report_base/"))
+    assert(baseDirs.size === 1)
+    assert(sources.Layout.dataFiles(spark, s"$stateDir/${baseDirs.head}") === 1)
     val report = Pipeline.report(spark, stateDir)
-    assert(report.columns.toSet ===
-      Set("channel_name", "date", "cost", "ihc", "ihc_revenue", "CPO", "ROAS"))
-    val reportDirs = Manifest.live(spark, stateDir).filter(_.startsWith("report/"))
-    assert(reportDirs.size === 1)
-    assert(sources.Layout.dataFiles(spark, s"$stateDir/${reportDirs.head}") === 1)
+    assert(report.columns.toSeq ===
+      Seq("channel_name", "date", "cost", "ihc", "ihc_revenue", "CPO", "ROAS"))
     val rendered = report.collect().toSeq
     assert(rendered.nonEmpty)
     val keys = rendered.map(r => (r.getString(0), r.getDate(1).toLocalDate))
     assert(keys === keys.sorted)
     assert(keys.distinct.size === keys.size)
-    val csvDir = Pipeline.reportCsvDir(spark, stateDir)
-    assert(csvDir.isDefined)
-    assert(new java.io.File(csvDir.get).listFiles().count(_.getName.endsWith(".csv")) === 1)
-    val csv = spark.read.option("header", "true").schema(report.schema).csv(csvDir.get)
-    assert(csv.collect().toSeq === rendered)
+  }
+
+  /** The live `report_base` rows, in file order. */
+  private def reportBase(s: org.apache.spark.sql.SparkSession, stateDir: String) =
+    Manifest.live(s, stateDir).filter(_.startsWith("report_base/"))
+      .flatMap(d => s.read.parquet(s"$stateDir/$d").collect().toSeq)
+
+  test("a state published with the staged report and CSV reads the same report; " +
+    "the next run's sweep deletes both") {
+    val stateDir = Files.createTempDirectory("graft-pipeline-legacy").toString
+    Pipeline.run(spark, sfDir, stateDir, endDate = Some("2024-01-15"))
+    // the five-table layout: the report rendered from the live base and
+    // staged as parquet and as the CSV artifact, all published together
+    val snap = Manifest.snapshot(spark, stateDir)
+    val base = snap.live.filter(_.startsWith("report_base/")).head
+    val tag = base.stripPrefix("report_base/")
+    val staged = operators.Reporting.withMetrics(operators.Reporting.fromReportBase(
+      spark.read.parquet(s"$stateDir/$base")))
+      .coalesce(1).sortWithinPartitions("channel_name", "date")
+    staged.write.parquet(s"$stateDir/report/$tag")
+    operators.Reporting.exportCsv(staged, s"$stateDir/channel_reporting_csv/$tag")
+    val legacy = Seq(s"report/$tag", s"channel_reporting_csv/$tag")
+    assert(Manifest.tryPublish(spark, stateDir, snap, snap.live ++ legacy, snap.meta).isDefined)
+
+    // before the next run, the report reads the same rows in the same order
+    val stagedRows = spark.read.parquet(s"$stateDir/report/$tag").collect().toSeq
+    assert(stagedRows.nonEmpty)
+    assert(Pipeline.report(spark, stateDir).collect().toSeq === stagedRows)
+
+    // the next run publishes three tables and its sweep deletes the legacy dirs
+    assert(Pipeline.run(spark, sfDir, stateDir, endDate = None).newConversions > 0)
+    val live = Manifest.live(spark, stateDir)
+    assert(!live.exists(e => e.startsWith("report/") || e.startsWith("channel_reporting_csv/")))
+    legacy.foreach(d => assert(!new java.io.File(s"$stateDir/$d").exists(), d))
+    assert(Manifest.stale(spark, stateDir, stateTables).isEmpty)
+    assert(rows(Pipeline.persistedAttribution(spark, stateDir)) === rows(fromScratch))
+  }
+
+  test("parallelism invariance: a three-run cadence publishes the default " +
+    "session's state at 7 shuffle partitions, AQE off and no broadcast joins") {
+    val hostile = spark.newSession()
+    hostile.conf.set("spark.sql.shuffle.partitions", "7")
+    hostile.conf.set("spark.sql.adaptive.enabled", "false")
+    hostile.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def cadence(s: org.apache.spark.sql.SparkSession) = {
+      val stateDir = Files.createTempDirectory("graft-pipeline-invariance").toString
+      Seq(Some("2024-01-10"), Some("2024-01-15"), None).foreach(d =>
+        assert(Pipeline.run(s, sfDir, stateDir, endDate = d).newConversions > 0))
+      (rows(Pipeline.persistedAttribution(s, stateDir)), reportBase(s, stateDir),
+        Pipeline.report(s, stateDir).collect().toSeq)
+    }
+    val (attr, base, report) = cadence(spark)
+    assert(attr.nonEmpty && base.nonEmpty && report.nonEmpty)
+    val (hAttr, hBase, hReport) = cadence(hostile)
+    assert(hAttr === attr, "attribution rows differ")
+    assert(hBase === base, "report_base rows differ")
+    assert(hReport === report, "report rows differ")
   }
 
   test("pipeline O(delta): a delta run never reads prior runs' attribution data") {
@@ -246,32 +300,30 @@ class PipelineSpec extends SparkSpec with SparkJobs {
     try {
       Pipeline.prepareBucketed(spark, sfDir, stateDir, nBuckets = 8)
 
-      // the production runner's assign subtree plans with ZERO exchanges
-      // (the flag window re-keys by conv_id downstream — the claim is about
-      // the big per-user union+window, so audit the assign stage itself)
-      val assignStage = operators.Journeys.assignBucketed(
-        spark.table(sessionsTable),
-        spark.table(conversionsTable))
-      val plan = assignStage.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed pipeline assign should be exchange-free:\n$plan")
+      // the production runner's whole staged delta — assign, conversion
+      // flag, IHC and the conv_id filter — plans with ZERO exchanges: the
+      // flag and IHC windows key on (user_id, conv_id), which the bucketed
+      // user_id partitioning already satisfies
+      def stagedDelta(assigned: DataFrame, convIds: Seq[Long]) =
+        IhcAttribution.attribute(assigned).filter(col("conv_id").isInCollection(convIds))
+      def assertExchangeFree(df: DataFrame, what: String): Unit = {
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("Exchange"), s"$what should be exchange-free:\n$plan")
+      }
+      val convIds = 1L to 40L
+      val full = Pipeline.assignedJourneys(spark, sfDir, stateDir, endDate = None)
+      assert(full.queryExecution.optimizedPlan.toString.contains("BucketUnion"),
+        "assignedJourneys should plan via BucketUnion once prepareBucketed has run")
+      assertExchangeFree(stagedDelta(full, convIds), "bucketed staged delta")
 
       // …and the incremental runner's restriction to the delta's users must
       // not cost the property: literal IN filters on both bucketed inputs
       // keep the plan free of any exchange, shuffle or broadcast
-      val delta = 1L to 40L
-      val restricted = operators.Journeys.assignBucketed(
-        spark.table(sessionsTable).filter(col("user_id").isInCollection(delta)),
-        spark.table(conversionsTable).filter(col("user_id").isInCollection(delta)))
-      assert(!restricted.queryExecution.executedPlan.toString.contains("Exchange"),
-        s"restricted bucketed assign should be exchange-free:\n" +
-          restricted.queryExecution.executedPlan)
-
-      // …and assignedJourneys routes through exactly that path when the
-      // bucketed layout exists
-      val full = Pipeline.assignedJourneys(spark, sfDir, stateDir, endDate = None)
-      assert(full.queryExecution.optimizedPlan.toString.contains("BucketUnion"),
-        "assignedJourneys should plan via BucketUnion once prepareBucketed has run")
+      val users = 1L to 40L
+      val restricted = Journeys.flagConversion(Journeys.assignBucketed(
+        spark.table(sessionsTable).filter(col("user_id").isInCollection(users)),
+        spark.table(conversionsTable).filter(col("user_id").isInCollection(users))))
+      assertExchangeFree(stagedDelta(restricted, convIds), "restricted bucketed staged delta")
 
       // the date-partitioned layout prunes FILES, not just row groups: a
       // 1-day window must read exactly that day's files
